@@ -215,7 +215,10 @@ def prepare_env(workdir: str, trace: bool) -> dict:
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEMORY
     os.environ["SPARK_LOCAL_DIRS"] = local
     os.environ["TMPDIR"] = tmp
-    conf = {"spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -Djava.io.tmpdir={tmp}"}
+    # every JVM (the launcher too): temp files in the work directory and
+    # no hsperfdata file in the system temp directory
+    os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+    conf = {"spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY}"}
     if trace:
         conf.update(TRACE_CONF)
     args = []
