@@ -6,7 +6,6 @@
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 
@@ -22,7 +21,7 @@ import run  # noqa: E402
 import stats  # noqa: E402
 import tracing  # noqa: E402
 import verify  # noqa: E402
-from workloads import QUERY_GROUPS, LakehouseIngest, lakehouse_slices  # noqa: E402
+from workloads import QUERY_GROUPS, LakehouseIngest, PassResult, lakehouse_slices  # noqa: E402
 
 
 def test_tail_has_ten_samples_beyond():
@@ -161,56 +160,88 @@ def test_attach_assigns_jobs_stages_and_sql_to_spans():
     assert c[4].python_s == pytest.approx(1.5) and c[4].python_mb_in == pytest.approx(2.0)
 
 
-def _frame():
-    return pd.DataFrame({
-        "K": [3, 1, 2], "x": [0.1, float("nan"), 2.5], "s": ["c", None, "b"],
-        "t": pd.to_datetime(["2020-01-01", "2020-01-02", None]),
-    })
+def test_tail_ratio_sees_more_than_ten_slow_executions_only():
+    # 6 queries x 8 executions around each median; slow executions are 3x
+    base = {q: [1.0 + 0.01 * i for i in range(8)] for q in "abcdef"}
+    calm, _, n = stats.tail_ratio(base)
+    assert n == 48
+
+    def slowed(k):
+        lat = {q: list(v) for q, v in base.items()}
+        for i in range(k):  # slow the fastest execution of k queries in turn
+            lat["abcdef"[i % 6]][i // 6] *= 3.0
+        return stats.tail_ratio(lat)[0]
+
+    # ten slow executions or fewer sit beyond the percentile ...
+    assert slowed(6) == pytest.approx(calm, rel=0.01)
+    # ... more than ten reach it
+    assert slowed(12) > 2.0
 
 
-def test_same_rows_ignores_row_and_column_order_and_case():
-    a = _frame()
-    b = a.sample(frac=1, random_state=0)[["t", "s", "x", "K"]].rename(columns={"K": "k"})
-    assert verify.same_rows(a, b) is None
+def test_end_to_end_counts_a_failed_check_once_and_drops_its_latencies():
+    ops = ("append", "read")
+    good = [PassResult(i, 1.0, {o: 0.5 + 0.01 * i for o in ops}) for i in range(6)]
+    e2e = run.end_to_end(10.0, good, set(), 100.0)
+    assert e2e["attempted"] == 12 and e2e["failed"] == 0
+    assert e2e["values"]["ok_frac"] == 1.0
+
+    # a pass whose check failed moves every operation into `failed`
+    bad = PassResult(6, 1.0, {o: 9.0 for o in ops})
+    bad.fail_all()
+    e2e = run.end_to_end(10.0, good + [bad], set(), 100.0)
+    assert e2e["attempted"] == 14 and e2e["failed"] == 2
+    assert e2e["values"]["ok_frac"] == pytest.approx(12 / 14)
+    assert e2e["values"]["query_geomean_s"] == pytest.approx(
+        stats.query_geomean({o: [0.5 + 0.01 * i for i in range(6)] for o in ops}))
+
+    # every pass wrong: nothing verified
+    wrong = [PassResult(i, 1.0, {o: 0.5 for o in ops}) for i in range(6)]
+    for p in wrong:
+        p.fail_all()
+    e2e = run.end_to_end(10.0, wrong, set(), 1.0)
+    assert e2e["attempted"] == 12 and e2e["failed"] == 12
+    assert e2e["values"]["ok_frac"] == 0.0
 
 
-def test_same_rows_compares_list_cells():
-    a = pd.DataFrame({"k": [1, 2, 3], "v": [[1.0, 2.0], None, np.array([3.0])]})
-    b = a.iloc[::-1].reset_index(drop=True)
-    assert verify.same_rows(a, b) is None
-    c = a.assign(v=[[1.0, 2.5], None, np.array([3.0])])
-    assert verify.same_rows(a, c) is not None
+def test_end_to_end_fails_every_execution_of_a_query_that_did_not_verify():
+    passes = [PassResult(i, 1.0, {"a": 1.0, "b": 2.0 + i}) for i in range(12)]
+    e2e = run.end_to_end(10.0, passes, {"a"}, 100.0)
+    assert e2e["attempted"] == 24 and e2e["failed"] == 12
+    assert e2e["values"]["ok_frac"] == 0.5
+    assert e2e["values"]["query_geomean_s"] == pytest.approx(7.5)
 
 
-@pytest.mark.parametrize("change", [
-    lambda f: f.assign(x=[0.1, float("nan"), 2.5 + 1e-12]),
-    lambda f: f.assign(s=["c", "a", "b"]),
-    lambda f: f.assign(K=[3, 1, 4]),
-    lambda f: f.assign(K=[3.0, 1.0, 2.0]),
-    lambda f: f.iloc[:2],
-    lambda f: f.rename(columns={"s": "u"}),
-])
-def test_same_rows_agrees_with_compare_frames(change):
-    from conftest import compare_frames
+def test_check_uses_the_compare_frames_rule():
+    import duckdb
 
-    a, b = _frame(), change(_frame())
-    try:
-        compare_frames(a.copy(), b.copy(), "q")
-        strict = None
-    except AssertionError as exc:
-        strict = str(exc)
-    assert (verify.same_rows(a, b) is None) == (strict is None)
-    assert strict is not None
+    con = duckdb.connect()
+    oracle = "SELECT * FROM (VALUES (1, 0.5, 'x'), (2, 1.5, 'y')) t(k, v, s)"
+    same = pd.DataFrame({"S": ["y", "x"], "v": [1.5, 0.5], "k": [2, 1]})
+    assert verify.check(same, oracle, con) is None
+    assert "oracle mismatch" in verify.check(same.assign(v=[1.5, 0.5 + 1e-12]), oracle, con)
+    assert "oracle mismatch" in verify.check(same.iloc[:1], oracle, con)
+    assert verify.check(same.iloc[:0], oracle, con) == "empty result"
 
 
-def test_datagen_is_deterministic():
-    import datagen
+def test_data_is_the_engines_sf01_fixture():
+    """The tables the benchmark reads are byte copies of the sf0.1 fixture
+    ``bench.py`` reads, which sits beside the test suite's sf0.001 one."""
+    from conftest import SF_DIR
+    from glonassdatamining_spark.sources import TABLES
 
-    a = datagen.tables(seed=1)
-    b = datagen.tables(seed=1)
-    for name in a:
-        assert a[name].equals(b[name]), name
-    orders = a["orders"].column("o_orderkey").to_numpy()
-    assert np.array_equal(orders, np.arange(len(orders)))
-    assert math.isclose(np.linalg.norm(a["embeddings"].column("embedding")[0].values), 1.0,
-                        rel_tol=1e-6)
+    assert sorted(os.listdir(run.SF_DIR)) == sorted(f"{t}.parquet" for t in TABLES)
+    fixture = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.1")
+    if not os.path.isdir(fixture):
+        pytest.skip(f"no sf0.1 fixture at {fixture}")
+    for t in TABLES:
+        with open(os.path.join(run.SF_DIR, f"{t}.parquet"), "rb") as a, \
+                open(os.path.join(fixture, f"{t}.parquet"), "rb") as b:
+            assert a.read() == b.read(), t
+
+
+def test_lakehouse_orders_are_keyed_in_order():
+    import pyarrow.parquet as pq
+
+    keys = pq.read_table(os.path.join(run.SF_DIR, "orders.parquet"),
+                         columns=["o_orderkey"]).column(0).to_numpy()
+    assert np.array_equal(keys, np.arange(LakehouseIngest.LIVE))

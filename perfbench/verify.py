@@ -1,76 +1,27 @@
 """Output checks for the query workloads.
 
 A query with a DuckDB oracle (``registry.all_oracles()``) is compared
-with it by the rule of the test suite's ``tests/conftest.compare_frames``:
+with it by the test suite's own rule, ``tests/conftest.compare_frames``:
 same row count, same columns, and equal cells after sorting columns by
 name and rows by value, where floats must be bit-equal (NaN equals NaN)
-and other cells equal as text. :func:`same_rows` applies that rule a
-column at a time, because the cell-by-cell loop of ``compare_frames``
-takes seconds on the 10^5-row results. Every checked result must also
-be non-empty.
+and other cells equal as text. Every checked result must also be
+non-empty.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-
-
-def _is_list(value) -> bool:
-    return hasattr(value, "__len__") and not isinstance(value, (str, bytes))
-
-
-def _sortable(frame: pd.DataFrame) -> pd.DataFrame:
-    frame = frame.copy()
-    frame.columns = [c.lower() for c in frame.columns]
-    frame = frame.reindex(sorted(frame.columns), axis=1)
-    for c in frame.columns:
-        cells = frame[c].dropna()
-        if frame[c].dtype == object and len(cells) and _is_list(cells.iloc[0]):
-            frame[c] = frame[c].map(lambda v: tuple(v.tolist() if hasattr(v, "tolist") else v)
-                                    if _is_list(v) else v)
-    return frame.sort_values(by=list(frame.columns), ignore_index=True)
-
-
-def same_rows(result: pd.DataFrame, oracle: pd.DataFrame) -> str | None:
-    """None when the two frames hold the same rows under the
-    ``compare_frames`` rule, else the first difference found."""
-    if len(result) != len(oracle):
-        return f"row count {len(result)} != oracle {len(oracle)}"
-    if sorted(c.lower() for c in result.columns) != sorted(c.lower() for c in oracle.columns):
-        return f"columns {sorted(result.columns)} != oracle {sorted(oracle.columns)}"
-    a, b = _sortable(result), _sortable(oracle)
-    for c in a.columns:
-        x, y = a[c], b[c]
-        if x.dtype.kind == "f" and y.dtype.kind == "f":
-            xv, yv = x.to_numpy(), y.to_numpy()
-            bad = ~((xv == yv) | (np.isnan(xv) & np.isnan(yv)))
-        elif x.dtype == y.dtype and x.dtype.kind in "iub":
-            bad = x.to_numpy() != y.to_numpy()
-        elif x.dtype.kind == "M" and y.dtype.kind == "M":
-            xv, yv = x.to_numpy().astype("datetime64[ns]"), y.to_numpy().astype("datetime64[ns]")
-            bad = ~((xv == yv) | (np.isnat(xv) & np.isnat(yv)))
-        else:
-            na_x, na_y = x.isna().to_numpy(), y.isna().to_numpy()
-            if x.dtype == object and y.dtype == object:
-                bad = ~((x.to_numpy() == y.to_numpy()) | (na_x & na_y))
-                rows = np.flatnonzero(bad)  # equal as text still counts as equal
-            else:
-                bad = np.ones(len(x), dtype=bool)
-                rows = range(len(x))
-            xs, ys = x.tolist(), y.tolist()
-            for i in rows:
-                bad[i] = (na_x[i] != na_y[i]) or (not na_x[i] and str(xs[i]) != str(ys[i]))
-        if bad.any():
-            i = int(np.argmax(bad))
-            return f"column {c} row {i}: {x.iloc[i]!r} != oracle {y.iloc[i]!r}"
-    return None
 
 
 def check(result: pd.DataFrame, oracle_sql: str, con) -> str | None:
     """None when ``result`` is non-empty and equals the DuckDB oracle's
     rows, else the reason it does not verify."""
+    from conftest import compare_frames
+
     if len(result) == 0:
         return "empty result"
-    diff = same_rows(result, con.execute(oracle_sql).fetchdf())
-    return None if diff is None else f"oracle mismatch: {diff}"
+    try:
+        compare_frames(result.copy(), con.execute(oracle_sql).fetchdf(), "result")
+    except AssertionError as exc:
+        return f"oracle mismatch: {exc}"
+    return None
