@@ -30,6 +30,18 @@ relational identities:
   source). That file-skipping is the mechanism that makes a 100 TB
   MERGE touch megabytes, and it is exercised and asserted in
   tests/test_lakehouse.py.
+* **Planning from the manifest.** Each data-file entry records the
+  Spark schema the file reads back with (``schema``), equality-delete
+  entries record theirs, and positional delete files have one fixed
+  schema (``file STRING, pos BIGINT``), so planning a scan starts no
+  footer-inference job. Entries without a recorded schema (manifests
+  written before it existed) keep Spark's inference.
+* **Broadcast guard.** MERGE counts its source in the same 1-row
+  aggregate as the key range; when count × key width fits the
+  session's ``spark.sql.autoBroadcastJoinThreshold`` the source keys
+  are broadcast into the anti-join, so the touched rows are shuffled
+  only once (by the range repartition of the rewrite). A threshold of
+  −1 keeps the sort-merge plan.
 
 At cluster scale the same layout maps 1:1 onto an object store
 (rename→copy+check swap, or a real catalog for the HEAD pointer);
@@ -46,6 +58,16 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
+
+# Every positional delete file holds exactly these columns.
+_POS_DELETE_SCHEMA = "file STRING, pos BIGINT"
 
 
 class CommitConflict(Exception):
@@ -90,6 +112,33 @@ def _file_stats(
         ) and not isinstance(lo, bool):
             stats[col] = [lo, hi]
     return rows, key_lo, key_hi, stats
+
+
+def _as_read(dt: DataType) -> DataType:
+    """``dt`` as a parquet scan returns it: Spark reads every field,
+    element and map value back as nullable, whatever was written."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_read(f.dataType), True, f.metadata)
+                for f in dt
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
+
+
+def _shared_schema(entries: list[dict]) -> StructType | None:
+    """The one Spark schema every entry recorded at write time, or
+    None when the entries differ or any predates the record — Spark
+    then infers the schema from the footers, as before."""
+    recorded = {e.get("schema") for e in entries}
+    if len(recorded) != 1 or None in recorded:
+        return None
+    return StructType.fromJson(json.loads(recorded.pop()))
 
 
 class ManifestTable:
@@ -177,6 +226,7 @@ class ManifestTable:
         df.repartitionByRange(n_files, self.key_col).write.mode(
             "overwrite"
         ).parquet(stage)
+        schema = _as_read(df.schema).json()
         entries = []
         for name in sorted(os.listdir(stage)):
             if not name.endswith(".parquet"):
@@ -210,6 +260,11 @@ class ManifestTable:
                 # evolution record: readers detect heterogeneous
                 # snapshots and plan a mergeSchema scan (read()).
                 "columns": list(df.columns),
+                # The schema the file reads back with (recorded
+                # nullable, so frames differing only in nullability
+                # share it): scans of files sharing one are planned
+                # without a footer-inference job (_scan).
+                "schema": schema,
                 # Full per-column [min, max] — read_pruned() skips
                 # files on ANY recorded column, not just the key.
                 "stats": stats,
@@ -397,7 +452,6 @@ class ManifestTable:
                 "deleted_keys": 0,
                 "committed": False,
             }
-        os.makedirs(self._deldir, exist_ok=True)
         key_field_id = None
         if fields is not None:
             key_field_id = next(
@@ -414,34 +468,17 @@ class ManifestTable:
         vals = self.spark.createDataFrame(
             [(x,) for x in values], [self.key_col]
         )
-        stage = os.path.join(self.root, f"_stage_{uuid.uuid4().hex}")
-        vals.repartition(1).write.mode("overwrite").parquet(stage)
-        entries: list[dict] = []
-        for name in sorted(os.listdir(stage)):
-            if not name.endswith(".parquet"):
-                continue
-            import pyarrow.parquet as pq
-
-            n_rows = pq.ParquetFile(
-                os.path.join(stage, name)
-            ).metadata.num_rows
-            if n_rows == 0:
-                continue
-            dst = f"{uuid.uuid4().hex}.parquet"
-            os.rename(
-                os.path.join(stage, name), os.path.join(self._deldir, dst)
+        entries = [
+            dict(
+                e,
+                kind="eq",
+                col=self.key_col,
+                field_id=key_field_id,
+                seq=v + 1,
+                schema=_as_read(vals.schema).json(),
             )
-            entries.append(
-                {
-                    "file": dst,
-                    "rows": n_rows,
-                    "kind": "eq",
-                    "col": self.key_col,
-                    "field_id": key_field_id,
-                    "seq": v + 1,
-                }
-            )
-        shutil.rmtree(stage, ignore_errors=True)
+            for e in self._write_delete_file(vals)
+        ]
         deletes = (m.get("deletes") or []) + entries
         try:
             self._commit(m["files"], "delete_eq", v + 1, deletes, fields)
@@ -455,23 +492,25 @@ class ManifestTable:
             "committed": True,
         }
 
-    def _write_delete_file(self, matches: DataFrame) -> list[dict]:
-        """Write a (file, pos) frame as immutable delete parquet(s);
-        returns ALL non-empty manifest entries (empty list when the
-        frame is empty). repartition(1) makes one staged file the
+    def _write_delete_file(self, frame: DataFrame) -> list[dict]:
+        """Write a delete frame — positional (file, pos) refs or
+        equality key values — as immutable delete parquet(s); returns
+        a {file, rows} entry for EVERY non-empty staged part (empty
+        list when the frame is empty), to which the caller adds any
+        kind-specific fields. repartition(1) makes one staged file the
         normal case, but every staged part is committed (round-9
         ADVICE fix: keeping only the LAST entry while renaming every
         file would silently unreference earlier delete rows and
         resurrect them on read)."""
+        import pyarrow.parquet as pq
+
         os.makedirs(self._deldir, exist_ok=True)
         stage = os.path.join(self.root, f"_stage_{uuid.uuid4().hex}")
-        matches.repartition(1).write.mode("overwrite").parquet(stage)
+        frame.repartition(1).write.mode("overwrite").parquet(stage)
         entries: list[dict] = []
         for name in sorted(os.listdir(stage)):
             if not name.endswith(".parquet"):
                 continue
-            import pyarrow.parquet as pq
-
             n_rows = pq.ParquetFile(
                 os.path.join(stage, name)
             ).metadata.num_rows
@@ -484,6 +523,34 @@ class ManifestTable:
             entries.append({"file": dst, "rows": n_rows})
         shutil.rmtree(stage, ignore_errors=True)
         return entries
+
+    def _keep_delete_refs(
+        self, deletes: list[dict], files: list[dict]
+    ) -> list[dict]:
+        """Consolidate positional delete refs on the driver: keep only
+        the refs into ``files`` and write them as one delete file, or
+        none when no ref is kept. The refs are read with pyarrow, not
+        Spark: the whole positional delete set is already driver-sized,
+        since every read broadcasts it into its anti-join."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        schema = pa.schema([("file", pa.string()), ("pos", pa.int64())])
+        refs = pa.concat_tables(
+            pq.read_table(
+                os.path.join(self._deldir, e["file"]), columns=schema.names
+            ).cast(schema)
+            for e in deletes
+        )
+        names = pa.array([e["file"] for e in files], pa.string())
+        kept = refs.filter(pc.is_in(refs["file"], value_set=names))
+        if kept.num_rows == 0:
+            return []
+        # invisible until a manifest names it, like a staged data file
+        dst = f"{uuid.uuid4().hex}.parquet"
+        pq.write_table(kept, os.path.join(self._deldir, dst))
+        return [{"file": dst, "rows": kept.num_rows}]
 
     def delete_where(self, condition) -> dict:
         """Row-level DELETE via POSITIONAL DELETE FILES (round-9
@@ -539,9 +606,7 @@ class ManifestTable:
             e for e in (m.get("deletes") or []) if e.get("kind") != "eq"
         ]
         if cur:
-            prior = self.spark.read.parquet(
-                *[os.path.join(self._deldir, e["file"]) for e in cur]
-            )
+            prior = self._read_pos_deletes(cur)
             matches = matches.join(prior, ["file", "pos"], "left_anti")
         entries = self._write_delete_file(matches)
         if not entries:
@@ -569,6 +634,14 @@ class ManifestTable:
             "delete_files": len(deletes),
             "committed": True,
         }
+
+    def _fits_broadcast(self, keys: DataFrame, rows: int) -> bool:
+        """Whether ``rows`` rows of the one-column ``keys`` fit the
+        session's own ``spark.sql.autoBroadcastJoinThreshold`` at
+        Spark's default width for the key type (−1 never fits)."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        width = keys._jdf.schema().apply(0).dataType().defaultSize()
+        return 0 <= rows * width <= conf.autoBroadcastJoinThreshold()
 
     def merge(
         self, source: DataFrame, n_files: int = 2, max_retries: int = 0
@@ -598,9 +671,19 @@ class ManifestTable:
         overlap, and still carries forward everything outside the
         source's key range. Up to ``max_retries`` replays
         (0 = raise :class:`CommitConflict` on first loss). An empty
-        source is a no-op (no snapshot committed)."""
+        source is a no-op (no snapshot committed).
+
+        The source's row count rides the key-range aggregate; when
+        count × key width fits the session's broadcast threshold the
+        source keys are broadcast into the anti-join. Spark often
+        cannot size the source itself (a join, say), and without the
+        hint it plans a sort-merge join that shuffles the touched rows
+        once for the join and again for the range repartition of the
+        rewrite."""
         lohi = source.agg(
-            F.min(self.key_col).alias("lo"), F.max(self.key_col).alias("hi")
+            F.min(self.key_col).alias("lo"),
+            F.max(self.key_col).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
         ).collect()[0]  # 1-row bounded scalar
         if lohi["lo"] is None:
             v = self.current_version()
@@ -610,6 +693,9 @@ class ManifestTable:
                 "files_carried": len(self._manifest(v)["files"]) if v else 0,
                 "retries": 0,
             }
+        keys = source.select(self.key_col)
+        if self._fits_broadcast(keys, lohi["n"]):
+            keys = F.broadcast(keys)
         for attempt in range(max_retries + 1):
             v = self.current_version()
             m = self._manifest(v)
@@ -637,7 +723,7 @@ class ManifestTable:
                 # rewritten files MATERIALIZE them
                 old = self._scan(touched, deletes)
                 merged = old.join(
-                    source.select(self.key_col), self.key_col, "left_anti"
+                    keys, self.key_col, "left_anti"
                 ).unionByName(source, allowMissingColumns=True)
             else:
                 merged = source
@@ -656,15 +742,9 @@ class ManifestTable:
                 # the carried files', and the rewritten files (seq =
                 # v+1) are correctly outside their reach — the rewrite
                 # scan above already materialized them.
-                carried_names = [e["file"] for e in carried]
-                prior = self.spark.read.parquet(
-                    *[
-                        os.path.join(self._deldir, e["file"])
-                        for e in pos_dels
-                    ]
+                new_deletes = (
+                    self._keep_delete_refs(pos_dels, carried) + eq_dels
                 )
-                kept = prior.filter(F.col("file").isin(carried_names))
-                new_deletes = self._write_delete_file(kept) + eq_dels
             else:
                 new_deletes = deletes
             try:
@@ -728,9 +808,7 @@ class ManifestTable:
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
         ).withColumn(pcol, F.col("_metadata.row_index"))
         if pos:
-            dels = self.spark.read.parquet(
-                *[os.path.join(self._deldir, e["file"]) for e in pos]
-            )
+            dels = self._read_pos_deletes(pos)
             df = df.join(
                 dels.select(
                     F.col("file").alias(fcol), F.col("pos").alias(pcol)
@@ -746,9 +824,7 @@ class ManifestTable:
             ]
             if not affected:
                 continue
-            vals = self.spark.read.parquet(
-                os.path.join(self._deldir, e["file"])
-            )
+            vals = self._read_files(self._deldir, [e], _shared_schema([e]))
             vcol = vals.columns[0]
             kcol = "_gdm_eq_key"
             while kcol in cols:
@@ -774,10 +850,11 @@ class ManifestTable:
         under any other. MERGE consolidates delete refs eagerly (refs to
         rewritten files are dropped so history()'s deleted_rows stays
         exact); a ref to a missing file would simply never match. The
-        anti-join's build
-        side is the delete set, which is small by construction
-        (deletes proportional to deleted rows, not table size) —
-        AQE broadcasts it, so the read cost stays one scan."""
+        anti-join's build side is the delete set, which is small by
+        construction (deletes proportional to deleted rows, not table
+        size): its files are small on disk, so the static planner
+        already broadcasts the delete scan, and the read cost stays
+        one scan of the data."""
         cols = df.columns
         # collision-proof join-key names: a user table may legally
         # carry columns named _file/_pos (round-9 review fix — a
@@ -786,9 +863,7 @@ class ManifestTable:
         while fcol in cols or pcol in cols:
             fcol += "_"
             pcol += "_"
-        dels = self.spark.read.parquet(
-            *[os.path.join(self._deldir, e["file"]) for e in deletes]
-        )
+        dels = self._read_pos_deletes(deletes)
         return (
             df.withColumn(
                 fcol,
@@ -807,6 +882,25 @@ class ManifestTable:
             .select(*cols)
         )
 
+    def _read_files(
+        self, where: str, entries: list[dict], schema, merge: bool = False
+    ) -> DataFrame:
+        """Plan a parquet scan of ``entries``' files under ``where``.
+        A known ``schema`` (StructType or DDL string) plans it without
+        the 1-task footer-inference job Spark otherwise starts; None
+        infers it, merging the footers' schemas when ``merge``."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        elif merge:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(
+            *[os.path.join(where, e["file"]) for e in entries]
+        )
+
+    def _read_pos_deletes(self, deletes: list[dict]) -> DataFrame:
+        return self._read_files(self._deldir, deletes, _POS_DELETE_SCHEMA)
+
     def _scan(
         self, entries: list[dict], deletes: list[dict] | None = None
     ) -> DataFrame:
@@ -817,10 +911,11 @@ class ManifestTable:
         NULL — the footers stay authoritative, the manifest only
         decides WHETHER the (footer-sampling) merge pass is needed.
         An entry without a recorded column list (pre-columns manifest)
-        is conservatively treated as its own schema group. Shared by
-        read(), read_pruned(), read_pruned_in() and merge()'s
-        touched-file rewrite so every path sees identical evolved
-        schemas."""
+        is conservatively treated as its own schema group. When every
+        entry recorded the same write schema, the scan is planned with
+        it and no footer is read. Shared by read(), read_pruned(),
+        read_pruned_in() and merge()'s touched-file rewrite so every
+        path sees identical evolved schemas."""
         # An entry without a recorded column list (pre-columns
         # manifest) keys on its file name so each legacy file forms
         # its OWN schema group — two legacy files with genuinely
@@ -829,11 +924,8 @@ class ManifestTable:
         # without it, silently dropping columns).
         col_sets = {tuple(e["columns"]) if "columns" in e
                     else ("__nocols__", e["file"]) for e in entries}
-        reader = self.spark.read
-        if len(col_sets) > 1:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(
-            *[os.path.join(self._ddir, e["file"]) for e in entries]
+        df = self._read_files(
+            self._ddir, entries, _shared_schema(entries), len(col_sets) > 1
         )
         if deletes:
             df = self._apply_all_deletes(
@@ -869,9 +961,7 @@ class ManifestTable:
         frames = []
         for key, group in groups.items():
             fmap = dict(key)
-            df = self.spark.read.parquet(
-                *[os.path.join(self._ddir, e["file"]) for e in group]
-            )
+            df = self._read_files(self._ddir, group, _shared_schema(group))
             if deletes:
                 phys_key = next(
                     (

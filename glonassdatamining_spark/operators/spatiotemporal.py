@@ -6541,9 +6541,13 @@ def _covisit_shared_pairs(memb: DataFrame, min_shared: int) -> DataFrame:
     occupancy (max 25 at sf0.1's i65 grid; i65b derives the cell size
     to hold occupancy constant), and a hot cell's Σm² pair work lands
     in a single task under the join form too — the expansion venue
-    moves, the skew profile does not."""
-    baskets = memb.groupBy("cell").agg(
-        F.array_sort(F.collect_set("obj_id")).alias("ms")
+    moves, the skew profile does not. A NULL cell (NULL coordinates)
+    is no cell: its rows are dropped before the baskets, as the join
+    form's equality and the oracle drop them."""
+    baskets = (
+        memb.filter(F.col("cell").isNotNull())
+        .groupBy("cell")
+        .agg(F.array_sort(F.collect_set("obj_id")).alias("ms"))
     )
     pairs = baskets.select(
         F.explode(

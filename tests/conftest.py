@@ -118,3 +118,24 @@ def run_t2(spark, name: str, sf_dir: str = SF_DIR) -> None:
     odf = con.execute(d.oracle).fetchdf()
     con.close()
     compare_frames(sdf, odf, name)
+
+
+def plan_children(node) -> list:
+    """The child plans of one JVM query plan node (logical or
+    physical), looking through AQE wrappers and into subquery plans."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    seqs = (node.children(), node.innerChildren())
+    return [s.apply(i) for s in seqs for i in range(s.size())]
+
+
+def plan_nodes(node):
+    """Every node of a JVM query plan, depth first — for tests that
+    count plan nodes structurally instead of matching substrings of
+    the rendered plan."""
+    yield node
+    for kid in plan_children(node):
+        yield from plan_nodes(kid)

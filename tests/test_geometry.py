@@ -1256,6 +1256,23 @@ def test_i33_arrow_engine_bit_identical_to_hof(spark):
     assert wkb_polygon_even_odd_area(two) is None
 
 
+def test_covisit_shared_pairs_drops_null_cells(spark):
+    """A NULL cell (an object with NULL coordinates) is no cell: its
+    members must not pair up through it — the join form's equality
+    and the oracle drop them — while real co-visits still count."""
+    from glonassdatamining_spark.operators import spatiotemporal as st
+
+    memb = spark.createDataFrame(
+        [(1, 10), (2, 10), (2, 10), (1, 11), (2, 11),
+         (3, None), (4, None), (1, None)],
+        "obj_id bigint, cell bigint",
+    )
+    got = {(r.oa, r.ob) for r in st._covisit_shared_pairs(memb, 1).collect()}
+    assert got == {(1, 2)}
+    got = {(r.oa, r.ob) for r in st._covisit_shared_pairs(memb, 2).collect()}
+    assert got == {(1, 2)}
+
+
 def test_i65_arrow_refine_bit_identical_to_hof(spark):
     """The Arrow numpy batch refine vs the nested-HOF Catalyst refine:
     BIT-IDENTICAL doubles, not approx — both evaluate the same

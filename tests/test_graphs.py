@@ -392,6 +392,31 @@ def test_n18_hand_graph_two_cliques(spark):
     assert got[1] != got[4]
 
 
+def _mode_lbl_aggregates(df) -> int:
+    """Number of ``mode(lbl)`` aggregates in ``df``'s analyzed plan,
+    counted by walking its nodes and their expression trees."""
+    from tests.conftest import plan_nodes
+
+    def exprs(e):
+        yield e
+        kids = e.children()
+        for i in range(kids.size()):
+            yield from exprs(kids.apply(i))
+
+    n = 0
+    for node in plan_nodes(df._jdf.queryExecution().analyzed()):
+        top = node.expressions()
+        for e in (x for i in range(top.size()) for x in exprs(top.apply(i))):
+            if e.getClass().getSimpleName() != "Mode":
+                continue
+            arg = e.children().apply(0)
+            n += (
+                arg.getClass().getSimpleName() == "AttributeReference"
+                and arg.name().lower() == "lbl"
+            )
+    return n
+
+
 def test_n18_round_hint_free_and_lazy_chain(spark):
     """Round-12 restructure: (a) the per-round label join carries NO
     explicit broadcast hint — strategy is AQE's call at any scale
@@ -424,9 +449,8 @@ def test_n18_round_hint_free_and_lazy_chain(spark):
     )
     assert "broadcast" not in plan.lower()
 
-    lab = _n18_labels(e)
-    final_plan = lab._jdf.queryExecution().analyzed().toString()
-    assert final_plan.lower().count("mode(lbl") == 0  # checkpointed: no lineage
+    # checkpointed: no lineage
+    assert _mode_lbl_aggregates(_n18_labels(e)) == 0
     # the chain is linear: build labels WITHOUT the final checkpoint by
     # replaying the loop shape and counting aggregates
     chained = labels
@@ -436,8 +460,7 @@ def test_n18_round_hint_free_and_lazy_chain(spark):
             .groupBy("node")
             .agg(__import__("pyspark").sql.functions.mode("lbl", True).alias("lbl"))
         )
-    chain_plan = chained._jdf.queryExecution().analyzed().toString()
-    assert chain_plan.lower().count("mode(lbl") == _N18_ITERS
+    assert _mode_lbl_aggregates(chained) == _N18_ITERS
 
 
 def test_weighted_sssp_matches_dijkstra(spark):

@@ -861,3 +861,149 @@ def test_two_writer_race_eq_delete_vs_append(spark, tmp_path):
     assert got.filter(F.col("k").isin(7, 8)).count() == 0
     assert got.filter(F.col("k") >= 100).count() == 5
     assert got.count() == 53
+
+
+# ---------------------------------------------------------------------------
+# Planning from the manifest: recorded schemas, the merge broadcast guard
+# ---------------------------------------------------------------------------
+def _planning_jobs(spark, build) -> int:
+    """Number of Spark jobs started while ``build()`` plans frames."""
+    sc = spark.sparkContext
+    group = "lakehouse-planning"
+    sc.setJobGroup(group, "plan only, no action")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_planning_starts_no_spark_job(spark, tmp_path):
+    """Scans are planned from the schemas the manifest recorded at
+    write time, so planning read(), read_pruned() and a read through
+    live positional and equality deletes starts no footer-inference
+    job. The recorded schema is the one Spark infers from the files,
+    and a manifest whose entries predate the record (older tables on
+    disk) still reads the same rows, through inference."""
+    import json
+
+    t = _mk(spark, tmp_path, n=200, n_files=4)
+    t.delete_where("k % 5 = 0")
+    t.delete_eq([1, 2, 3])
+    m = t._manifest(t.current_version())
+    assert {e.get("kind") for e in m["deletes"]} == {None, "eq"}
+    assert all("schema" in e for e in m["files"])
+
+    def build():
+        t.read(), t.read(version=1), t.read_pruned("k", 10, 60)
+        t.read_pruned_in("k", [7, 150])
+
+    assert _planning_jobs(spark, build) == 0
+    files = [os.path.join(t._ddir, e["file"]) for e in m["files"]]
+    assert t.read().schema == spark.read.parquet(*files).schema
+    want = sorted(t.read().collect())
+    assert len(want) == 200 - 40 - 3  # k % 5 == 0, then keys 1, 2, 3
+
+    mpath = os.path.join(t._mdir, f"v{t.current_version()}.json")
+    for e in m["files"] + m["deletes"]:
+        e.pop("schema", None)
+    with open(mpath, "w") as fh:
+        json.dump(m, fh)
+    assert _planning_jobs(spark, t.read) > 0  # inference is back
+    assert sorted(t.read().collect()) == want
+
+
+def _scan_paths(node, root, path=()):
+    """Root-to-scan node paths of an executed plan: one per parquet
+    scan whose files all lie under ``root``."""
+    from tests.conftest import plan_children
+
+    path = path + (node,)
+    if node.getClass().getSimpleName() == "FileSourceScanExec":
+        if all(root in f for f in node.relation().location().inputFiles()):
+            yield path
+    for kid in plan_children(node):
+        yield from _scan_paths(kid, root, path)
+
+
+def _merge_rewrite_plan(t, src):
+    """Merge ``src`` into ``t`` (rewriting into one file), then replay
+    the plan the merge wrote and return its executed physical plan."""
+    written = []
+    real = t._write_files
+
+    def capture(df, n_files, field_map=None):
+        written.append(df)
+        return real(df, n_files, field_map)
+
+    t._write_files = capture
+    t.merge(src, n_files=1)
+    out = written[0].repartitionByRange(1, t.key_col)
+    out.collect()
+    return out._jdf.queryExecution().executedPlan()
+
+
+def test_merge_broadcast_guard_shuffles_touched_rows_once(spark, tmp_path):
+    """The merge source here is an inner join Spark cannot size (its
+    estimate is the product of its inputs), so without the guard the
+    source-key anti-join is planned as a sort-merge join and the
+    touched rows are shuffled for it and again for the range
+    repartition. With the source's counted size under the threshold,
+    the anti-join is a broadcast and the touched rows reach exactly
+    one exchange. With the threshold at -1 the merge keeps the
+    sort-merge plan and commits identical rows and manifest stats."""
+    import json
+
+    from tests.conftest import plan_nodes
+
+    def src():
+        wide = spark.range(0, 2_000_000).withColumnRenamed("id", "j")
+        keys = spark.range(10, 21).join(wide, F.col("id") == F.col("j"))
+        return keys.select(
+            F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("val")
+        )
+
+    def anti_joins(plan):
+        return [
+            n.getClass().getSimpleName()
+            for n in plan_nodes(plan)
+            if n.getClass().getSimpleName().endswith("JoinExec")
+            and n.joinType().toString() == "LeftAnti"
+        ]
+
+    def touched_exchanges(plan, t):
+        paths = list(_scan_paths(plan, t._ddir))
+        assert len(paths) == 1, "one scan of the touched data files"
+        return sum(
+            n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            for n in paths[0]
+        )
+
+    def stats(t):
+        m = t._manifest(t.current_version())
+        return sorted(
+            json.dumps(
+                {k: v for k, v in e.items() if k != "file"}, sort_keys=True
+            )
+            for e in m["files"]
+        )
+
+    fast = _mk(spark, tmp_path / "fast", n=1000, n_files=4)
+    plan = _merge_rewrite_plan(fast, src())
+    assert anti_joins(plan) == ["BroadcastHashJoinExec"]
+    assert touched_exchanges(plan, fast) == 1
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        slow = _mk(spark, tmp_path / "slow", n=1000, n_files=4)
+        plan = _merge_rewrite_plan(slow, src())
+        assert anti_joins(plan) == ["SortMergeJoinExec"]
+        assert touched_exchanges(plan, slow) == 2
+    finally:
+        spark.conf.set(key, saved)
+    assert spark.conf.get(key) == saved
+    assert sorted(fast.read().collect()) == sorted(slow.read().collect())
+    assert stats(fast) == stats(slow)
+    assert fast.read().filter(F.col("val") == -1).count() == 11
