@@ -19,9 +19,30 @@ Layout (SURVEY.md §7.5):
                       K LLM-pipeline, J ML
     functions/        H scalar-function groups
     streaming/        L streaming ops + batch twins
+
+Shipping rule for Python kernels: the package registers itself with
+``pyspark.cloudpickle.register_pickle_by_value`` on import, so every
+function or class of the package that a pandas UDF, ``mapInPandas``,
+``applyInPandas`` or RDD closure reaches travels BY VALUE. Python
+workers never import the package; they run from any cwd with any
+``PYTHONPATH``. Kernels are plain functions that import what they
+use at module top. One constraint follows: a kernel must not
+reference a package MODULE object (``import ...spatiotemporal as
+st`` then ``st.f``) — cloudpickle would ship that module's whole
+namespace. Reference the function itself.
+
+Driver-side handles tied to a running application (Column plan
+fragments, UDF objects, persisted hot tables) go through the one
+memo, ``session.memo``, which keys on the active SparkContext.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 from glonassdatamining_spark.api import (  # noqa: E402,F401
     asof_join,

@@ -2440,44 +2440,32 @@ def rdp_simplify(
     )
 
 
-def _make_dtw():
-    """Factory for the DTW kernel. The returned closure is fully
-    self-contained (imports numpy inside, references no module
-    globals), so cloudpickle serializes it BY VALUE into UDF closures —
-    executors never need this package importable (the same contract as
-    every other Arrow-UDF kernel in this module)."""
+def dtw_distance(ax, ay, bx, by, band=None):
+    """Dynamic-time-warping distance between two 2-D polylines given as
+    coordinate arrays (euclidean point cost, symmetric step pattern).
+    ``band`` is an optional Sakoe-Chiba constraint (|i-j| <= band)
+    bounding the DP to O(n·band) — the standard scale control for long
+    series. Pure numpy; safe inside Arrow-batched grouped-map UDFs."""
+    import numpy as np
 
-    def dtw(ax, ay, bx, by, band=None):
-        import numpy as np
-
-        ax = np.asarray(ax, dtype=float); ay = np.asarray(ay, dtype=float)
-        bx = np.asarray(bx, dtype=float); by = np.asarray(by, dtype=float)
-        n, m = len(ax), len(bx)
-        if n == 0 or m == 0:
-            return float("nan")
-        # pairwise point costs, vectorized (n×m); band masks the DP below
-        cost = np.hypot(ax[:, None] - bx[None, :], ay[:, None] - by[None, :])
-        acc = np.full((n + 1, m + 1), np.inf)
-        acc[0, 0] = 0.0
-        w = max(band, abs(n - m)) if band is not None else None
-        for i in range(1, n + 1):
-            lo = 1 if w is None else max(1, i - w)
-            hi = m if w is None else min(m, i + w)
-            for j in range(lo, hi + 1):
-                acc[i, j] = cost[i - 1, j - 1] + min(
-                    acc[i - 1, j], acc[i, j - 1], acc[i - 1, j - 1]
-                )
-        return float(acc[n, m])
-
-    return dtw
-
-
-#: Dynamic-time-warping distance between two 2-D polylines given as
-#: coordinate arrays (euclidean point cost, symmetric step pattern).
-#: ``band`` is an optional Sakoe-Chiba constraint (|i-j| <= band)
-#: bounding the DP to O(n·band) — the standard scale control for long
-#: series. Pure numpy; safe inside Arrow-batched grouped-map UDFs.
-dtw_distance = _make_dtw()
+    ax = np.asarray(ax, dtype=float); ay = np.asarray(ay, dtype=float)
+    bx = np.asarray(bx, dtype=float); by = np.asarray(by, dtype=float)
+    n, m = len(ax), len(bx)
+    if n == 0 or m == 0:
+        return float("nan")
+    # pairwise point costs, vectorized (n×m); band masks the DP below
+    cost = np.hypot(ax[:, None] - bx[None, :], ay[:, None] - by[None, :])
+    acc = np.full((n + 1, m + 1), np.inf)
+    acc[0, 0] = 0.0
+    w = max(band, abs(n - m)) if band is not None else None
+    for i in range(1, n + 1):
+        lo = 1 if w is None else max(1, i - w)
+        hi = m if w is None else min(m, i + w)
+        for j in range(lo, hi + 1):
+            acc[i, j] = cost[i - 1, j - 1] + min(
+                acc[i - 1, j], acc[i, j - 1], acc[i - 1, j - 1]
+            )
+    return float(acc[n, m])
 
 
 def trajectory_dtw(
@@ -2516,14 +2504,13 @@ def trajectory_dtw(
 
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_type}, n_points bigint, dtw double"
-    _dtw = _make_dtw()  # closure-captured → pickled by value (no package on executors)
 
     def per_traj(pdf: pd.DataFrame) -> pd.DataFrame:
         rx_, ry_ = bc.value
         pdf = pdf.sort_values(
             [order_col, tiebreak] if tiebreak else order_col
         )
-        d = _dtw(
+        d = dtw_distance(
             pdf[x_col].to_numpy(dtype=float),
             pdf[y_col].to_numpy(dtype=float),
             rx_, ry_, band=band,

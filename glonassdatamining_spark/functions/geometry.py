@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from glonassdatamining_spark.session import memo
+
 _NUM = r"(-?\d+(?:\.\d+)?)"
 
 
@@ -459,10 +461,10 @@ def st_polygon_from_wkb(wkb: Column | str) -> Column:
     indices carrying (byte offset, rings parsed so far) — still one
     codegen'd expression per row.
 
-    String-named columns go through a memoized builder: constructing
+    String-named columns go through ``session.memo``: constructing
     this expression costs ~2 s of py4j round-trips (hundreds of
-    Column calls), and Column objects are immutable plan fragments
-    that are safe to reuse across queries in the same JVM.
+    Column calls), and the fragment is reusable for the life of the
+    application.
 
     The hex string is let-bound: HOFs evaluate INTERPRETED (no
     common-subexpression elimination), so a bare ``F.hex(c)``
@@ -471,7 +473,10 @@ def st_polygon_from_wkb(wkb: Column | str) -> Column:
     lambda variable makes it one allocation per row (~25× faster
     parse at 1500 rows/sf0.1)."""
     if isinstance(wkb, str):
-        return _polygon_from_wkb_cached(wkb)
+        return memo(
+            ("polygon_from_wkb", wkb),
+            lambda: st_polygon_from_wkb(F.col(wkb)),
+        )
     c = wkb
 
     def body(hx):
@@ -505,7 +510,10 @@ def st_multipolygon_from_wkb(wkb: Column | str) -> Column:
     String-named columns are memoized, and the hex string is
     let-bound to one allocation per row (see st_polygon_from_wkb)."""
     if isinstance(wkb, str):
-        return _multipolygon_from_wkb_cached(wkb)
+        return memo(
+            ("multipolygon_from_wkb", wkb),
+            lambda: st_multipolygon_from_wkb(F.col(wkb)),
+        )
     c = wkb
 
     def body(hx):
@@ -559,19 +567,6 @@ def st_multipolygon_from_wkb(wkb: Column | str) -> Column:
         )
 
     return _let(F.hex(c), body)
-
-
-import functools
-
-
-@functools.lru_cache(maxsize=32)
-def _polygon_from_wkb_cached(name: str) -> Column:
-    return st_polygon_from_wkb(F.col(name))
-
-
-@functools.lru_cache(maxsize=32)
-def _multipolygon_from_wkb_cached(name: str) -> Column:
-    return st_multipolygon_from_wkb(F.col(name))
 
 
 def st_area_multipolygon(polys: Column) -> Column:
@@ -670,9 +665,6 @@ def st_clip_half_plane(
     )
 
 
-_CLIP_STEP_CACHE: dict = {}
-
-
 def st_convex_clip(
     df, ring_col: str, clip: list[tuple[float, float]], out_col: str
 ):
@@ -687,16 +679,15 @@ def st_convex_clip(
     zone-overlay workloads; ST_Union area follows by
     inclusion-exclusion (|A|+|B|−|A∩B|) for convex pairs.
 
-    The k step Columns are memoized per (ring_col, clip, out_col):
-    each step only references fixed attribute NAMES, and Column
-    objects are immutable plan fragments safe to reuse within the JVM
-    (the `_polygon_from_wkb_cached` precedent). Building them anew
-    cost ~0.9 s of py4j round-trips per i57 call — most of that
-    query's per-run time (round-11, guide §1)."""
+    The k step Columns are memoized per (ring_col, clip, out_col)
+    through ``session.memo``: each step only references fixed
+    attribute NAMES, so the fragments are reusable for the life of
+    the application. Building them anew cost ~0.9 s of py4j
+    round-trips per i57 call — most of that query's per-run time
+    (round-11, guide §1)."""
     k = len(clip)
-    key = (ring_col, tuple((float(a), float(b)) for a, b in clip), out_col)
-    steps = _CLIP_STEP_CACHE.get(key)
-    if steps is None:
+
+    def build():
         steps = []
         cur = ring_col
         for idx in range(k):
@@ -710,8 +701,10 @@ def st_convex_clip(
                 )
             )
             cur = nxt
-        _CLIP_STEP_CACHE[key] = steps
-    for nxt, col in steps:
+        return steps
+
+    key = (ring_col, tuple((float(a), float(b)) for a, b in clip), out_col)
+    for nxt, col in memo(("convex_clip",) + key, build):
         df = df.withColumn(nxt, col)
     return df.drop(*[f"_clip_{out_col}_{i}" for i in range(k - 1)])
 

@@ -18,6 +18,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from glonassdatamining_spark.functions.codecs import (
+    decode_ppm,
+    decode_wav,
+    decode_y4m,
+    encode_wav,
+    encode_y4m,
+)
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.sources import load
 from glonassdatamining_spark.stable import dsum, o_dsum
@@ -614,24 +621,7 @@ def k13_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("meta"),
     )
 
-    # Captured as a plain string so the (by-value-pickled) closure can
-    # import the package on executors whose PYTHONPATH lacks it — the
-    # driver contract runs from an arbitrary cwd, and local-mode Python
-    # workers inherit only the env, not the driver's sys.path inserts.
-    # On a real cluster --py-files makes the import resolve anyway.
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-
     def decode_batches(batches):
-        import sys
-
-        if pkg_root not in sys.path:  # executor-side, see note above
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import decode_ppm
-
         for pdf in batches:
             feats = [decode_ppm(bytes(b)) for b in pdf["payload"]]
             yield pd.DataFrame(
@@ -2066,19 +2056,7 @@ def k37_wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodings (MP3/FLAC) enter this same seam behind an import-try."""
     import pandas as pd
 
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-
     def encode_batches(batches):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import encode_wav
-
         for pdf in batches:
             payloads = []
             for did in pdf["doc_id"]:
@@ -2090,12 +2068,6 @@ def k37_wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode_batches(batches):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import decode_wav
-
         for pdf in batches:
             feats = [decode_wav(bytes(b)) for b in pdf["payload"]]
             yield pd.DataFrame(
@@ -2339,20 +2311,9 @@ def k40_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow decode, frames inherit the parent partitioning."""
     import pandas as pd
 
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
     w, h = 8, 4
 
     def encode_batches(batches):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import encode_y4m
-
         plane = w * h
         for pdf in batches:
             payloads = []
@@ -2367,12 +2328,6 @@ def k40_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     def decode_batches(batches):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import decode_y4m
-
         for pdf in batches:
             out_doc, out_idx, out_n, out_mean = [], [], [], []
             for did, b in zip(pdf["doc_id"], pdf["payload"]):
@@ -4236,65 +4191,57 @@ _PQ_SAMPLE = 2048  # codebook training sample (bounded, standard)
 _PQ_SHORTLIST = 50  # ADC shortlist per query before exact re-rank
 
 
-def _make_pq_kernels():
-    """Factory (by-value pickling discipline) for the PQ numpy
-    kernels: codebook training (seeded Lloyd's), encoding (per-
-    subspace argmin), and ADC scoring (per-query M x ksub dot table,
-    then code lookups)."""
+# PQ numpy kernels: codebook training (seeded Lloyd's), encoding (per-
+# subspace argmin), and ADC scoring (per-query M x ksub dot table, then
+# code lookups).
+def _pq_train(sample, m, ksub, iters, seed):
+    # sample: (n, D) float64, L2-normalized rows
+    import numpy as np
 
-    def train(sample, m, ksub, iters, seed):
-        # sample: (n, D) float64, L2-normalized rows
-        import numpy as np
+    n, D = sample.shape
+    sub = D // m
+    books = []
+    for mi in range(m):
+        X = sample[:, mi * sub : (mi + 1) * sub]
+        rng = np.random.RandomState(seed + mi)
+        C = X[rng.choice(n, ksub, replace=False)].copy()
+        for _ in range(iters):
+            d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(2)
+            a = d.argmin(1)
+            for j in range(ksub):
+                msk = a == j
+                if msk.any():
+                    C[j] = X[msk].mean(0)
+        books.append(C)
+    return np.stack(books)  # (m, ksub, sub)
 
-        n, D = sample.shape
-        sub = D // m
-        books = []
-        for mi in range(m):
-            X = sample[:, mi * sub : (mi + 1) * sub]
-            rng = np.random.RandomState(seed + mi)
-            C = X[rng.choice(n, ksub, replace=False)].copy()
-            for _ in range(iters):
-                d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(2)
-                a = d.argmin(1)
-                for j in range(ksub):
-                    msk = a == j
-                    if msk.any():
-                        C[j] = X[msk].mean(0)
-            books.append(C)
-        return np.stack(books)  # (m, ksub, sub)
+def _pq_encode(vecs, books):
+    import numpy as np
 
-    def encode(vecs, books):
-        import numpy as np
+    m, ksub, sub = books.shape
+    codes = np.empty((len(vecs), m), dtype=np.int32)
+    for mi in range(m):
+        X = vecs[:, mi * sub : (mi + 1) * sub]
+        codes[:, mi] = (
+            ((X[:, None, :] - books[mi][None, :, :]) ** 2).sum(2)
+        ).argmin(1)
+    return codes
 
-        m, ksub, sub = books.shape
-        codes = np.empty((len(vecs), m), dtype=np.int32)
-        for mi in range(m):
-            X = vecs[:, mi * sub : (mi + 1) * sub]
-            codes[:, mi] = (
-                ((X[:, None, :] - books[mi][None, :, :]) ** 2).sum(2)
-            ).argmin(1)
-        return codes
+def _pq_adc_topL(q, books, codes, self_idx, L):
+    # q: (D,) unit query; codes: (n, m); returns indices of the
+    # top-L candidates by ADC approximate cosine (deterministic:
+    # score desc, index asc tie-break via stable lexsort)
+    import numpy as np
 
-    def adc_topL(q, books, codes, self_idx, L):
-        # q: (D,) unit query; codes: (n, m); returns indices of the
-        # top-L candidates by ADC approximate cosine (deterministic:
-        # score desc, index asc tie-break via stable lexsort)
-        import numpy as np
-
-        m, ksub, sub = books.shape
-        tables = np.stack(
-            [books[mi] @ q[mi * sub : (mi + 1) * sub] for mi in range(m)]
-        )  # (m, ksub)
-        approx = tables[np.arange(m)[:, None], codes.T].sum(0)
-        if self_idx is not None:
-            approx[self_idx] = -np.inf
-        order = np.lexsort((np.arange(len(approx)), -approx))
-        return order[:L], approx
-
-    return train, encode, adc_topL
-
-
-_pq_train, _pq_encode, _pq_adc_topL = _make_pq_kernels()
+    m, ksub, sub = books.shape
+    tables = np.stack(
+        [books[mi] @ q[mi * sub : (mi + 1) * sub] for mi in range(m)]
+    )  # (m, ksub)
+    approx = tables[np.arange(m)[:, None], codes.T].sum(0)
+    if self_idx is not None:
+        approx[self_idx] = -np.inf
+    order = np.lexsort((np.arange(len(approx)), -approx))
+    return order[:L], approx
 
 
 @register("k14c_pq_ann_adc", oracle=None, section="K-extra")

@@ -19,10 +19,17 @@ is STARK's grid partitioner expressed as shuffle-compatible equi-joins.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from glonassdatamining_spark.functions.codecs import (
+    pack_wkb_multipolygon,
+    pack_wkb_polygon,
+    wkb_polygon_even_odd_area,
+)
 from glonassdatamining_spark.registry import register
+from glonassdatamining_spark.session import memo
 from glonassdatamining_spark.sources import load
 from glonassdatamining_spark.stable import EVENTS_CTE, davg, dsum, o_dsum
 
@@ -1525,7 +1532,7 @@ def i24_snap_to_poi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The 25-struct literal argmin tree costs ~0.5 s of py4j
     # construction per call (round-11 §1 measurement) — memoized like
     # every other fixed-name Column fragment.
-    best = _memo_col(
+    best = memo(
         "i24_best_poi",
         lambda: F.array_min(
             F.array(
@@ -1914,7 +1921,7 @@ def i30_polygon_intersect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-11 (§1 measure): the predicate's ~2000-node Column tree cost
     ~1 s of py4j CONSTRUCTION per call — dominating the per-run time —
-    so it now rides `_memo_col`. An Arrow-kernel engine was tried and
+    so it now rides `memo`. An Arrow-kernel engine was tried and
     REJECTED: interleaved measurement put the numpy predicate at
     1.08 s vs 0.91 s for the memoized HOF (28 k candidates are too few
     to amortize the extra ArrowEvalPython barrier).
@@ -1962,7 +1969,7 @@ def i30_polygon_intersect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     build = geoms.select(
         F.col("obj_id").alias("_b"), F.col("ring").alias("_ring_b"), "gx", "gy"
     )
-    pred = _memo_col(
+    pred = memo(
         "i30_intersects",
         lambda: st_intersects_polygon(F.col("_ring_a"), F.col("_ring_b")),
     )
@@ -1978,23 +1985,6 @@ def i30_polygon_intersect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("_a", "_b").alias("obj_b"),
         )
     )
-
-
-_COL_CACHE: dict = {}
-
-
-def _memo_col(key: str, build):
-    """Module-level memo for big Column plan fragments. Column objects
-    are immutable expression trees safe to reuse across queries in the
-    same JVM (the `_polygon_from_wkb_cached` precedent in
-    functions/geometry.py); building a large HOF predicate costs up to
-    ~1 s of py4j round-trips PER CALL (guide §1 measurement: i30's
-    predicate construction dominated its per-run time), and the bench
-    rebuilds every query per repetition. Plan construction only —
-    never results."""
-    if key not in _COL_CACHE:
-        _COL_CACHE[key] = build()
-    return _COL_CACHE[key]
 
 
 _SEG_INTERSECT_SQL = """
@@ -2019,9 +2009,9 @@ def i31_crossings_np(x, y) -> int:
     the Catalyst/oracle predicate bit-for-bit). The bbox guard is
     applied as a conjunct instead of a short-circuit: with non-null
     coords, `when(~overlap, False).otherwise(hit)` ≡ `overlap & hit`.
-    The i31 'arrow' engine calls this per trajectory (guide §4.1: the
-    interpreted HOF pair scan costs ~µs per PAIR; this is one
-    vectorized O(m²) numpy pass per object)."""
+    i31 calls this per trajectory (guide §4.1: the interpreted HOF
+    pair scan costs ~µs per PAIR; this is one vectorized O(m²) numpy
+    pass per object)."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
@@ -2079,31 +2069,19 @@ def i31_crossings_np(x, y) -> int:
     return int(np.count_nonzero(hit & valid))
 
 
+def _i31_crossings_kernel(xs, ys):
+    return pd.Series(
+        [i31_crossings_np(a, b) for a, b in zip(xs, ys)],
+        dtype="int64",
+    )
+
+
 def _i31_crossings_udf():
-    """Module-singleton Arrow UDF: (xs, ys point arrays) → crossing
-    count via :func:`i31_crossings_np`."""
-    if "i31_cross" in _ENCODE_UDFS:
-        return _ENCODE_UDFS["i31_cross"]
-    import pandas as pd
-
-    pkg_root = _pkg_root()
-
-    def _fn(xs, ys):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.operators.spatiotemporal import (
-            i31_crossings_np,
-        )
-
-        return pd.Series(
-            [i31_crossings_np(a, b) for a, b in zip(xs, ys)],
-            dtype="int64",
-        )
-
-    _ENCODE_UDFS["i31_cross"] = F.pandas_udf(_fn, "long")
-    return _ENCODE_UDFS["i31_cross"]
+    """Per-session Arrow UDF: (xs, ys point arrays) → crossing count
+    via :func:`i31_crossings_np`."""
+    return memo(
+        "i31_cross", lambda: F.pandas_udf(_i31_crossings_kernel, "long")
+    )
 
 
 @register(
@@ -2129,9 +2107,7 @@ def _i31_crossings_udf():
     ),
     section="I31",
 )
-def i31_path_self_intersections(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def i31_path_self_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trajectory self-crossing count (loop detection): per object,
     count non-adjacent segment pairs of the time-ordered polyline that
     intersect — the GNSS diagnostic for circling/looping behavior.
@@ -2139,65 +2115,27 @@ def i31_path_self_intersections(
     join. The oracle re-derives the identical count via a SQL segment
     self-join with the same IEEE-exact cross products.
 
-    ENGINES (round-11, guide §4.1): 'arrow' (default) runs the
-    O(m²)-per-trajectory pair scan as one vectorized numpy pass per
-    object (:func:`i31_crossings_np` — bit-identical sign tests,
-    asserted vs 'hof' in tests/test_geometry.py). 'hof' keeps the
-    in-row codegen'd higher-order form (sequence → slice → filter with
-    the orientation test) — the certification twin; its per-PAIR
-    interpreted-lambda cost dominated the old runtime (~6.6 M pairs at
-    sf0.1). Per-row memory is one trajectory either way — bound it
-    upstream with rdp_simplify (i14) for pathological tracks."""
-    from glonassdatamining_spark.functions.geometry import segments_intersect
-
+    Kernel (round-11, guide §4.1): the O(m²)-per-trajectory pair scan
+    runs as one vectorized numpy pass per object
+    (:func:`i31_crossings_np` — bit-identical sign tests, asserted vs
+    the in-row higher-order-function scan built in
+    tests/test_geometry.py, whose per-PAIR interpreted-lambda cost
+    dominated the old runtime at ~6.6 M pairs at sf0.1). Per-row
+    memory is one trajectory — bound it upstream with rdp_simplify
+    (i14) for pathological tracks."""
     f = fixes(spark, sf_dir)
     traj = f.groupBy("obj_id").agg(
         F.array_sort(
             F.collect_list(F.struct("ts", "event_id", "x", "y"))
         ).alias("pts")
     )
-    if engine == "arrow":
-        return traj.select(
-            "obj_id",
-            _i31_crossings_udf()(
-                F.transform("pts", lambda p: p.x),
-                F.transform("pts", lambda p: p.y),
-            ).alias("n_crossings"),
-        )
-    n = F.size(F.col("pts"))
-    segs = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.struct(
-                F.element_at(F.col("pts"), i).x.alias("x1"),
-                F.element_at(F.col("pts"), i).y.alias("y1"),
-                F.element_at(F.col("pts"), i + 1).x.alias("x2"),
-                F.element_at(F.col("pts"), i + 1).y.alias("y2"),
-            ),
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<x1:double,y1:double,x2:double,y2:double>>")
+    return traj.select(
+        "obj_id",
+        _i31_crossings_udf()(
+            F.transform("pts", lambda p: p.x),
+            F.transform("pts", lambda p: p.y),
+        ).alias("n_crossings"),
     )
-    traj = traj.select("obj_id", segs.alias("segs"))
-    m = F.size(F.col("segs"))
-    crossings = F.when(
-        m >= 3,
-        F.aggregate(
-            F.sequence(F.lit(1), m - 2),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc
-            + F.size(
-                F.filter(
-                    F.slice(F.col("segs"), i + 2, m),
-                    lambda t: segments_intersect(
-                        F.element_at(F.col("segs"), i), t
-                    ),
-                )
-            ).cast("long"),
-        ),
-    ).otherwise(F.lit(0).cast("long"))
-    return traj.select("obj_id", crossings.alias("n_crossings"))
 
 
 @register(
@@ -2293,15 +2231,6 @@ def i32_wkt_linestring_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pkg_root() -> str:
-    """Repo root for executor-side sys.path injection (see k13)."""
-    import os
-
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-
-
 # Shared geo CTE for i33/i34: per-object inflated bbox shell + centered
 # half-size hole. The 0.00037 hole offset keeps every hole boundary off
 # the fixes' milli-coordinate grid, so strict-inequality SQL and the
@@ -2328,112 +2257,70 @@ def _rect_shoelace_sql(x0: str, y0: str, x1: str, y1: str) -> str:
     return f"abs((({t1} + {t2}) + {t3}) + {t4}) / 2.0"
 
 
-_ENCODE_UDFS: dict = {}
+def _encode_poly_kernel(x0, y0, x1, y1, hx0, hy0, hx1, hy1):
+    out = []
+    for a, b, c, d, e, f, g, h in zip(x0, y0, x1, y1, hx0, hy0, hx1, hy1):
+        out.append(
+            pack_wkb_polygon(
+                [
+                    [(a, b), (c, b), (c, d), (a, d)],
+                    [(e, f), (g, f), (g, h), (e, h)],
+                ]
+            )
+        )
+    return pd.Series(out)
 
 
 def _encode_poly_udf():
-    """Module-singleton pandas encoder UDF: a FRESH pandas_udf pays a
+    """Per-session pandas encoder UDF: a FRESH pandas_udf pays a
     ~3 s first-use cost (function re-pickle + worker re-prime across
     all partitions), so the bench's rebuild-per-repetition pattern
-    must reuse one UDF object per process. No type hints: `from
-    __future__ import annotations` stringifies them and pyspark's
-    hint resolver can't evaluate module-level strings in a nested
-    scope — the classic form infers SCALAR. pkg_root rides the
-    closure so executors without the repo on PYTHONPATH can import
-    the shared packer (k13's pattern)."""
-    if "poly" in _ENCODE_UDFS:
-        return _ENCODE_UDFS["poly"]
-    import pandas as pd
+    must reuse one UDF object per session. No type hints on the
+    kernel: `from __future__ import annotations` stringifies them —
+    the classic form infers SCALAR."""
+    return memo("poly", lambda: F.pandas_udf(_encode_poly_kernel, "binary"))
 
-    pkg_root = _pkg_root()
 
-    def _encode_fn(x0, y0, x1, y1, hx0, hy0, hx1, hy1):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import pack_wkb_polygon
-
-        out = []
-        for a, b, c, d, e, f, g, h in zip(x0, y0, x1, y1, hx0, hy0, hx1, hy1):
-            out.append(
-                pack_wkb_polygon(
-                    [
-                        [(a, b), (c, b), (c, d), (a, d)],
-                        [(e, f), (g, f), (g, h), (e, h)],
-                    ]
-                )
-            )
-        return pd.Series(out)
-
-    _ENCODE_UDFS["poly"] = F.pandas_udf(_encode_fn, "binary")
-    return _ENCODE_UDFS["poly"]
+def _encode_mpoly_kernel(x0, y0, x1, y1, hx0, hy0, hx1, hy1, dx):
+    out = []
+    for a, b, c, d, e, f, g, h, t in zip(
+        x0, y0, x1, y1, hx0, hy0, hx1, hy1, dx
+    ):
+        p1 = [
+            [(a, b), (c, b), (c, d), (a, d)],
+            [(e, f), (g, f), (g, h), (e, h)],
+        ]
+        p2 = [
+            [(a + t, b), (c + t, b), (c + t, d), (a + t, d)],
+            [(e + t, f), (g + t, f), (g + t, h), (e + t, h)],
+        ]
+        out.append(pack_wkb_multipolygon([p1, p2]))
+    return pd.Series(out)
 
 
 def _encode_mpoly_udf():
-    """Module-singleton MULTIPOLYGON encoder (see _encode_poly_udf)."""
-    if "mpoly" in _ENCODE_UDFS:
-        return _ENCODE_UDFS["mpoly"]
-    import pandas as pd
+    """Per-session MULTIPOLYGON encoder (see _encode_poly_udf)."""
+    return memo(
+        "mpoly", lambda: F.pandas_udf(_encode_mpoly_kernel, "binary")
+    )
 
-    pkg_root = _pkg_root()
 
-    def _encode_fn(x0, y0, x1, y1, hx0, hy0, hx1, hy1, dx):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import (
-            pack_wkb_multipolygon,
-        )
-
-        out = []
-        for a, b, c, d, e, f, g, h, t in zip(
-            x0, y0, x1, y1, hx0, hy0, hx1, hy1, dx
-        ):
-            p1 = [
-                [(a, b), (c, b), (c, d), (a, d)],
-                [(e, f), (g, f), (g, h), (e, h)],
-            ]
-            p2 = [
-                [(a + t, b), (c + t, b), (c + t, d), (a + t, d)],
-                [(e + t, f), (g + t, f), (g + t, h), (e + t, h)],
-            ]
-            out.append(pack_wkb_multipolygon([p1, p2]))
-        return pd.Series(out)
-
-    _ENCODE_UDFS["mpoly"] = F.pandas_udf(_encode_fn, "binary")
-    return _ENCODE_UDFS["mpoly"]
+def _measure_poly_area_kernel(wkb):
+    return pd.Series(
+        [wkb_polygon_even_odd_area(b) for b in wkb], dtype="object"
+    )
 
 
 def _measure_poly_area_udf():
-    """Module-singleton Arrow measure UDF for i33's default engine:
-    WKB bytes → even-odd area via the shared
-    ``codecs.wkb_polygon_even_odd_area`` kernel (bit-identical to the
-    Catalyst parse+measure chain — see its docstring and the
-    equivalence test). dtype=object keeps None → SQL NULL (a float64
-    Series would smuggle NaN instead)."""
-    if "poly_area" in _ENCODE_UDFS:
-        return _ENCODE_UDFS["poly_area"]
-    import pandas as pd
-
-    pkg_root = _pkg_root()
-
-    def _area_fn(wkb):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.functions.codecs import (
-            wkb_polygon_even_odd_area,
-        )
-
-        return pd.Series(
-            [wkb_polygon_even_odd_area(b) for b in wkb], dtype="object"
-        )
-
-    _ENCODE_UDFS["poly_area"] = F.pandas_udf(_area_fn, "double")
-    return _ENCODE_UDFS["poly_area"]
+    """Per-session Arrow measure UDF for i33: WKB bytes → even-odd
+    area via the shared ``codecs.wkb_polygon_even_odd_area`` kernel
+    (bit-identical to the Catalyst parse+measure chain — see its
+    docstring and the equivalence test). dtype=object keeps None →
+    SQL NULL (a float64 Series would smuggle NaN instead)."""
+    return memo(
+        "poly_area",
+        lambda: F.pandas_udf(_measure_poly_area_kernel, "double"),
+    )
 
 
 def _hole_wkb_bytes(bb: DataFrame) -> DataFrame:
@@ -2493,7 +2380,7 @@ def _bench_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
 
 
 def _hole_rings_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(obj_id, rings) for i33/i34: the encode (bytes) + parse PLAN
+    """(obj_id, rings) for i34: the encode (bytes) + parse PLAN
     ride the bench cache; the parse itself EXECUTES on every call via
     a fresh non-eager localCheckpoint — the dbscan_local_plan
     prepared-statement discipline, applied here after round 5's
@@ -2538,9 +2425,7 @@ def _hole_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     section="I33",
 )
-def i33_wkb_polygon_hole_area(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def i33_wkb_polygon_hole_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WKB polygons-with-holes, end to end (round-3 judge ask): each
     object's inflated trajectory bbox becomes a shell + centered
     half-size hole, packed to little-endian WKB (Arrow pandas
@@ -2550,31 +2435,25 @@ def i33_wkb_polygon_hole_area(
     IEEE fold, so one flipped byte, swapped vertex, or lossy double
     anywhere in the encode→parse→measure chain breaks the hash.
 
-    ENGINES (round-11, guide §4.1): the default 'arrow' engine runs
-    parse+measure as ONE Arrow batch over the shared
-    ``codecs.wkb_polygon_even_odd_area`` kernel — the interpreted-HOF
-    Catalyst parse costs ~1.5 s of driver ANALYSIS (a ~thousand-node
-    expression tree) plus multi-second interpreted eval per run at
-    1500 polygons, vs microseconds of scalar-double Python that
-    replays the identical IEEE fold (bit-identity asserted vs the
-    'hof' twin in tests/test_geometry.py). engine='hof' keeps the
-    PURE-Catalyst WKB reader (hex slices + exact IEEE-754 bit
-    reconstruction — functions/geometry.py) — the certification twin,
-    and still i34's declared engine. Scale: one groupBy (the bbox
-    agg); encode/parse/measure are narrow per-row work either way."""
-    if engine == "arrow":
-        wkb = _bench_frame(
-            spark,
-            ("hole_wkb_bytes", sf_dir),
-            lambda: _hole_wkb_bytes(_hole_geo(spark, sf_dir)),
-        )
-        return wkb.select(
-            "obj_id", _measure_poly_area_udf()(F.col("wkb")).alias("area")
-        )
-    from glonassdatamining_spark.functions.geometry import st_area_multiring
-
-    geo = _hole_rings_frame(spark, sf_dir)
-    return geo.select("obj_id", st_area_multiring(F.col("rings")).alias("area"))
+    Kernel (round-11, guide §4.1): parse+measure run as ONE Arrow
+    batch over the shared ``codecs.wkb_polygon_even_odd_area`` kernel
+    — the interpreted-HOF Catalyst parse costs ~1.5 s of driver
+    ANALYSIS (a ~thousand-node expression tree) plus multi-second
+    interpreted eval per run at 1500 polygons, vs microseconds of
+    scalar-double Python that replays the identical IEEE fold
+    (bit-identity asserted in tests/test_geometry.py against the
+    PURE-Catalyst WKB reader — hex slices + exact IEEE-754 bit
+    reconstruction, functions/geometry.py — that i34 declares via
+    ``_hole_rings_frame``). Scale: one groupBy (the bbox agg);
+    encode/measure are narrow per-row work."""
+    wkb = _bench_frame(
+        spark,
+        ("hole_wkb_bytes", sf_dir),
+        lambda: _hole_wkb_bytes(_hole_geo(spark, sf_dir)),
+    )
+    return wkb.select(
+        "obj_id", _measure_poly_area_udf()(F.col("wkb")).alias("area")
+    )
 
 
 @register(
@@ -4518,7 +4397,7 @@ def i57_zone_overlay_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _out_cols():
         # the two shoelace HOF trees + rounding — fixed names (r0, rc),
-        # memoized (round-11, the _memo_col discipline)
+        # memoized (round-11, the session.memo discipline)
         inter = st_area_or_zero(F.col("rc"))
         subj = st_area_or_zero(F.col("r0"))
         return [
@@ -4529,7 +4408,7 @@ def i57_zone_overlay_area(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
 
-    return clipped.select("zone_id", *_memo_col("i57_out", _out_cols))
+    return clipped.select("zone_id", *memo("i57_out", _out_cols))
 
 
 # ---------------------------------------------------------------------------
@@ -5107,12 +4986,12 @@ def concave_overlay_areas(
         )
         return F.when(signed2 < 0, F.reverse(r)).otherwise(r).alias("r0")
 
-    # fused memoized stages (round-11, the _memo_col discipline: the
+    # fused memoized stages (round-11, the session.memo discipline: the
     # guard/sa/fan projections reference the fixed attribute name r0
     # only — plan construction only, identical analyzed plan)
-    z = z.select("zone_id", _memo_col("i60_guard_r0", _guard_col))
+    z = z.select("zone_id", memo("i60_guard_r0", _guard_col))
     z = z.select(
-        "*", _memo_col("i60_sa", lambda: st_area(F.col("r0")).alias("sa"))
+        "*", memo("i60_sa", lambda: st_area(F.col("r0")).alias("sa"))
     )
     if engine == "arrow":
         if nv is None:
@@ -5155,7 +5034,7 @@ def concave_overlay_areas(
             return out
 
         nj = len(clip_tris)
-        t = z.select("*", *_memo_col(_fan_key, _fan_cols))
+        t = z.select("*", *memo(_fan_key, _fan_cols))
         fancols = {
             j: tuple(f"f{j}v{k}{ax}" for k in range(3) for ax in ("x", "y"))
             for j in range(nj)
@@ -5530,11 +5409,11 @@ def i62_concave_overlay_join(
     # unbounded clip sides.)
     # Zone ring built per ZONE pre-join (round-11, guide §2.1) — the
     # old per-pair construction repeated it once per candidate.
-    # Memoized fused select (the _memo_col discipline: fixed attribute
+    # Memoized fused select (the session.memo discipline: fixed attribute
     # names only, plan construction only — identical analyzed plan).
     zones = zones.select(
         "*",
-        _memo_col(
+        memo(
             "i62_r0",
             lambda: F.array(
                 F.struct(
@@ -5553,7 +5432,7 @@ def i62_concave_overlay_join(
             ).alias("r0"),
         ),
     )
-    bbox_pred = _memo_col(
+    bbox_pred = memo(
         "i62_bbox",
         lambda: (
             (F.col("zx") - F.col("w") <= F.col("dx") + F.col("rd"))
@@ -5610,8 +5489,8 @@ def i62_concave_overlay_join(
                     )
             return out
 
-        zt = zones.select("*", *_memo_col("i62_zt", _zt_cols))
-        dt = districts.select("*", *_memo_col("i62_dt", _dt_cols))
+        zt = zones.select("*", *memo("i62_zt", _zt_cols))
+        dt = districts.select("*", *memo("i62_dt", _dt_cols))
         t = zt.join(F.broadcast(dt), bbox_pred)
         fancols = {
             j: tuple(f"f{j}v{k}{ax}" for k in range(3) for ax in ("x", "y"))
@@ -5822,8 +5701,8 @@ def i63_geodesic_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
             pts.filter(
                 # fixed-name (xk, yk) crossing-parity tree over a
                 # literal fence — memoized per zone (round-11, the
-                # _memo_col discipline; plan construction only)
-                _memo_col(
+                # session.memo discipline; plan construction only)
+                memo(
                     f"i63_pip_{zone}",
                     lambda fence=fence: point_in_polygon(
                         F.col("xk"), F.col("yk"), fence
@@ -6017,14 +5896,14 @@ def i62b_concave_overlay_general(
     # district (100 rows) — computing them per candidate PAIR (146 k
     # rows) paid the interpreted shoelace HOF ~9× more than needed.
     # Same expressions on the same doubles → bit-identical values.
-    # Plan-construction memo (round-11, the _memo_col discipline): all
+    # Plan-construction memo (round-11, the session.memo discipline): all
     # projections below reference FIXED attribute names only, so the
     # Column trees are reusable across calls; withColumn chains are
     # fused into single select() stages (one analyzer pass each). Same
     # expressions on the same doubles -> identical analyzed plan.
     zones = zones.select(
         "*",
-        _memo_col(
+        memo(
             "i62b_r0",
             lambda: F.array(
                 pt(F.col("zx") + F.col("w"), F.col("zy") + F.col("h")),
@@ -6033,10 +5912,10 @@ def i62b_concave_overlay_general(
                 pt(F.col("zx"), F.col("zy") - F.col("h")),
             ).alias("r0"),
         ),
-    ).select("*", _memo_col("i62b_sa", lambda: st_area(F.col("r0")).alias("sa")))
+    ).select("*", memo("i62b_sa", lambda: st_area(F.col("r0")).alias("sa")))
     districts = districts.select(
         "*",
-        _memo_col(
+        memo(
             "i62b_d0",
             lambda: F.array(
                 pt(F.col("dx") + F.col("rd"), F.col("dy") + F.col("rd")),
@@ -6045,8 +5924,8 @@ def i62b_concave_overlay_general(
                 pt(F.col("dx"), F.col("dy") - F.col("rd")),
             ).alias("d0"),
         ),
-    ).select("*", _memo_col("i62b_da", lambda: st_area(F.col("d0")).alias("da")))
-    bbox_pred = _memo_col(
+    ).select("*", memo("i62b_da", lambda: st_area(F.col("d0")).alias("da")))
+    bbox_pred = memo(
         "i62_bbox",
         lambda: (
             (F.col("zx") - F.col("w") <= F.col("dx") + F.col("rd"))
@@ -6129,10 +6008,10 @@ def i62b_concave_overlay_general(
                     out.append(uk.y.alias(f"u{j}{k}y"))
             return out
 
-        zt = zones.select("*", *_memo_col("i62b_zt", _zt_cols))
+        zt = zones.select("*", *memo("i62b_zt", _zt_cols))
         dt = (
-            districts.select("*", *_memo_col("i62b_dt_cu", _dt_cu_cols))
-            .select("*", *_memo_col("i62b_dt_flat", _dt_flat_cols))
+            districts.select("*", *memo("i62b_dt_cu", _dt_cu_cols))
+            .select("*", *memo("i62b_dt_flat", _dt_flat_cols))
             .drop("cu2", "cu3")
         )
         t = zt.join(F.broadcast(dt), bbox_pred)
@@ -7044,10 +6923,10 @@ def i67_inside_flags_np(px, py, pz, zone: str):
     left-to-right sums, same strict sign tests — numpy elementwise
     mul/add are plain binary64 ops with no FMA contraction), so the
     booleans are bit-identical to the Catalyst/oracle predicate by
-    determinism, not by margin. This is i67's default 'arrow' engine
-    kernel (guide §4.1): the generated SQL predicate is ~36 KB of text
-    whose single codegen method blows past the JVM JIT's huge-method
-    limit, leaving the hot loop INTERPRETED at ~26 µs/row."""
+    determinism, not by margin. This is i67's kernel (guide §4.1):
+    the generated SQL predicate is ~36 KB of text whose single codegen
+    method blows past the JVM JIT's huge-method limit, leaving the hot
+    loop INTERPRETED at ~26 µs/row."""
     import numpy as np
 
     cnt = np.zeros(px.shape[0], dtype=np.int64)
@@ -7078,36 +6957,23 @@ def i67_inside_flags_np(px, py, pz, zone: str):
     return (cnt % 2) == 1
 
 
-def _i67_flags_udf():
-    """Module-singleton Arrow UDF: (px, py, pz) → struct of per-fence
-    inside booleans via :func:`i67_inside_flags_np`. Fence edges ride
-    the closure as plain Python tuples (no executor-side repo import
-    needed beyond numpy)."""
-    if "i67_flags" in _ENCODE_UDFS:
-        return _ENCODE_UDFS["i67_flags"]
-    import pandas as pd
-
-    zones = list(_I67_FENCES)
-    pkg_root = _pkg_root()
-
-    def _fn(px, py, pz):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.operators.spatiotemporal import (
-            i67_inside_flags_np,
-        )
-
-        X, Y, Z = px.to_numpy(), py.to_numpy(), pz.to_numpy()
-        return pd.DataFrame(
-            {z: i67_inside_flags_np(X, Y, Z, z) for z in zones}
-        )
-
-    _ENCODE_UDFS["i67_flags"] = F.pandas_udf(
-        _fn, "struct<" + ",".join(f"{z}:boolean" for z in zones) + ">"
+def _i67_flags_kernel(px, py, pz):
+    X, Y, Z = px.to_numpy(), py.to_numpy(), pz.to_numpy()
+    return pd.DataFrame(
+        {z: i67_inside_flags_np(X, Y, Z, z) for z in _I67_FENCES}
     )
-    return _ENCODE_UDFS["i67_flags"]
+
+
+def _i67_flags_udf():
+    """Per-session Arrow UDF: (px, py, pz) → struct of per-fence
+    inside booleans via :func:`i67_inside_flags_np`."""
+    return memo(
+        "i67_flags",
+        lambda: F.pandas_udf(
+            _i67_flags_kernel,
+            "struct<" + ",".join(f"{z}:boolean" for z in _I67_FENCES) + ">",
+        ),
+    )
 
 
 def _i67_inside_sql(zone: str) -> str:
@@ -7141,9 +7007,7 @@ def _i67_oracle() -> str:
 
 
 @register("i67_spherical_geofence", oracle=_i67_oracle(), section="I67")
-def i67_spherical_geofence(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def i67_spherical_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT SPHERICAL geofence containment (round-9 verdict ask #7 —
     the documented cutover target past i63's ~4% local-plane bound):
     per-fence point counts by GREAT-CIRCLE crossing parity on the
@@ -7181,21 +7045,17 @@ def i67_spherical_geofence(
         F.expr("cos(radians(lat)) * sin(radians(lon))").alias("py"),
         F.expr("sin(radians(lat))").alias("pz"),
     )
-    if engine == "arrow":
-        # Default engine (round-11, guide §4.1): ONE Arrow batch
-        # evaluates all fence predicates via the numpy twin (see
-        # i67_inside_flags_np — the 36 KB SQL predicate's codegen
-        # method exceeds the JIT huge-method limit and runs
-        # interpreted). Field extraction dedupes to a single UDF eval.
-        fl = _i67_flags_udf()(F.col("px"), F.col("py"), F.col("pz"))
-        p = p.select(
-            "obj_id",
-            "px", "py", "pz",
-            *[fl.getField(z).alias(f"_in_{z}") for z in _I67_FENCES],
-        )
-    else:
-        for zone in _I67_FENCES:
-            p = p.withColumn(f"_in_{zone}", F.expr(_i67_inside_sql(zone)))
+    # ONE Arrow batch evaluates all fence predicates via the numpy
+    # twin (round-11, guide §4.1; see i67_inside_flags_np — the 36 KB
+    # SQL predicate's codegen method exceeds the JIT huge-method limit
+    # and runs interpreted). Field extraction dedupes to a single UDF
+    # eval.
+    fl = _i67_flags_udf()(F.col("px"), F.col("py"), F.col("pz"))
+    p = p.select(
+        "obj_id",
+        "px", "py", "pz",
+        *[fl.getField(z).alias(f"_in_{z}") for z in _I67_FENCES],
+    )
     aggs = []
     for zone in _I67_FENCES:
         aggs += [
@@ -7373,71 +7233,60 @@ def i68_geodesic_polygon_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 _I69_K = 3
 
 
-def _make_frechet_dp_batch():
-    """Factory so the DP kernel pickles BY VALUE into the
-    mapInPandas closure (the _make_dtw discipline — a module-level
-    function would pickle by reference and break when the driver
-    runs from outside the repo)."""
+def _frechet_dp_batch(pax, pay, pbx, pby):
+    """Discrete-Frechet DP over a BATCH of trajectory pairs,
+    vectorized across pairs AND along anti-diagonals: pad the batch's
+    distance tensor to (P, N, M) with +inf (inf padding cannot help a
+    min-over-paths, so padded lanes never leak into real cells), then
+    sweep the N+M-1 anti-diagonals — every cell on diagonal k depends
+    only on diagonals k-1 and k-2, so each sweep step is one numpy
+    expression over all P pairs at once. Recurrence (Eiter-Mannila):
+    c(i,j) = max(d(i,j), min(c(i-1,j), c(i-1,j-1), c(i,j-1))),
+    c(0,0) = d(0,0); answer = c(n-1, m-1). d uses the IDENTICAL
+    IEEE-754 chain as i65's refine (dx*dx + dy*dy then sqrt); the DP
+    itself is arithmetic-free min/max selection, so the batch kernel
+    is bit-identical to a scalar python replay (asserted in
+    tests/test_geometry.py)."""
+    import numpy as np
 
-    def dp_batch(pax, pay, pbx, pby):
-        """Discrete-Frechet DP over a BATCH of trajectory pairs,
-        vectorized across pairs AND along anti-diagonals: pad the batch's
-        distance tensor to (P, N, M) with +inf (inf padding cannot help a
-        min-over-paths, so padded lanes never leak into real cells), then
-        sweep the N+M-1 anti-diagonals — every cell on diagonal k depends
-        only on diagonals k-1 and k-2, so each sweep step is one numpy
-        expression over all P pairs at once. Recurrence (Eiter-Mannila):
-        c(i,j) = max(d(i,j), min(c(i-1,j), c(i-1,j-1), c(i,j-1))),
-        c(0,0) = d(0,0); answer = c(n-1, m-1). d uses the IDENTICAL
-        IEEE-754 chain as i65's refine (dx*dx + dy*dy then sqrt); the DP
-        itself is arithmetic-free min/max selection, so the batch kernel
-        is bit-identical to a scalar python replay (asserted in
-        tests/test_geometry.py)."""
-        import numpy as np
-
-        P = len(pax)
-        na = np.array([len(a) for a in pax], dtype=np.int64)
-        nb = np.array([len(b) for b in pbx], dtype=np.int64)
-        N, M = int(na.max()), int(nb.max())
-        d = np.full((P, N, M), np.inf)
-        for p in range(P):
-            ax = np.asarray(pax[p], dtype=np.float64)
-            ay = np.asarray(pay[p], dtype=np.float64)
-            bx = np.asarray(pbx[p], dtype=np.float64)
-            by = np.asarray(pby[p], dtype=np.float64)
-            dx = ax[:, None] - bx[None, :]
-            dy = ay[:, None] - by[None, :]
-            d[p, : na[p], : nb[p]] = np.sqrt(dx * dx + dy * dy)
-        out = np.empty(P, dtype=np.float64)
-        prev = np.full((P, N), np.inf)
-        prev2 = np.full((P, N), np.inf)
-        last = na + nb - 2
-        for k in range(N + M - 1):
-            i_lo, i_hi = max(0, k - M + 1), min(N - 1, k)
-            ii = np.arange(i_lo, i_hi + 1)
-            dk = d[:, ii, k - ii]
-            cur = np.full((P, N), np.inf)
-            if k == 0:
-                cur[:, 0] = dk[:, 0]
-            else:
-                pj = prev[:, ii]  # c(i, j-1): diag k-1, same i
-                iim1 = np.maximum(ii - 1, 0)
-                m1 = (ii >= 1)[None, :]
-                pi = np.where(m1, prev[:, iim1], np.inf)    # c(i-1, j)
-                pij = np.where(m1, prev2[:, iim1], np.inf)  # c(i-1, j-1)
-                cur[:, i_lo : i_hi + 1] = np.maximum(
-                    dk, np.minimum(pj, np.minimum(pi, pij))
-                )
-            hit = last == k
-            if hit.any():
-                out[hit] = cur[hit, na[hit] - 1]
-            prev2, prev = prev, cur
-        return out
-
-    return dp_batch
-
-
-_frechet_dp_batch = _make_frechet_dp_batch()
+    P = len(pax)
+    na = np.array([len(a) for a in pax], dtype=np.int64)
+    nb = np.array([len(b) for b in pbx], dtype=np.int64)
+    N, M = int(na.max()), int(nb.max())
+    d = np.full((P, N, M), np.inf)
+    for p in range(P):
+        ax = np.asarray(pax[p], dtype=np.float64)
+        ay = np.asarray(pay[p], dtype=np.float64)
+        bx = np.asarray(pbx[p], dtype=np.float64)
+        by = np.asarray(pby[p], dtype=np.float64)
+        dx = ax[:, None] - bx[None, :]
+        dy = ay[:, None] - by[None, :]
+        d[p, : na[p], : nb[p]] = np.sqrt(dx * dx + dy * dy)
+    out = np.empty(P, dtype=np.float64)
+    prev = np.full((P, N), np.inf)
+    prev2 = np.full((P, N), np.inf)
+    last = na + nb - 2
+    for k in range(N + M - 1):
+        i_lo, i_hi = max(0, k - M + 1), min(N - 1, k)
+        ii = np.arange(i_lo, i_hi + 1)
+        dk = d[:, ii, k - ii]
+        cur = np.full((P, N), np.inf)
+        if k == 0:
+            cur[:, 0] = dk[:, 0]
+        else:
+            pj = prev[:, ii]  # c(i, j-1): diag k-1, same i
+            iim1 = np.maximum(ii - 1, 0)
+            m1 = (ii >= 1)[None, :]
+            pi = np.where(m1, prev[:, iim1], np.inf)    # c(i-1, j)
+            pij = np.where(m1, prev2[:, iim1], np.inf)  # c(i-1, j-1)
+            cur[:, i_lo : i_hi + 1] = np.maximum(
+                dk, np.minimum(pj, np.minimum(pi, pij))
+            )
+        hit = last == k
+        if hit.any():
+            out[hit] = cur[hit, na[hit] - 1]
+        prev2, prev = prev, cur
+    return out
 
 
 def _frechet_refine_arrow(pairs: DataFrame) -> DataFrame:
@@ -7613,85 +7462,76 @@ _I48B_CELL_MULT = 6.0  # coarse cell = mult * eps (halo overhead ~ 1/mult)
 _I48B_BUCKET = 8       # KD-tree leaf bucket size
 
 
-def _make_kd_kernels():
-    """Factory so the KD-tree kernels pickle BY VALUE into the
-    applyInPandas closure (the _make_dtw discipline)."""
+def _kd_build(x, y, bucket=_I48B_BUCKET):
+    """Array-backed KD-tree with bucket leaves: nodes are tuples
+    ('L', idx) | (axis, median, left, right), split on the wider
+    axis at the median (deterministic — numpy median of the cell's
+    coordinates). Build is O(n log n) per cell; pure numpy + python
+    tuples, no scipy."""
+    import numpy as np
 
-    def kd_build(x, y, bucket=_I48B_BUCKET):
-        """Array-backed KD-tree with bucket leaves: nodes are tuples
-        ('L', idx) | (axis, median, left, right), split on the wider
-        axis at the median (deterministic — numpy median of the cell's
-        coordinates). Build is O(n log n) per cell; pure numpy + python
-        tuples, no scipy."""
-        import numpy as np
+    def rec(idx):
+        if len(idx) <= bucket:
+            return ("L", idx)
+        xs, ys = x[idx], y[idx]
+        axis = 0 if xs.ptp() >= ys.ptp() else 1
+        vals = xs if axis == 0 else ys
+        med = float(np.median(vals))
+        left, right = idx[vals <= med], idx[vals > med]
+        if len(left) == 0 or len(right) == 0:
+            return ("L", idx)
+        return (axis, med, rec(left), rec(right))
 
-        def rec(idx):
-            if len(idx) <= bucket:
-                return ("L", idx)
-            xs, ys = x[idx], y[idx]
-            axis = 0 if xs.ptp() >= ys.ptp() else 1
-            vals = xs if axis == 0 else ys
-            med = float(np.median(vals))
-            left, right = idx[vals <= med], idx[vals > med]
-            if len(left) == 0 or len(right) == 0:
-                return ("L", idx)
-            return (axis, med, rec(left), rec(right))
+    import numpy as np
 
-        import numpy as np
-
-        return rec(np.arange(len(x)))
+    return rec(np.arange(len(x)))
 
 
-    def kd_knn(tree, x, y, ids, qx, qy, qid, k, eps, stats=None):
-        """Branch-and-bound kNN probe with i48's EXACT contract: best-k
-        by (distance, neighbor_id) — ties on distance resolved toward the
-        smaller id, the far subtree explored when the axis distance EQUALS
-        the current bound (an equal-distance smaller-id neighbor may live
-        there), candidates at d == eps included. Distances use the
-        identical IEEE chain as the grid form (dx*dx + dy*dy, then sqrt),
-        so results are bit-identical. ``stats`` (optional 1-element list)
-        accumulates candidates examined."""
-        import bisect
+def _kd_knn(tree, x, y, ids, qx, qy, qid, k, eps, stats=None):
+    """Branch-and-bound kNN probe with i48's EXACT contract: best-k
+    by (distance, neighbor_id) — ties on distance resolved toward the
+    smaller id, the far subtree explored when the axis distance EQUALS
+    the current bound (an equal-distance smaller-id neighbor may live
+    there), candidates at d == eps included. Distances use the
+    identical IEEE chain as the grid form (dx*dx + dy*dy, then sqrt),
+    so results are bit-identical. ``stats`` (optional 1-element list)
+    accumulates candidates examined."""
+    import bisect
 
-        import numpy as np
+    import numpy as np
 
-        best: list = []
+    best: list = []
 
-        def bound():
-            return best[-1][0] if len(best) == k else eps
+    def bound():
+        return best[-1][0] if len(best) == k else eps
 
-        def rec(node):
-            if node[0] == "L":
-                idx = node[1]
-                if stats is not None:
-                    stats[0] += len(idx)
-                dx = qx - x[idx]
-                dy = qy - y[idx]
-                d = np.sqrt(dx * dx + dy * dy)
-                for dist, bid in zip(d.tolist(), ids[idx].tolist()):
-                    if bid == qid or dist > eps:
-                        continue
-                    item = (dist, bid)
-                    if len(best) < k:
-                        bisect.insort(best, item)
-                    elif item < best[-1]:
-                        best.pop()
-                        bisect.insort(best, item)
-                return
-            axis, med, left, right = node
-            qv = qx if axis == 0 else qy
-            near, far = (left, right) if qv <= med else (right, left)
-            rec(near)
-            if abs(qv - med) <= min(eps, bound()):
-                rec(far)
+    def rec(node):
+        if node[0] == "L":
+            idx = node[1]
+            if stats is not None:
+                stats[0] += len(idx)
+            dx = qx - x[idx]
+            dy = qy - y[idx]
+            d = np.sqrt(dx * dx + dy * dy)
+            for dist, bid in zip(d.tolist(), ids[idx].tolist()):
+                if bid == qid or dist > eps:
+                    continue
+                item = (dist, bid)
+                if len(best) < k:
+                    bisect.insort(best, item)
+                elif item < best[-1]:
+                    best.pop()
+                    bisect.insort(best, item)
+            return
+        axis, med, left, right = node
+        qv = qx if axis == 0 else qy
+        near, far = (left, right) if qv <= med else (right, left)
+        rec(near)
+        if abs(qv - med) <= min(eps, bound()):
+            rec(far)
 
-        rec(tree)
-        return best
-
-    return kd_build, kd_knn
-
-
-_kd_build, _kd_knn = _make_kd_kernels()
+    rec(tree)
+    return best
 
 
 def _i48b_impl(
@@ -7723,7 +7563,7 @@ def _i48b_impl(
     def _halo_col():
         # 9-cell halo copies with the rect-distance filter — fixed
         # attribute names (x, y) only, so the Column tree is memoized
-        # per cell_mult (round-11, the _memo_col discipline)
+        # per cell_mult (round-11, the session.memo discipline)
         copies = []
         for dcx in (-1, 0, 1):
             for dcy in (-1, 0, 1):
@@ -7749,7 +7589,7 @@ def _i48b_impl(
     parts = (
         f.select(
             "event_id", "x", "y",
-            _memo_col(f"i48b_halo_{cell_mult!r}", _halo_col),
+            memo(f"i48b_halo_{cell_mult!r}", _halo_col),
         )
         .filter(F.col("c.keep"))
         .select(
@@ -7843,115 +7683,106 @@ _I70_MAX_N = 4  # bounded members per group: 2^N - 1 subsets is the
 # cell (i59's candidate join) with THIS kernel as the per-cell measure
 
 
-def _make_i70_union():
-    """Factory (by-value pickling discipline) for the pure-python
-    N-ary union kernel; module name `_i70_union_area` for tests."""
+def _i70_tri_fan(ring):
+    # CCW-normalized fan triangles with orientation signs
+    a2 = 0.0
+    n = len(ring)
+    for i in range(n):
+        x1, y1 = ring[i]
+        x2, y2 = ring[(i + 1) % n]
+        a2 += x1 * y2 - x2 * y1
+    if a2 < 0:
+        ring = ring[::-1]
+    tris = []
+    for i in range(1, len(ring) - 1):
+        t = (ring[0], ring[i], ring[i + 1])
+        cross = (t[1][0] - t[0][0]) * (t[2][1] - t[0][1]) - (
+            t[2][0] - t[0][0]
+        ) * (t[1][1] - t[0][1])
+        if cross == 0.0:
+            continue
+        s = 1.0 if cross > 0 else -1.0
+        # store CCW-oriented vertices for the half-plane tests
+        tris.append((s, t if cross > 0 else (t[0], t[2], t[1])))
+    return tris
 
-    def tri_fan(ring):
-        # CCW-normalized fan triangles with orientation signs
-        a2 = 0.0
-        n = len(ring)
-        for i in range(n):
-            x1, y1 = ring[i]
-            x2, y2 = ring[(i + 1) % n]
-            a2 += x1 * y2 - x2 * y1
-        if a2 < 0:
-            ring = ring[::-1]
-        tris = []
-        for i in range(1, len(ring) - 1):
-            t = (ring[0], ring[i], ring[i + 1])
-            cross = (t[1][0] - t[0][0]) * (t[2][1] - t[0][1]) - (
-                t[2][0] - t[0][0]
-            ) * (t[1][1] - t[0][1])
-            if cross == 0.0:
-                continue
-            s = 1.0 if cross > 0 else -1.0
-            # store CCW-oriented vertices for the half-plane tests
-            tris.append((s, t if cross > 0 else (t[0], t[2], t[1])))
-        return tris
-
-    def clip_area(tup):
-        # area of the intersection of CCW triangles tup[0..k-1]:
-        # clip the first by every edge of the rest (convex chain)
-        poly = list(tup[0])
-        for tri in tup[1:]:
-            for e in range(3):
-                e1, e2 = tri[e], tri[(e + 1) % 3]
-                dx, dy = e2[0] - e1[0], e2[1] - e1[1]
-                out = []
-                m = len(poly)
-                if m == 0:
-                    return 0.0
-                for i in range(m):
-                    v1, v2 = poly[i], poly[(i + 1) % m]
-                    in1 = dx * (v1[1] - e1[1]) - dy * (v1[0] - e1[0]) >= 0
-                    in2 = dx * (v2[1] - e1[1]) - dy * (v2[0] - e1[0]) >= 0
-                    if in1 and in2:
+def _i70_clip_area(tup):
+    # area of the intersection of CCW triangles tup[0..k-1]:
+    # clip the first by every edge of the rest (convex chain)
+    poly = list(tup[0])
+    for tri in tup[1:]:
+        for e in range(3):
+            e1, e2 = tri[e], tri[(e + 1) % 3]
+            dx, dy = e2[0] - e1[0], e2[1] - e1[1]
+            out = []
+            m = len(poly)
+            if m == 0:
+                return 0.0
+            for i in range(m):
+                v1, v2 = poly[i], poly[(i + 1) % m]
+                in1 = dx * (v1[1] - e1[1]) - dy * (v1[0] - e1[0]) >= 0
+                in2 = dx * (v2[1] - e1[1]) - dy * (v2[0] - e1[0]) >= 0
+                if in1 and in2:
+                    out.append(v2)
+                elif in1 or in2:
+                    t = (
+                        (e1[0] - v1[0]) * (e1[1] - e2[1])
+                        - (e1[1] - v1[1]) * (e1[0] - e2[0])
+                    ) / (
+                        (v2[0] - v1[0]) * (e1[1] - e2[1])
+                        - (v2[1] - v1[1]) * (e1[0] - e2[0])
+                    )
+                    ip = (
+                        v1[0] + t * (v2[0] - v1[0]),
+                        v1[1] + t * (v2[1] - v1[1]),
+                    )
+                    out.append(ip)
+                    if in2:
                         out.append(v2)
-                    elif in1 or in2:
-                        t = (
-                            (e1[0] - v1[0]) * (e1[1] - e2[1])
-                            - (e1[1] - v1[1]) * (e1[0] - e2[0])
-                        ) / (
-                            (v2[0] - v1[0]) * (e1[1] - e2[1])
-                            - (v2[1] - v1[1]) * (e1[0] - e2[0])
-                        )
-                        ip = (
-                            v1[0] + t * (v2[0] - v1[0]),
-                            v1[1] + t * (v2[1] - v1[1]),
-                        )
-                        out.append(ip)
-                        if in2:
-                            out.append(v2)
-                poly = out
-        if len(poly) < 3:
-            return 0.0
-        acc = 0.0
-        for i in range(len(poly)):
-            x1, y1 = poly[i]
-            x2, y2 = poly[(i + 1) % len(poly)]
-            acc += x1 * y2 - x2 * y1
-        return abs(acc) / 2.0
+            poly = out
+    if len(poly) < 3:
+        return 0.0
+    acc = 0.0
+    for i in range(len(poly)):
+        x1, y1 = poly[i]
+        x2, y2 = poly[(i + 1) % len(poly)]
+        acc += x1 * y2 - x2 * y1
+    return abs(acc) / 2.0
 
-    def inter_area(fans):
-        # sum over fan tuples of sign-product * triangle-tuple area
-        from itertools import product
+def _i70_inter_area(fans):
+    # sum over fan tuples of sign-product * triangle-tuple area
+    from itertools import product
 
-        total = 0.0
-        for tup in product(*fans):
-            s = 1.0
-            for sign, _ in tup:
-                s *= sign
-            total += s * clip_area([t for _, t in tup])
-        return total
+    total = 0.0
+    for tup in product(*fans):
+        s = 1.0
+        for sign, _ in tup:
+            s *= sign
+        total += s * _i70_clip_area([t for _, t in tup])
+    return total
 
-    def union_area(rings):
-        """Exact union area of up to _I70_MAX_N simple rings by
-        inclusion-exclusion over subset intersections, each expanded
-        through the signed triangle-fan identity. Deterministic:
-        subsets and fan tuples enumerate in fixed lexicographic
-        order."""
-        from itertools import combinations
+def _i70_union_area(rings):
+    """Exact union area of up to _I70_MAX_N simple rings by
+    inclusion-exclusion over subset intersections, each expanded
+    through the signed triangle-fan identity. Deterministic:
+    subsets and fan tuples enumerate in fixed lexicographic
+    order."""
+    from itertools import combinations
 
-        rings = [r for r in rings if len(r) >= 3]
-        if not rings:
-            return 0.0
-        if len(rings) > _I70_MAX_N:
-            raise ValueError(
-                f"cascaded union bounded at N={_I70_MAX_N} members"
-            )
-        fans = [tri_fan(r) for r in rings]
-        total = 0.0
-        for k in range(1, len(rings) + 1):
-            sgn = 1.0 if k % 2 == 1 else -1.0
-            for sub in combinations(range(len(rings)), k):
-                total += sgn * inter_area([fans[i] for i in sub])
-        return total
-
-    return union_area
-
-
-_i70_union_area = _make_i70_union()
+    rings = [r for r in rings if len(r) >= 3]
+    if not rings:
+        return 0.0
+    if len(rings) > _I70_MAX_N:
+        raise ValueError(
+            f"cascaded union bounded at N={_I70_MAX_N} members"
+        )
+    fans = [_i70_tri_fan(r) for r in rings]
+    total = 0.0
+    for k in range(1, len(rings) + 1):
+        sgn = 1.0 if k % 2 == 1 else -1.0
+        for sub in combinations(range(len(rings)), k):
+            total += sgn * _i70_inter_area([fans[i] for i in sub])
+    return total
 
 
 @register("i70_cascaded_union_area", oracle=None, section="I70")

@@ -381,22 +381,7 @@ def m8_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     store keeps."""
     from decimal import Decimal
 
-    # Plain-string capture so the by-value-pickled closure can import
-    # the shared fold on executors whose PYTHONPATH lacks the package
-    # (the driver contract runs from an arbitrary cwd — k13's pattern).
-    import os as _os
-
-    pkg_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-
     def fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        import sys
-
-        if pkg_root not in sys.path:  # executor-side, see note above
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.operators.udf_ops import _m8_fold
-
         pdf = pdf.sort_values(["ts", "event_id"])
         ts_ms = pdf["ts"].astype("datetime64[ms]").astype("int64").tolist()
         vals = [repr(float(v)) for v in pdf["value"]]

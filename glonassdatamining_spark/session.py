@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -102,3 +103,30 @@ def get_spark(app_name: str = "glonassdatamining-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+_memo_sc: SparkContext | None = None
+_memo: dict = {}
+
+
+def memo(key, build):
+    """The package's one memo for driver-side handles bound to a
+    running application: Column plan fragments, pandas UDF objects,
+    persisted hot tables. Returns ``build()``'s value for ``key``,
+    building it on the first call.
+
+    Lifetime rule: entries live exactly as long as their application.
+    The memo is keyed on the active ``SparkContext``; the first call
+    under a different context (a ``spark.stop()`` then a new session
+    in the same process) drops every entry held for the old one, so
+    no handle outlives the context it was built against. A hit
+    compares the Python context object only and costs no py4j call.
+    Plan construction only: never cache a query's result here."""
+    global _memo_sc
+    sc = SparkContext._active_spark_context
+    if sc is not _memo_sc:
+        _memo.clear()
+        _memo_sc = sc
+    if key not in _memo:
+        _memo[key] = build()
+    return _memo[key]

@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from glonassdatamining_spark.session import memo
+
 TABLES = (
     "region",
     "nation",
@@ -118,9 +120,6 @@ def _split_copy(spark: SparkSession, sf_dir: str, name: str) -> str:
     return base
 
 
-_TABLE_CACHE: dict = {}
-
-
 def _cached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Hot-table mode (``SPARK_GRAFT_CACHE_TABLES=1`` — bench only):
     serve each fixture table from Spark's in-memory columnar cache,
@@ -133,15 +132,18 @@ def _cached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     decodes once and makes every downstream stage fully parallel —
     exactly Spark's own `spark.catalog.cacheTable` hot-data pattern.
     Correctness runs (driver + pytest) never set the env var: they
-    keep the plain scan with real pushdown/pruning."""
-    key = (sf_dir, name)
-    if key not in _TABLE_CACHE:
+    keep the plain scan with real pushdown/pruning. The persisted
+    frame lives in ``session.memo``, so it is dropped with the
+    application that cached it."""
+
+    def build() -> DataFrame:
         df = _scan(spark, sf_dir, name).repartition(
             spark.sparkContext.defaultParallelism
         )
         df.persist()
-        _TABLE_CACHE[key] = df
-    return _TABLE_CACHE[key]
+        return df
+
+    return memo(("table", sf_dir, name), build)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -53,16 +53,10 @@ sink = exactly-once end to end, proven hash-exact by the l16 declared
 query (bus source → sink → manifest-gated read-back → closed-form
 oracle).
 
-PICKLING CONSTRAINT (why the classes live inside factory functions):
-Spark runs Python data-source creation and executor reads/writes in
-separate Python WORKER processes that inherit only the environment —
-not the driver's ``sys.path`` inserts — so a module-level class would
-be cloudpickled BY REFERENCE and die with ModuleNotFoundError under
-the driver contract (arbitrary cwd, no PYTHONPATH). Defining the
-classes in function scope makes cloudpickle serialize them BY VALUE,
-self-contained; on a real cluster ``--py-files`` would make module
-scope work too, but by-value is the form that works everywhere (same
-reasoning as a17's in-function batch source).
+PICKLING: Spark runs Python data-source creation and executor
+reads/writes in separate Python WORKER processes that cannot import
+this package; the classes travel by value under the package's
+shipping rule (see the package docstring), like every kernel.
 
 Record payload is the deterministic GNSS-fix arithmetic of a17's
 batch source (msg_id = off·P + part; x/y from the 7919/104729
@@ -86,8 +80,7 @@ BUS_SCHEMA = "part INT, off BIGINT, msg_id BIGINT, obj_id BIGINT, x DOUBLE, y DO
 def fix_tuple(part: int, off: int, n_parts: int) -> tuple:
     """The pure (partition, offset) → record function: the log's
     content, same arithmetic as a17's batch generator. (Driver-side
-    convenience twin of the inlined arithmetic in the reader — the
-    reader can't reference this module, see the pickling note.)"""
+    convenience twin of the arithmetic inlined in the reader.)"""
     msg_id = off * n_parts + part
     return (
         part,

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from glonassdatamining_spark.operators.udf_ops import _M8_GAP_MS, _m8_fold
 from glonassdatamining_spark.stable import dsum
 
 _EVENTS_STREAM_SCHEMA = (
@@ -269,8 +270,6 @@ def m8_streaming(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from glonassdatamining_spark.operators.udf_ops import _M8_GAP_MS, _m8_fold
-
     if split_files > 1:
         import pyarrow.parquet as pq
 
@@ -308,17 +307,7 @@ def m8_streaming(
             }
         )
 
-    pkg_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )  # k13's worker-side import pattern — see operators/llm_ops.py
-
     def sessions(key, pdfs, state: GroupState):
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        from glonassdatamining_spark.operators.udf_ops import _m8_fold
-
         (user_id,) = key
         if state.hasTimedOut:
             start, last, n, tot = state.get

@@ -284,16 +284,22 @@ def test_degenerate_geometries_yield_null_not_error(spark):
 
 
 def _segs_col(m):
-    """pts array<struct<x,y>> → segs array; mirrors the i31 kernel."""
+    """pts array<struct<x,y>> → segs array; mirrors the i31 kernel
+    (a path of fewer than 2 points has no segments)."""
     n = F.size(F.col("pts"))
-    return F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("pts"), i).x.alias("x1"),
-            F.element_at(F.col("pts"), i).y.alias("y1"),
-            F.element_at(F.col("pts"), i + 1).x.alias("x2"),
-            F.element_at(F.col("pts"), i + 1).y.alias("y2"),
+    return F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.struct(
+                F.element_at(F.col("pts"), i).x.alias("x1"),
+                F.element_at(F.col("pts"), i).y.alias("y1"),
+                F.element_at(F.col("pts"), i + 1).x.alias("x2"),
+                F.element_at(F.col("pts"), i + 1).y.alias("y2"),
+            ),
         ),
+    ).otherwise(
+        F.array().cast("array<struct<x1:double,y1:double,x2:double,y2:double>>")
     )
 
 
@@ -317,13 +323,14 @@ def _pair_scan(pred):
 
 
 def test_i31_arrow_engine_bit_identical_to_hof(spark):
-    """The numpy pair-scan kernel (round-11 default engine) vs the
-    in-row HOF pair scan: identical per-object crossing counts on the
-    fixture corpus, and identical counts on adversarial synthetic
-    polylines (collinear touches, shared endpoints, vertical/
-    horizontal overlaps, degenerate <3-segment paths) fed through the
-    kernel directly against the Catalyst predicate."""
+    """i31's numpy pair-scan kernel vs the in-row HOF pair scan
+    (``_segs_col`` + ``_pair_scan``): identical per-object crossing
+    counts on the fixture corpus, and identical counts on adversarial
+    synthetic polylines (collinear touches, shared endpoints,
+    vertical/horizontal overlaps, degenerate <3-segment paths) fed
+    through the kernel directly against the Catalyst predicate."""
     from glonassdatamining_spark.operators.spatiotemporal import (
+        fixes,
         i31_crossings_np,
         i31_path_self_intersections,
     )
@@ -331,15 +338,18 @@ def test_i31_arrow_engine_bit_identical_to_hof(spark):
 
     a = {
         r.obj_id: r.n_crossings
-        for r in i31_path_self_intersections(
-            spark, SF_DIR, engine="arrow"
-        ).collect()
+        for r in i31_path_self_intersections(spark, SF_DIR).collect()
     }
+    traj = fixes(spark, SF_DIR).groupBy("obj_id").agg(
+        F.array_sort(
+            F.collect_list(F.struct("ts", "event_id", "x", "y"))
+        ).alias("pts")
+    )
     h = {
         r.obj_id: r.n_crossings
-        for r in i31_path_self_intersections(
-            spark, SF_DIR, engine="hof"
-        ).collect()
+        for r in traj.select("obj_id", _segs_col(None).alias("segs"))
+        .select("obj_id", _pair_scan(G.segments_intersect).alias("n_crossings"))
+        .collect()
     }
     assert a and a == h
 
@@ -1222,7 +1232,8 @@ def test_i60_arrow_engine_bit_identical_to_hof(spark):
 def test_i33_arrow_engine_bit_identical_to_hof(spark):
     """The i33 Arrow parse+measure kernel (round-11,
     codecs.wkb_polygon_even_odd_area) vs the pure-Catalyst WKB parse
-    + st_area_multiring chain: EXACT == on every double — the kernel
+    (``_hole_rings_frame``, i34's input) + st_area_multiring chain:
+    EXACT == on every double — the kernel
     replays the identical IEEE left-to-right shoelace fold, so any
     difference means the parsers or the fold order diverged. Also
     exercises the kernel's null contract directly on malformed bytes
@@ -1236,15 +1247,13 @@ def test_i33_arrow_engine_bit_identical_to_hof(spark):
 
     a = {
         r.obj_id: r.area
-        for r in st.i33_wkb_polygon_hole_area(
-            spark, SF_DIR, engine="arrow"
-        ).collect()
+        for r in st.i33_wkb_polygon_hole_area(spark, SF_DIR).collect()
     }
     h = {
         r.obj_id: r.area
-        for r in st.i33_wkb_polygon_hole_area(
-            spark, SF_DIR, engine="hof"
-        ).collect()
+        for r in st._hole_rings_frame(spark, SF_DIR)
+        .select("obj_id", G.st_area_multiring(F.col("rings")).alias("area"))
+        .collect()
     }
     assert a and a == h
     ok = pack_wkb_polygon([[(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)]])
@@ -1542,12 +1551,13 @@ def test_i67_matches_python_reference_and_anchor_invariance(spark):
 
 
 def test_i67_arrow_engine_bit_identical_to_hof(spark):
-    """The numpy fence-predicate kernel (round-11 default engine) vs
-    the Catalyst textual-twin SQL predicate: PER-POINT boolean
-    equality for every fence (not just the aggregated counts — a
-    count comparison could mask cancelling flips), plus the declared
-    3-row outputs of both engines. The kernel replays the SQL text's
-    exact IEEE op sequence, so any mismatch means divergence."""
+    """The numpy fence-predicate kernel vs the Catalyst textual-twin
+    SQL predicate (``_i67_inside_sql``, the oracle's text): PER-POINT
+    boolean equality for every fence (not just the aggregated counts —
+    a count comparison could mask cancelling flips), plus the declared
+    3-row output vs the same counts taken over the SQL predicate. The
+    kernel replays the SQL text's exact IEEE op sequence, so any
+    mismatch means divergence."""
     from glonassdatamining_spark.operators.spatiotemporal import (
         _I67_FENCES,
         _i67_flags_udf,
@@ -1576,11 +1586,14 @@ def test_i67_arrow_engine_bit_identical_to_hof(spark):
     for r in both:
         for z in _I67_FENCES:
             assert r[f"a_{z}"] == r[f"h_{z}"], (r.obj_id, z)
-    a = sorted(
-        map(tuple, i67_spherical_geofence(spark, SF_DIR, engine="arrow").collect())
-    )
+    a = sorted(map(tuple, i67_spherical_geofence(spark, SF_DIR).collect()))
     h = sorted(
-        map(tuple, i67_spherical_geofence(spark, SF_DIR, engine="hof").collect())
+        (
+            z,
+            sum(1 for r in both if r[f"h_{z}"]),
+            len({r.obj_id for r in both if r[f"h_{z}"]}),
+        )
+        for z in _I67_FENCES
     )
     assert a and a == h
 

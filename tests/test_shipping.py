@@ -1,0 +1,256 @@
+"""The package's shipping rule and memo lifetime.
+
+Python kernels travel to workers by value (the package registers
+itself with cloudpickle in ``__init__``), so no module may patch
+``sys.path`` for workers or wrap kernels in ``_make_*`` factories to
+force by-value pickling. Driver-side handles go through the one
+``session.memo`` and live exactly as long as their application.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import pathlib
+import subprocess
+import sys
+import tempfile
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PKG = REPO / "glonassdatamining_spark"
+
+
+def _sys_aliases(tree: ast.AST) -> set[str]:
+    names = {"sys"}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names |= {a.asname or a.name for a in node.names if a.name == "sys"}
+    return names
+
+
+def _is_sys_path(node: ast.AST, aliases: set[str]) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "path"
+        and isinstance(node.value, ast.Name)
+        and node.value.id in aliases
+    )
+
+
+def _sys_path_mutations(tree: ast.AST) -> list[int]:
+    """Lines that call a method on ``sys.path`` or assign to it (or to
+    an item or slice of it). ``from sys import path`` counts as well."""
+    aliases = _sys_aliases(tree)
+    lines = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "sys":
+            if any(a.name == "path" for a in node.names):
+                lines.append(node.lineno)
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if _is_sys_path(node.func.value, aliases):
+                lines.append(node.lineno)
+        elif isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Subscript):
+                    t = t.value
+                if _is_sys_path(t, aliases):
+                    lines.append(node.lineno)
+    return sorted(lines)
+
+
+def _own_nodes(fn: ast.AST):
+    """Nodes of ``fn``'s body, not descending into nested scopes."""
+    stack = list(ast.iter_child_nodes(fn))
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+        ):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _closure_factories(tree: ast.AST) -> list[tuple[int, str]]:
+    """``*_make_*``/``make_*`` functions that return a function or
+    lambda defined inside them (returning what such a function
+    computes, or a class, is fine)."""
+    found = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if "_make_" not in fn.name and not fn.name.startswith("make_"):
+            continue
+        own = list(_own_nodes(fn))
+        inner = {
+            n.name
+            for n in own
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        for ret in (n for n in own if isinstance(n, ast.Return)):
+            if ret.value is None:
+                continue
+            called = {
+                id(c.func) for c in ast.walk(ret.value) if isinstance(c, ast.Call)
+            }
+            for v in ast.walk(ret.value):
+                if isinstance(v, ast.Lambda) or (
+                    isinstance(v, ast.Name) and v.id in inner and id(v) not in called
+                ):
+                    found.append((fn.lineno, fn.name))
+                    break
+    return found
+
+
+def _lru_caches(tree: ast.AST) -> list[int]:
+    """Lines that use ``functools.lru_cache``/``functools.cache``: the
+    package has one memo, ``session.memo``."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if (isinstance(node, ast.Attribute) and node.attr in ("lru_cache", "cache")
+            and isinstance(node.value, ast.Name) and node.value.id == "functools")
+        or (isinstance(node, ast.ImportFrom) and node.module == "functools"
+            and any(a.name in ("lru_cache", "cache") for a in node.names))
+    ]
+
+
+def test_guard_detects_each_violation():
+    bad = ast.parse(
+        "import sys as _s\n"
+        "import functools\n"
+        "def f():\n"
+        "    _s.path.insert(0, 'x')\n"
+        "    sys.path[:0] = ['y']\n"
+        "    sys.path += ['z']\n"
+        "def _make_k():\n"
+        "    def k(x):\n"
+        "        return x\n"
+        "    return k\n"
+        "def _make_l():\n"
+        "    return lambda x: x\n"
+        "def _d47_make_k():\n"
+        "    def k(x):\n"
+        "        return x\n"
+        "    return (k, 1)\n"
+        "def _make_ok():\n"
+        "    def helper():\n"
+        "        return 1\n"
+        "    return helper()\n"
+        "@functools.lru_cache(maxsize=2)\n"
+        "def g():\n"
+        "    return 1\n"
+    )
+    assert _sys_path_mutations(bad) == [4, 5, 6]
+    assert sorted(_closure_factories(bad)) == [
+        (7, "_make_k"), (11, "_make_l"), (13, "_d47_make_k")
+    ]
+    assert _lru_caches(bad) == [21]
+
+
+def test_package_has_one_shipping_rule_and_one_memo():
+    """Walks the AST of every module of the package: no ``sys.path``
+    mutation, no ``*_make_*``/``make_*`` factory returning a closure
+    kernel, no ``functools`` cache beside ``session.memo``."""
+    mods = sorted(PKG.rglob("*.py"))
+    assert len(mods) > 20
+    problems = []
+    for path in mods:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(REPO)
+        problems += [f"{rel}:{ln}: sys.path mutated" for ln in _sys_path_mutations(tree)]
+        problems += [
+            f"{rel}:{ln}: {name} returns a closure kernel"
+            for ln, name in _closure_factories(tree)
+        ]
+        problems += [f"{rel}:{ln}: functools cache" for ln in _lru_caches(tree)]
+    assert problems == []
+
+
+_RESTART_SCRIPT = r"""
+import sys
+sys.path.insert(0, {repo!r})
+
+import duckdb
+from glonassdatamining_spark import registry
+from glonassdatamining_spark.session import get_spark
+from tests.conftest import EMPTY_AT_SMOKE, compare_frames
+
+SF = {sf!r}
+NAMES = {names!r}
+queries, oracles = registry.all_queries(), registry.all_oracles()
+con = duckdb.connect()
+for t in ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"):
+    con.execute(
+        f"CREATE VIEW {{t}} AS SELECT * FROM read_parquet('{{SF}}/{{t}}.parquet')"
+    )
+
+
+def run_all():
+    spark = get_spark("shipping-test")
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark, {{name: queries[name](spark, SF).toPandas() for name in NAMES}}
+
+
+spark, first = run_all()
+spark.stop()
+for name in NAMES:
+    assert len(first[name]) or name in EMPTY_AT_SMOKE, name
+    if name in oracles:
+        compare_frames(first[name], con.execute(oracles[name]).fetchdf(), name)
+spark, second = run_all()
+for name in NAMES:
+    compare_frames(second[name], first[name], name + " after restart")
+spark.stop()
+print("ok", len(NAMES))
+"""
+
+# One query per former shipping discipline, plus the memo's users:
+# i31/i67 (pandas_udf singletons), i33/k13/k37/k40 (in-closure
+# sys.path shims), m8 (applyInPandas shim), d47 (pickling factory),
+# i30/i57 (memoized Columns), q1 (hot-table cache). Every query that
+# reads lineitem after the restart fails where the hot-table cache
+# outlives its session.
+_RESTART_QUERIES = (
+    "i31_path_self_intersections",
+    "i67_spherical_geofence",
+    "i33_wkb_polygon_hole_area",
+    "k13_multimodal_decode",
+    "k37_wav_audio_stats",
+    "k40_video_frame_stats",
+    "m8_stateful_sessions",
+    "d47_tdigest_quantile_rollup",
+    "i30_polygon_intersect_pairs",
+    "i57_zone_overlay_area",
+    "q1_pricing_summary",
+)
+
+
+def test_kernels_ship_to_workers_that_cannot_import_the_package():
+    """A fresh driver in a temp cwd with ``PYTHONPATH`` unset (its
+    Python workers cannot import the package) and hot-table mode on
+    runs one query per former shipping discipline, stops the session,
+    starts a new one in the same process and runs them all again:
+    both passes match the DuckDB oracle where there is one, and the
+    second pass equals the first."""
+    from tests.conftest import SF_DIR
+
+    script = _RESTART_SCRIPT.format(repo=str(REPO), sf=SF_DIR, names=_RESTART_QUERIES)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        SPARK_GRAFT_CACHE_TABLES="1",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="2g",
+    )
+    with tempfile.TemporaryDirectory() as cwd:
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=cwd,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+    assert proc.returncode == 0, proc.stdout[-3000:] + proc.stderr[-6000:]
+    assert proc.stdout.strip().endswith(f"ok {len(_RESTART_QUERIES)}")
