@@ -159,10 +159,18 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     headline = pick_headline()
+    # Generated classes compiled per round (sidecar only; read between
+    # rounds, outside every query's timed region): the warm-up compiles
+    # the headline set's working set, and a warm session should
+    # compile next to nothing after it.
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount
+    c0 = compiled()
     # Warm-up pass (untimed): JIT, IO, and the bench-mode projection
     # caches (fixes()/padded/prepared frames) all materialize here.
     for name in headline:
         materialize(queries[name](spark, sf_dir))
+    compiles_warmup = compiled() - c0
 
     # Interleaved min-of-N: repetitions run ROUND-ROBIN across the
     # whole headline set instead of back-to-back per query. The shared
@@ -177,13 +185,16 @@ def main() -> None:
     # ~1 s each) so their min rests on 6 well-separated draws.
     EXTRA_ROUNDS = {"k8_langid_heuristic", "i12_hotspot_zscore"}
     best: dict[str, float] = {n: float("inf") for n in headline}
+    compiles_per_round: list[int] = []
     for rnd in range(N_ROUNDS + 2):
+        c0 = compiled()
         for name in headline:
             if rnd >= N_ROUNDS and name not in EXTRA_ROUNDS:
                 continue
             t0 = time.perf_counter()
             materialize(queries[name](spark, sf_dir))
             best[name] = min(best[name], time.perf_counter() - t0)
+        compiles_per_round.append(compiled() - c0)
     timings = {name: round(best[name], 3) for name in headline}
 
     # Cold-rep pass (round-6 verdict ask #6): for the queries whose
@@ -282,6 +293,8 @@ def main() -> None:
                     "n_queries": len(timings),
                     "queries": timings,
                     "cold": cold,
+                    "codegen_compiles_warmup": compiles_warmup,
+                    "codegen_compiles_per_round": compiles_per_round,
                     "total": total,
                     "value": total,
                     "sf": sf_val,

@@ -24,26 +24,29 @@ _CC_LOG = logging.getLogger("glonassdatamining_spark.cc")
 
 # Scale-adaptive partition sizing for iterative kernel STATE (round-11
 # optimization, guide §2.2 "fewer, larger reduce partitions"): frontier
-# / distance frames are often thousands of rows at fixture scales yet
-# inherit the core-count shuffle partitioning, so every one of a
-# kernel's dozens of tiny jobs pays a core-count task launch. Partition
-# count derives from DATA via one bounded limit-count
-# (ceil(n / _ROWS_PER_PART), capped at defaultParallelism) — at scale
-# the cap binds and parallelism is unchanged. Env-tunable for clusters.
-# (Same pattern as operators/graphs.py:_adaptive_parts; duplicated here
-# because operators/* imports api, not the reverse.)
+# / distance / edge frames are often thousands of rows at fixture
+# scales yet inherit the core-count shuffle partitioning, so every one
+# of a kernel's dozens of tiny jobs pays a core-count task launch.
+# Partition count derives from DATA (ceil(n / _ROWS_PER_PART), capped
+# at defaultParallelism) — at scale the cap binds and parallelism is
+# unchanged. Env-tunable for clusters. The one sizing rule for every
+# iterative operator: operators/* import it from here.
 _ROWS_PER_PART = int(
     __import__("os").environ.get("SPARK_GRAFT_STATE_ROWS_PER_PART", "100000")
 )
 
 
 def adaptive_partitions(df: DataFrame) -> int:
-    """ceil(bounded_count / _ROWS_PER_PART) in [1, defaultParallelism].
-    Call on a CHECKPOINTED frame — the probe is one bounded job."""
+    """ceil(rows / _ROWS_PER_PART) in [1, defaultParallelism].
+
+    Call on a CHECKPOINTED frame: the probe is a plain ``count()`` of
+    its materialized blocks (per-partition partial counts, no row
+    shuffle). Its plan compiles to the same code on every call, so a
+    warm session reuses the cached classes; a ``limit(cap).count()``
+    probe compiled new classes on every call, because Spark names
+    each codegen'd limit counter from a JVM-global sequence."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    cap = _ROWS_PER_PART * par
-    n = df.limit(cap).count()
-    return max(1, min(par, -(-n // _ROWS_PER_PART)))
+    return max(1, min(par, -(-df.count() // _ROWS_PER_PART)))
 
 
 # --------------------------------------------------------------------------

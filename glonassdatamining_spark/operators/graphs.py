@@ -24,35 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from glonassdatamining_spark.api import adaptive_partitions
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.sources import load
 
 _MIN_COOCCUR_CC = 3  # sparse graph → small components (oracle-friendly)
 _MIN_COOCCUR = 2  # denser graph for triangle counting / PageRank
-
-# Scale-adaptive partition sizing for ITERATIVE graph state (round-11,
-# guide §2.2 "fewer, larger reduce partitions"): the co-purchase graph
-# is thousands of edges at fixture scales, yet every per-round frame
-# inherited spark.sql.shuffle.partitions (= core count) — each of the
-# ~dozen tiny jobs an iterative kernel runs paid 32-96 task launches
-# for rows that fit in one. Partition count derives from DATA SIZE via
-# one bounded limit-count (ceil(n / _ROWS_PER_PART), capped at
-# defaultParallelism), so big graphs keep full parallelism — at 100 TB
-# the cap binds and behavior is unchanged — while small state collapses
-# to a few tasks. Parameterized via env for cluster tuning.
-_ROWS_PER_PART = int(
-    __import__("os").environ.get("SPARK_GRAFT_GRAPH_ROWS_PER_PART", "100000")
-)
-
-
-def _adaptive_parts(df: DataFrame) -> int:
-    """ceil(bounded_count / _ROWS_PER_PART) in [1, defaultParallelism].
-    Call on a CHECKPOINTED frame — the probe is one bounded job."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    cap = _ROWS_PER_PART * par
-    n = df.limit(cap).count()
-    return max(1, min(par, -(-n // _ROWS_PER_PART)))
-
 
 def _copurchase_edges(
     spark: SparkSession,
@@ -110,11 +87,11 @@ def _edges_ckpt(
     partition count (guide §2.2): the fixture graph is a few thousand
     edges yet the checkpoint inherits the pair-count groupBy's
     core-count partitioning, so every downstream stage paid ~32 task
-    launches for rows that fit in one. `_adaptive_parts` caps at
-    defaultParallelism — at 100 TB the cap binds and parallelism is
+    launches for rows that fit in one. `api.adaptive_partitions` caps
+    at defaultParallelism — at 100 TB the cap binds and parallelism is
     unchanged; coalesce is narrow (no shuffle, no value change)."""
     e = _copurchase_edges(spark, sf_dir, min_cooccur, weighted).localCheckpoint()
-    return e.coalesce(_adaptive_parts(e))
+    return e.coalesce(adaptive_partitions(e))
 
 
 _EDGES_SQL_CC = (
@@ -1168,7 +1145,7 @@ def _modularity_by_community(e: DataFrame, lab: DataFrame) -> DataFrame:
     0.76 s noop-exec; values verified identical): at fixture scale the
     fold is stage-pacing-bound, not scan-bound, and the extra
     checkpoint/window stages cost more than the second tiny e-scan
-    saves. Kept as-is; the per-call ``_adaptive_parts`` probe IS
+    saves. Kept as-is; the per-call ``adaptive_partitions`` probe IS
     removed (both callers pass a checkpointed, adaptively-coalesced
     edge list already — one bounded job less per call)."""
     if "d" not in lab.columns:
@@ -1303,9 +1280,9 @@ def _n18_labels(e: DataFrame) -> DataFrame:
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
     # size every per-round frame to the graph, not the core count
-    # (guide §2.2; see _adaptive_parts) — coalesce on the checkpointed
-    # frame is narrow (no shuffle)
-    n_parts = _adaptive_parts(sym)
+    # (guide §2.2; see api.adaptive_partitions) — coalesce on the
+    # checkpointed frame is narrow (no shuffle)
+    n_parts = adaptive_partitions(sym)
     sym = sym.coalesce(n_parts)
     nodes = (
         sym.select("src").distinct().coalesce(n_parts).localCheckpoint()

@@ -7056,15 +7056,28 @@ def i67_spherical_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px", "py", "pz",
         *[fl.getField(z).alias(f"_in_{z}") for z in _I67_FENCES],
     )
+    # Per-object inside counts first, then one global aggregate: an
+    # object counts for a fence when it has an inside point and a
+    # non-NULL id (COUNT(DISTINCT CASE ... THEN obj_id END)'s NULL
+    # semantics). Three countDistinct compiled to an Expand whose
+    # aggregate arguments Spark orders differently on every run, so
+    # each run generated new classes that no codegen cache could hit.
+    per_obj = p.groupBy("obj_id").agg(
+        *[
+            F.sum(F.col(f"_in_{zone}").cast("bigint")).alias(f"c_{zone}")
+            for zone in _I67_FENCES
+        ]
+    )
     aggs = []
     for zone in _I67_FENCES:
+        c = F.col(f"c_{zone}")
         aggs += [
-            F.sum(F.col(f"_in_{zone}").cast("bigint")).alias(f"n_{zone}"),
-            F.countDistinct(
-                F.when(F.col(f"_in_{zone}"), F.col("obj_id"))
-            ).alias(f"o_{zone}"),
+            F.sum(c).alias(f"n_{zone}"),
+            F.count(F.when((c > 0) & F.col("obj_id").isNotNull(), 1)).alias(
+                f"o_{zone}"
+            ),
         ]
-    r = p.agg(*aggs)
+    r = per_obj.agg(*aggs)
     # One wide row → 3 output rows via stack (round-11, guide §2.2):
     # the old 3-arm union re-selected from `r` per arm, and a
     # non-exchange subtree is NOT reused across union branches — the

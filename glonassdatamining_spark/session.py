@@ -101,6 +101,22 @@ def get_spark(app_name: str = "glonassdatamining-spark") -> SparkSession:
         # beats DuckDB-divergent silent NULLs in the oracle compare.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache sized to the engine's working set, so a
+        # session compiles each plan once. Spark's default holds 100
+        # classes. bench.py's 74 headline queries compile 1,038
+        # distinct ones at sf0.1 and perfbench's query_mix ~100; both
+        # loops round-robin over their queries, so with the default
+        # every round evicted what the next query needed and
+        # recompiled ~96% of its classes. 4096 leaves headroom over
+        # the whole headline set. A fixed constant, not an option: no
+        # caller needs another size.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Name whole-stage classes without their stage id. AQE numbers
+        # stages in the order concurrent shuffle stages finish, so the
+        # same plan's classes came out renumbered on some runs and,
+        # their source text differing only in the name, missed the
+        # cache (k43 and n8b each recompiled 6-16 classes on 1 run in 6).
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     return builder.getOrCreate()
 

@@ -25,6 +25,10 @@ def spark():
 
 def oracle_con(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    # Bounded spill: at sf0.1 the i48c and n18 oracles spill into the
+    # cwd's .tmp/ until the disk is full (n18 passed 11 GB in 15 s);
+    # with a bound each fails on its own instead.
+    con.execute("SET max_temp_directory_size = '4GB'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
