@@ -29,11 +29,9 @@ _CC_LOG = logging.getLogger("glonassdatamining_spark.cc")
 # of a kernel's dozens of tiny jobs pays a core-count task launch.
 # Partition count derives from DATA (ceil(n / _ROWS_PER_PART), capped
 # at defaultParallelism) — at scale the cap binds and parallelism is
-# unchanged. Env-tunable for clusters. The one sizing rule for every
-# iterative operator: operators/* import it from here.
-_ROWS_PER_PART = int(
-    __import__("os").environ.get("SPARK_GRAFT_STATE_ROWS_PER_PART", "100000")
-)
+# unchanged. The one sizing rule for every iterative operator:
+# operators/* import it from here.
+_ROWS_PER_PART = 100_000
 
 
 def adaptive_partitions(df: DataFrame) -> int:

@@ -729,9 +729,9 @@ def st_clip_tri_fans_area_arrow(df, subjects):
     verdict ask #2). Catalyst evaluates HOF lambdas interpreted —
     measured ~35 µs·core per exploded fan-pair row at sf1, 22.8 s of
     i62b's 27 s — so the clip chain, like i65's refine, moves to a
-    vectorized numpy kernel behind mapInPandas while the Catalyst
-    chain stays as the hash-certified reference twin (asserted
-    bit-identical in tests/test_geometry.py).
+    vectorized numpy kernel behind mapInPandas; the Catalyst chain
+    lives on as the reference twin in tests/test_geometry.py, which
+    asserts the two bit-identical.
 
     ``subjects`` is a list of ``(tri_col, fans, out_cols)`` triples:
     ``tri_col`` names an ``array<struct<x,y>>`` subject triangle

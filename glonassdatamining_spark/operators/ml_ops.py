@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.sources import load
+from glonassdatamining_spark.sources.scans import SCRATCH_ROOT
 
 _SEED = 42
 
@@ -341,7 +342,7 @@ def j11_model_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     model = pipe.fit(d)
     sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    path = f"/root/repo/.tmpdata/j11_model_{sf}"
+    path = f"{SCRATCH_ROOT}/j11_model_{sf}"
     shutil.rmtree(path, ignore_errors=True)
     model.write().overwrite().save(path)
     reloaded = PipelineModel.load(path)

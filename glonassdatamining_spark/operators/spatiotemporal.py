@@ -20,7 +20,7 @@ is STARK's grid partitioner expressed as shuffle-compatible equi-joins.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from glonassdatamining_spark.functions.codecs import (
@@ -4865,10 +4865,31 @@ def _i60_oracle() -> str:
     )
 
 
+def _i60_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """i60's subject rings: (zone_id, r0), one 4-vertex dart (even
+    keys) or kite (odd keys) per sampled order — the kernel input the
+    test-side Catalyst twin reads too."""
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 0)
+    cx = (F.col("o_orderkey") * 17 % 70 + 10).cast("double")
+    cy = (F.col("o_orderkey") * 23 % 70 + 10).cast("double")
+    w = (F.col("o_orderkey") % 6 + 3).cast("double")
+    h = (F.col("o_orderkey") % 4 + 2).cast("double")
+
+    def pt(x, y):
+        return F.struct(x.alias("x"), y.alias("y"))
+
+    apex = F.when(F.col("o_orderkey") % 2 == 0, cy).otherwise(cy + 2 * h)
+    return o.select(
+        F.col("o_orderkey").alias("zone_id"),
+        F.array(
+            pt(cx + w, cy + h), pt(cx, apex), pt(cx - w, cy + h),
+            pt(cx, cy - h),
+        ).alias("r0"),
+    )
+
+
 @register("i60_concave_overlay_booleans", oracle=_i60_oracle(), section="I60")
-def i60_concave_overlay_booleans(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
+def i60_concave_overlay_booleans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean AREA measures (intersection / union / difference) for a
     CONCAVE-CONCAVE polygon pair — the vatti-class gap the round-7
     verdict named (i57/i58/i59 are convex-clip only). Method: the
@@ -4892,14 +4913,13 @@ def i60_concave_overlay_booleans(
     away — a negative literal sign would multiply into the
     contribution exactly like s does).
 
-    Execution shape: explode the fan index (2 rows per zone, n-3+1
-    per general n-gon), then 4 independent 3-step clip chains per row
-    — pure Catalyst projections, zero UDF, zero join; ONE groupBy
-    (zone) whose float sum rides the DECIMAL(28,6) discipline
-    (stable.dsum), so partial-agg order can never flip a bit. The
-    oracle replays the identical IEEE chain through generated
-    MATERIALIZED CTEs (o_clip_half_plane / o_ring_area twins — every
-    constructed vertex is hash-certified, i57's discipline).
+    Execution shape: the subject rings are statically 4 vertices, so
+    their 2 fan triangles unroll as columns and concave_overlay_areas
+    fan-contracts them — one Arrow kernel pass, row-wise DECIMAL(28,6)
+    fold, zero explode, zero shuffle. The oracle replays the identical
+    IEEE chain through generated MATERIALIZED CTEs (o_clip_half_plane
+    / o_ring_area twins — every constructed vertex is hash-certified,
+    i57's discipline).
 
     Scale: per-row O(n_subject_tris · n_clip_tris · 3) arithmetic,
     embarrassingly parallel; at 100 TB the literal clip generalizes to
@@ -4909,68 +4929,20 @@ def i60_concave_overlay_booleans(
     Python for literals — for per-row concave clips both rings fan
     off their arrays the same way (the subject side here IS the
     data-driven form)."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 0)
-    cx = (F.col("o_orderkey") * 17 % 70 + 10).cast("double")
-    cy = (F.col("o_orderkey") * 23 % 70 + 10).cast("double")
-    w = (F.col("o_orderkey") % 6 + 3).cast("double")
-    h = (F.col("o_orderkey") % 4 + 2).cast("double")
-
-    def pt(x, y):
-        return F.struct(x.alias("x"), y.alias("y"))
-
-    apex = F.when(F.col("o_orderkey") % 2 == 0, cy).otherwise(cy + 2 * h)
-    z = o.select(
-        F.col("o_orderkey").alias("zone_id"),
-        F.array(
-            pt(cx + w, cy + h), pt(cx, apex), pt(cx - w, cy + h),
-            pt(cx, cy - h),
-        ).alias("r0"),
-    )
-    # subject rings are statically 4 vertices → 2 fan triangles; the
-    # default 'arrow' engine fan-contracts them (round-11, guide §4.1)
-    if engine == "arrow":
-        return concave_overlay_areas(z, engine="arrow", nv=4)
-    return concave_overlay_areas(z)
+    return concave_overlay_areas(_i60_zones(spark, sf_dir), nv=4)
 
 
-def concave_overlay_areas(
-    z: DataFrame,
-    clip_tris=None,
-    clip_area: float | None = None,
-    engine: str = "hof",
-    nv: int | None = None,
-) -> DataFrame:
-    """The i60 measure kernel over (zone_id, r0) rows: signed fan
-    explode → per-triangle convex clips against the (python-fanned)
-    clip triangles → decimal-stable signed sum. Factored out so unit
-    tests can feed hand-constructed concave rings (tests/
-    test_geometry.py's reference cases).
+def _ccw_with_area(z: DataFrame) -> DataFrame:
+    """(zone_id, r0) → (zone_id, r0, sa): the subject ring turned CCW
+    and its shoelace area. Orientation guard (round-8 review fix): the
+    signed-fan identity needs a CCW subject — a CW ring flips every
+    fan sign, so the contributions sum to MINUS the intersection area
+    while the |shoelace| subject area stays positive (silent
+    corruption, no error). Normalize: reverse the ring when its signed
+    shoelace is negative. No-op (and no hash impact) for CCW input —
+    the i60 fixture and oracle are CCW by construction."""
+    from glonassdatamining_spark.functions.geometry import st_area
 
-    engine='arrow' (round-11 optimization, guide §4.1) is the i62b
-    FAN CONTRACTION applied to this kernel: requires the statically
-    known subject vertex count ``nv`` (one row per zone — every fan
-    triangle unrolls as columns), clips all subject-tri × clip-tri
-    combinations in one vectorized Arrow kernel pass
-    (st_clip_tri_fans_area_arrow), and folds the signed sum ROW-WISE
-    (decimal addition of the per-term casts is exact and order-free) —
-    the fan explode, the interpreted HOF clip chains, and the groupBy
-    shuffle all drop out of the plan. Bit-identity vs 'hof' is
-    asserted in tests/test_geometry.py."""
-    from glonassdatamining_spark.functions.geometry import (
-        st_area,
-        st_area_or_zero,
-        st_convex_clip,
-    )
-
-    if clip_tris is None:
-        clip_tris, clip_area = _I60_L_TRIS, _I60_L_AREA
-    # Orientation guard (round-8 review fix): the signed-fan identity
-    # needs a CCW subject — a CW ring flips every fan sign, so the
-    # contributions sum to MINUS the intersection area while the
-    # |shoelace| subject area stays positive (silent corruption, no
-    # error). Normalize: reverse the ring when its signed shoelace is
-    # negative. No-op (and no hash impact) for CCW input — the i60
-    # fixture and oracle are CCW by construction.
     def _guard_col():
         r = F.col("r0")
         nvz = F.size(r)
@@ -4987,142 +4959,142 @@ def concave_overlay_areas(
         return F.when(signed2 < 0, F.reverse(r)).otherwise(r).alias("r0")
 
     # fused memoized stages (round-11, the session.memo discipline: the
-    # guard/sa/fan projections reference the fixed attribute name r0
-    # only — plan construction only, identical analyzed plan)
+    # guard/sa projections reference the fixed attribute name r0 only —
+    # plan construction only, identical analyzed plan)
     z = z.select("zone_id", memo("i60_guard_r0", _guard_col))
-    z = z.select(
+    return z.select(
         "*", memo("i60_sa", lambda: st_area(F.col("r0")).alias("sa"))
     )
-    if engine == "arrow":
-        if nv is None:
-            raise ValueError(
-                "concave_overlay_areas(engine='arrow') needs the static "
-                "subject vertex count nv"
+
+
+def _subject_fan_cols(nv: int) -> list:
+    """The signed fan of the subject ring ``r0`` (``nv`` vertices,
+    known at plan time), unrolled as columns: per triangle
+    T_i = (v1, v_i, v_{i+1}), i = 2..nv−1, the vertex array ``tri{i}``
+    and its orientation sign ``s{i}`` ∈ {−1, 0, +1}. The subject side
+    of i60, i62 and i62b alike; memoized per ``nv`` (fixed attribute
+    names only)."""
+
+    def build():
+        r = F.col("r0")
+        v1 = F.element_at(r, 1)
+        out = []
+        for i in range(2, nv):
+            vi = F.element_at(r, F.lit(i))
+            vj = F.element_at(r, F.lit(i + 1))
+            cross = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
+            out.append(F.array(v1, vi, vj).alias(f"tri{i}"))
+            out.append(
+                F.when(cross > 0, 1.0)
+                .when(cross < 0, -1.0)
+                .otherwise(0.0)
+                .alias(f"s{i}")
             )
-        from glonassdatamining_spark.functions.geometry import (
-            st_clip_tri_fans_area_arrow,
-        )
+        return out
 
-        idxs = list(range(2, nv))  # fan triangle indices (v1, v_i, v_{i+1})
-        # memo key covers every parameter the fan columns depend on
-        _fan_key = f"i60_fan_{nv}_{clip_tris!r}"
+    return memo(f"subject_fan_{nv}", build)
 
-        def _fan_cols():
-            r = F.col("r0")
-            out = []
-            for i in idxs:
-                v1 = F.element_at(r, 1)
-                vi = F.element_at(r, F.lit(i))
-                vj = F.element_at(r, F.lit(i + 1))
-                cross = (
-                    (vi.x - v1.x) * (vj.y - v1.y)
-                    - (vj.x - v1.x) * (vi.y - v1.y)
-                )
-                out.append(F.array(v1, vi, vj).alias(f"tri{i}"))
-                out.append(
-                    F.when(cross > 0, 1.0)
-                    .when(cross < 0, -1.0)
-                    .otherwise(0.0)
-                    .alias(f"s{i}")
-                )
-            # literal clip-triangle vertices as columns — constant-fold
-            # to the identical doubles st_clip_half_plane would inject
-            for j, (_tsign, tri) in enumerate(clip_tris):
-                for k, (px, py) in enumerate(tri):
-                    out.append(F.lit(float(px)).alias(f"f{j}v{k}x"))
-                    out.append(F.lit(float(py)).alias(f"f{j}v{k}y"))
-            return out
 
-        nj = len(clip_tris)
-        t = z.select("*", *memo(_fan_key, _fan_cols))
-        fancols = {
-            j: tuple(f"f{j}v{k}{ax}" for k in range(3) for ax in ("x", "y"))
-            for j in range(nj)
-        }
-        subjects = [
-            (
-                f"tri{i}",
-                [fancols[j] for j in range(nj)],
-                [f"a{i}_{j}" for j in range(nj)],
-            )
+def _fan_contract_fixed(
+    t: DataFrame, keep: list[str], nv: int, clip_signs: list[float]
+) -> tuple[DataFrame, Column]:
+    """FAN CONTRACTION against a FIXED clip family — the i60/i62
+    measure. Every subject fan triangle (``tri{i}``, ``s{i}`` from
+    _subject_fan_cols) is clipped by every clip triangle j, whose CCW
+    vertices sit in columns ``f{j}v{k}x``/``f{j}v{k}y`` and whose sign
+    ``clip_signs[j]`` is known in Python, all in ONE Arrow kernel pass
+    (st_clip_tri_fans_area_arrow). The fold is both oracles' algebra:
+    per subject triangle, s_i · (±a_i0 ± a_i1 …) summed left to right
+    over the clip family, cast ONCE to DECIMAL(28,6); the casts add
+    exactly and order-free, so no explode and no group-by shuffle is
+    needed. Returns the kernel output (``keep`` plus the ``s{i}``
+    signs) and the DOUBLE intersection area Column."""
+    from glonassdatamining_spark.functions.geometry import (
+        st_clip_tri_fans_area_arrow,
+    )
+
+    idxs = range(2, nv)
+    fans = [
+        tuple(f"f{j}v{k}{ax}" for k in range(3) for ax in ("x", "y"))
+        for j in range(len(clip_signs))
+    ]
+    t = t.select(
+        *keep,
+        *[f"s{i}" for i in idxs],
+        *[f"tri{i}" for i in idxs],
+        *[c for fan in fans for c in fan],
+    )
+    t = st_clip_tri_fans_area_arrow(
+        t,
+        [
+            (f"tri{i}", fans, [f"a{i}_{j}" for j in range(len(fans))])
             for i in idxs
-        ]
-        t = t.select(
-            "zone_id",
-            "sa",
-            *[f"s{i}" for i in idxs],
-            *[f"tri{i}" for i in idxs],
-            *[c for j in range(nj) for c in fancols[j]],
-        )
-        t = st_clip_tri_fans_area_arrow(t, subjects)
+        ],
+    )
+    inter = None
+    for i in idxs:
+        areas = None
+        for j, sign in enumerate(clip_signs):
+            a = F.col(f"a{i}_{j}")
+            if sign < 0:
+                a = -a
+            areas = a if areas is None else areas + a
+        term = (F.col(f"s{i}") * areas).cast("decimal(28,6)")
+        inter = term if inter is None else inter + term
+    return t, inter.cast("double")
 
-        def term_i(i):
-            # same left-to-right double fold over the clip family as
-            # the hof chain's `areas` accumulation
-            areas = None
-            for j, (tsign, _tri) in enumerate(clip_tris):
-                a = F.col(f"a{i}_{j}")
-                if tsign < 0:
-                    a = -a
-                areas = a if areas is None else areas + a
-            return (F.col(f"s{i}") * areas).cast("decimal(28,6)")
 
-        inter = term_i(idxs[0])
-        for i in idxs[1:]:
-            inter = inter + term_i(i)
-        inter = inter.cast("double")
-        nneg = (F.col(f"s{idxs[0]}") < 0).cast("bigint")
-        for i in idxs[1:]:
-            nneg = nneg + (F.col(f"s{i}") < 0).cast("bigint")
-        return t.select(
-            "zone_id",
-            F.round("sa", 6).alias("subj_area"),
-            inter.alias("inter_area"),
-            F.round((F.col("sa") + F.lit(clip_area)) - inter, 6).alias(
-                "union_area"
-            ),
-            F.round(F.col("sa") - inter, 6).alias("diff_area"),
-            nneg.alias("n_neg_tris"),
-        )
-    e = z.select(
-        "zone_id",
-        "sa",
-        "r0",
-        F.explode(F.sequence(F.lit(2), F.size("r0") - 1)).alias("i"),
+def concave_overlay_areas(
+    z: DataFrame,
+    nv: int,
+    clip_tris=None,
+    clip_area: float | None = None,
+) -> DataFrame:
+    """The i60 measure kernel over (zone_id, r0) rows whose rings all
+    have the static vertex count ``nv``: orientation guard
+    (_ccw_with_area) → the subject's signed fan unrolled as columns →
+    fan contraction against the python-fanned clip triangles
+    (default: i60's L) → exact decimal fold. Factored out so unit
+    tests can feed hand-constructed concave rings (tests/
+    test_geometry.py's reference cases). Its Catalyst reference twin
+    (explode + clip chains + groupBy, the oracle's shape) is
+    ``_concave_overlay_areas_hof`` in tests/test_geometry.py, asserted
+    bit-identical on i60's fixture."""
+    if clip_tris is None:
+        clip_tris, clip_area = _I60_L_TRIS, _I60_L_AREA
+
+    def _clip_cols():
+        # literal clip-triangle vertices as columns — constant-fold to
+        # the identical doubles st_clip_half_plane would inject
+        out = []
+        for j, (_tsign, tri) in enumerate(clip_tris):
+            for k, (px, py) in enumerate(tri):
+                out.append(F.lit(float(px)).alias(f"f{j}v{k}x"))
+                out.append(F.lit(float(py)).alias(f"f{j}v{k}y"))
+        return out
+
+    z = _ccw_with_area(z)
+    t = z.select(
+        "*",
+        *_subject_fan_cols(nv),
+        *memo(f"i60_clip_{clip_tris!r}", _clip_cols),
     )
-    r = F.col("r0")
-    v1 = F.element_at(r, 1)
-    vi = F.element_at(r, F.col("i"))
-    vj = F.element_at(r, F.col("i") + 1)
-    cross = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
-    t = e.select(
-        "zone_id",
-        "sa",
-        F.array(v1, vi, vj).alias("tri"),
-        F.when(cross > 0, 1.0).when(cross < 0, -1.0).otherwise(0.0).alias("s"),
+    t, inter = _fan_contract_fixed(
+        t, ["zone_id", "sa"], nv, [tsign for tsign, _tri in clip_tris]
     )
-    areas = None
-    for j, (tsign, clip_tri) in enumerate(clip_tris):
-        t = st_convex_clip(t, "tri", clip_tri, f"g{j}_c")
-        term = st_area_or_zero(F.col(f"g{j}_c"))
-        if tsign < 0:
-            term = -term
-        areas = term if areas is None else areas + term
-    contrib = F.col("s") * areas
-    agg = t.groupBy("zone_id").agg(
-        F.max("sa").alias("_sa"),
-        F.sum(contrib.cast("decimal(28,6)")).cast("double").alias("_inter"),
-        F.sum((F.col("s") < 0).cast("bigint")).alias("n_neg_tris"),
-    )
-    return agg.select(
+    nneg = None
+    for i in range(2, nv):
+        neg = (F.col(f"s{i}") < 0).cast("bigint")
+        nneg = neg if nneg is None else nneg + neg
+    return t.select(
         "zone_id",
-        F.round("_sa", 6).alias("subj_area"),
-        F.col("_inter").alias("inter_area"),
-        F.round((F.col("_sa") + F.lit(clip_area)) - F.col("_inter"), 6).alias(
+        F.round("sa", 6).alias("subj_area"),
+        inter.alias("inter_area"),
+        F.round((F.col("sa") + F.lit(clip_area)) - inter, 6).alias(
             "union_area"
         ),
-        F.round(F.col("_sa") - F.col("_inter"), 6).alias("diff_area"),
-        "n_neg_tris",
+        F.round(F.col("sa") - inter, 6).alias("diff_area"),
+        nneg.alias("n_neg_tris"),
     )
 
 
@@ -5333,55 +5305,27 @@ def _i62_oracle() -> str:
     )
 
 
-@register("i62_concave_overlay_join", oracle=_i62_oracle(), section="I62")
-def i62_concave_overlay_join(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
-    """CONCAVE polygon–polygon overlay JOIN — the composition i59 and
-    i60 each promise: every (concave zone, concave district) pair
-    that overlaps, WITH intersection and union areas, both polygons
-    per-row data. Zones are order-keyed concave DARTS (i60's subject
-    family — one reflex vertex each); districts are supplier-keyed
-    concave CHEVRONS (the same dart shape, python-fan-decomposed into
-    two signed triangles whose vertices are per-row Column
-    arithmetic, _I62_CLIP_FANS). Candidates come from i59's bbox
-    grid-cell equi-join (broadcast bounded-district side, candidate
-    growth linear in zones); the per-pair measure is the signed-fan
-    identity — for each of the subject's 2 signed fan triangles and
-    the district's 2, a 3-step Sutherland-Hodgman chain with PER-ROW
-    clip-edge endpoints (st_clip_half_plane_cols), contributions
-    s_i·t_j·area summed through the DECIMAL(28,6) discipline, so
-    area(Z ∩ D) is exact for the concave-concave pair. Union by
-    inclusion-exclusion from the families' closed-form areas
-    (dart w·h, chevron rd²). HAVING inter > 0 on the identical
-    decimal-sum double both engines.
-
-    The oracle replays the same chain (generated MATERIALIZED CTEs,
-    per-row clip-edge expressions), which the engine='hof' path
-    mirrors 1:1 — there the i59 expression-blowup guard applies (ONE
-    persisted barrier between candidate generation and the
-    (explode + 2×3-step) clip chains). The DEFAULT engine is i62b's
-    Arrow fan contraction (round-9 verdict ask #2): all 4 fan pairs
-    compute row-wise in a vectorized numpy pass, dropping the
-    explode, the barrier, and the group-by shuffle — bit-identical
-    values (exact order-free decimal term algebra; asserted vs 'hof'
-    in tests/test_geometry.py; measured sf0.1→sf1 5.2 s/1.9 s =
-    2.8×, from the profiled 6.76× whose cost was the interpreted-HOF
-    per-row clip constant, not candidate growth).
-
-    Scale: i59's exact join shape (bounded broadcast district side,
-    zones never shuffle) with a 4·(3-step) per-pair kernel instead of
-    one 5-step chain; per-pair cost is constant arithmetic, so the
-    operator inherits i59's linear candidate growth. For general-n
-    concave families, both fans explode off their ring arrays (i60's
-    data-driven subject side IS that form)."""
-    from glonassdatamining_spark.functions.geometry import (
-        st_area_or_zero,
-        st_clip_half_plane_cols,
+def _zone_district_bbox() -> Column:
+    """Bbox-overlap predicate of a zone (zx±w, zy±h) and a district
+    (dx±rd, dy±rd) — the oracles' own `pairs` join condition, shared
+    by i62 and i62b (memoized, fixed attribute names only)."""
+    return memo(
+        "i62_bbox",
+        lambda: (
+            (F.col("zx") - F.col("w") <= F.col("dx") + F.col("rd"))
+            & (F.col("dx") - F.col("rd") <= F.col("zx") + F.col("w"))
+            & (F.col("zy") - F.col("h") <= F.col("dy") + F.col("rd"))
+            & (F.col("dy") - F.col("rd") <= F.col("zy") + F.col("h"))
+        ),
     )
 
-    if engine != "arrow":
-        _i59_release_barriers("i62")  # rotate i62's OWN generations
+
+def _i62_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """i62's join inputs: zones (zone_id, zx, zy, w, h, r0 = the dart
+    ring), districts (district_id, dx, dy, rd) and the bbox-overlap
+    predicate — shared with the test-side Catalyst twin."""
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 13 == 0)
     zones = o.select(
         F.col("o_orderkey").alias("zone_id"),
@@ -5397,16 +5341,6 @@ def i62_concave_overlay_join(
         (F.col("s_suppkey") * 59 % 80).cast("double").alias("dy"),
         (F.col("s_suppkey") % 5 + 6).cast("double").alias("rd"),
     )
-
-    # Candidate generation (round-11, guide §3.4): bbox-overlap
-    # broadcast theta-join — the oracle's own `pairs` CTE — instead of
-    # the i59 grid equi-join: the district side is bounded (≤100 rows,
-    # broadcast), so BNLJ gives the exact bbox-candidate set with no
-    # cell explode and no dropDuplicates Exchange. Output identical:
-    # both engines and the oracle filter inter > 0, so any candidate
-    # superset of the intersecting pairs yields the same rows. (See
-    # i62b's cand comment; the grid join remains i59's scale form for
-    # unbounded clip sides.)
     # Zone ring built per ZONE pre-join (round-11, guide §2.1) — the
     # old per-pair construction repeated it once per candidate.
     # Memoized fused select (the session.memo discipline: fixed attribute
@@ -5432,145 +5366,82 @@ def i62_concave_overlay_join(
             ).alias("r0"),
         ),
     )
-    bbox_pred = memo(
-        "i62_bbox",
-        lambda: (
-            (F.col("zx") - F.col("w") <= F.col("dx") + F.col("rd"))
-            & (F.col("dx") - F.col("rd") <= F.col("zx") + F.col("w"))
-            & (F.col("zy") - F.col("h") <= F.col("dy") + F.col("rd"))
-            & (F.col("dy") - F.col("rd") <= F.col("zy") + F.col("h"))
-        ),
-    )
-    if engine == "arrow":
-        # FAN CONTRACTION over the Arrow clip kernel — i62b's form
-        # applied to the fixed clip family: the subject's 2 signed fan
-        # triangles × the chevron's 2 python-decomposed fans compute
-        # row-wise in one kernel pass; explode, barrier, and group-by
-        # shuffle all drop out of the plan (see i62b's arrow branch
-        # for the exactness argument; asserted vs 'hof' in tests).
-        # Per-side fan derivations run PRE-join (guide §2.1).
-        from glonassdatamining_spark.functions.geometry import (
-            st_clip_tri_fans_area_arrow,
-        )
+    return zones, districts, _zone_district_bbox()
 
-        def _zt_cols():
-            r = F.col("r0")
-            out = []
-            for i in (2, 3):
-                v1 = F.element_at(r, 1)
-                vi = F.element_at(r, F.lit(i))
-                vj = F.element_at(r, F.lit(i) + 1)
-                cross = (
-                    (vi.x - v1.x) * (vj.y - v1.y)
-                    - (vj.x - v1.x) * (vi.y - v1.y)
-                )
-                out.append(F.array(v1, vi, vj).alias(f"tri{i}"))
+
+@register("i62_concave_overlay_join", oracle=_i62_oracle(), section="I62")
+def i62_concave_overlay_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CONCAVE polygon–polygon overlay JOIN — the composition i59 and
+    i60 each promise: every (concave zone, concave district) pair
+    that overlaps, WITH intersection and union areas, both polygons
+    per-row data. Zones are order-keyed concave DARTS (i60's subject
+    family — one reflex vertex each); districts are supplier-keyed
+    concave CHEVRONS (the same dart shape, python-fan-decomposed into
+    two signed triangles whose vertices are per-row Column
+    arithmetic, _I62_CLIP_FANS). The per-pair measure is the
+    signed-fan identity — the subject's 2 signed fan triangles × the
+    chevron's 2, each a Sutherland-Hodgman triangle clip, contributions
+    s_i·t_j·area summed through the DECIMAL(28,6) discipline, so
+    area(Z ∩ D) is exact for the concave-concave pair. Union by
+    inclusion-exclusion from the families' closed-form areas
+    (dart w·h, chevron rd²). HAVING inter > 0 on the identical
+    decimal-sum double the oracle filters.
+
+    Execution: i60's fan contraction (_fan_contract_fixed, round-9
+    verdict ask #2) — all 4 fan pairs compute row-wise in one
+    vectorized numpy pass, with no explode, no optimizer barrier and
+    no group-by shuffle; values are bit-identical to the oracle's
+    exploded chain (exact order-free decimal term algebra; the
+    Catalyst twin ``_i62_hof`` in tests/test_geometry.py asserts
+    it; measured sf0.1→sf1 5.2 s/1.9 s = 2.8×, from the profiled 6.76×
+    whose cost was the interpreted-HOF per-row clip constant, not
+    candidate growth).
+
+    Candidate generation (round-11, guide §3.4): bbox-overlap
+    broadcast theta-join — the oracle's own `pairs` CTE — instead of
+    the i59 grid equi-join: the district side is bounded (≤100 rows,
+    broadcast), so BNLJ gives the exact bbox-candidate set with no
+    cell explode and no dropDuplicates Exchange. Output identical: the
+    kernel and the oracle filter inter > 0, so any candidate superset
+    of the intersecting pairs yields the same rows (the grid join
+    remains i59's scale form for unbounded clip sides).
+
+    Scale: i59's exact join shape (bounded broadcast district side,
+    zones never shuffle) with a 4·(3-step) per-pair kernel instead of
+    one 5-step chain; per-pair cost is constant arithmetic, so the
+    operator inherits i59's linear candidate growth. For general-n
+    concave families, both fans come off their ring arrays (i62b)."""
+    zones, districts, bbox_pred = _i62_sides(spark, sf_dir)
+
+    def _dt_cols():
+        out = []
+        for j, (_tsign, fan) in enumerate(_I62_CLIP_FANS):
+            for k, (ox, oy) in enumerate(fan):
                 out.append(
-                    F.when(cross > 0, 1.0)
-                    .when(cross < 0, -1.0)
-                    .otherwise(0.0)
-                    .alias(f"s{i}")
+                    (F.col("dx") + F.col("rd") * F.lit(ox)).alias(f"f{j}v{k}x")
                 )
-            return out
+                out.append(
+                    (F.col("dy") + F.col("rd") * F.lit(oy)).alias(f"f{j}v{k}y")
+                )
+        return out
 
-        def _dt_cols():
-            out = []
-            for j, (_tsign, fan) in enumerate(_I62_CLIP_FANS):
-                for k, (ox, oy) in enumerate(fan):
-                    out.append(
-                        (F.col("dx") + F.col("rd") * F.lit(ox)).alias(
-                            f"f{j}v{k}x"
-                        )
-                    )
-                    out.append(
-                        (F.col("dy") + F.col("rd") * F.lit(oy)).alias(
-                            f"f{j}v{k}y"
-                        )
-                    )
-            return out
-
-        zt = zones.select("*", *memo("i62_zt", _zt_cols))
-        dt = districts.select("*", *memo("i62_dt", _dt_cols))
-        t = zt.join(F.broadcast(dt), bbox_pred)
-        fancols = {
-            j: tuple(f"f{j}v{k}{ax}" for k in range(3) for ax in ("x", "y"))
-            for j in (0, 1)
-        }
-        subjects = [
-            (f"tri{i}", [fancols[0], fancols[1]], [f"a{i}0", f"a{i}1"])
-            for i in (2, 3)
-        ]
-        t = t.select(
-            "zone_id", "district_id", "w", "h", "rd",
-            "s2", "s3", "tri2", "tri3", *fancols[0], *fancols[1],
-        )
-        t = st_clip_tri_fans_area_arrow(t, subjects)
-
-        def term(i):
-            # _I62_CLIP_FANS tsigns are (-1, +1): terms fold as
-            # s_i · ((−a_i0) + a_i1), the hof chain's exact algebra
-            return (
-                F.col(f"s{i}") * ((-F.col(f"a{i}0")) + F.col(f"a{i}1"))
-            ).cast("decimal(28,6)")
-
-        inter = (term(2) + term(3)).cast("double")
-        out = t.select(
-            "zone_id",
-            "district_id",
-            inter.alias("_inter"),
-            (F.col("w") * F.col("h")).alias("_za"),
-            (F.col("rd") * F.col("rd")).alias("_da"),
-        )
-        return out.filter(F.col("_inter") > 0.0).select(
-            "zone_id",
-            "district_id",
-            F.col("_inter").alias("inter_area"),
-            F.round(
-                (F.col("_za") + F.col("_da")) - F.col("_inter"), 6
-            ).alias("union_area"),
-        )
-
-    cand = zones.join(F.broadcast(districts), bbox_pred)
-    e = cand.withColumn("i", F.explode(F.array(F.lit(2), F.lit(3))))
-    r = F.col("r0")
-    v1 = F.element_at(r, 1)
-    vi = F.element_at(r, F.col("i"))
-    vj = F.element_at(r, F.col("i") + 1)
-    cross = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
-    t = e.select(
-        "zone_id", "district_id", "w", "h", "dx", "dy", "rd",
-        F.array(v1, vi, vj).alias("tri"),
-        F.when(cross > 0, 1.0).when(cross < 0, -1.0).otherwise(0.0).alias("s"),
+    # per-side fan derivations run PRE-join (guide §2.1)
+    zt = zones.select("*", *_subject_fan_cols(4))
+    dt = districts.select("*", *memo("i62_dt", _dt_cols))
+    t, inter = _fan_contract_fixed(
+        zt.join(F.broadcast(dt), bbox_pred),
+        ["zone_id", "district_id", "w", "h", "rd"],
+        4,
+        [tsign for tsign, _fan in _I62_CLIP_FANS],
     )
-    # one barrier between the join/dedup/explode and the clip chains
-    # (the i59 constraint-propagation blowup discipline)
-    t = _i59_barrier(t, "i62")
-    terms = []
-    for j, (tsign, fan) in enumerate(_I62_CLIP_FANS):
-        cur = "tri"
-        for step in range(3):
-            (ox1, oy1), (ox2, oy2) = fan[step], fan[(step + 1) % 3]
-            nxt = f"g{j}_{step + 1}"
-            t = t.withColumn(
-                nxt,
-                st_clip_half_plane_cols(
-                    F.col(cur),
-                    F.col("dx") + F.col("rd") * F.lit(ox1),
-                    F.col("dy") + F.col("rd") * F.lit(oy1),
-                    F.col("dx") + F.col("rd") * F.lit(ox2),
-                    F.col("dy") + F.col("rd") * F.lit(oy2),
-                ),
-            )
-            cur = nxt
-        area = st_area_or_zero(F.col(cur))
-        terms.append(-area if tsign < 0 else area)
-    contrib = F.col("s") * (terms[0] + terms[1])
-    agg = t.groupBy("zone_id", "district_id").agg(
-        F.sum(contrib.cast("decimal(28,6)")).cast("double").alias("_inter"),
-        F.max(F.col("w") * F.col("h")).alias("_za"),
-        F.max(F.col("rd") * F.col("rd")).alias("_da"),
+    out = t.select(
+        "zone_id",
+        "district_id",
+        inter.alias("_inter"),
+        (F.col("w") * F.col("h")).alias("_za"),
+        (F.col("rd") * F.col("rd")).alias("_da"),
     )
-    return agg.filter(F.col("_inter") > 0.0).select(
+    return out.filter(F.col("_inter") > 0.0).select(
         "zone_id",
         "district_id",
         F.col("_inter").alias("inter_area"),
@@ -5799,68 +5670,24 @@ def _i62b_oracle() -> str:
     )
 
 
-@register("i62b_concave_overlay_general", oracle=_i62b_oracle(), section="I62")
-def i62b_concave_overlay_general(
-    spark: SparkSession, sf_dir: str, engine: str = "arrow"
-) -> DataFrame:
-    """GENERAL concave×concave polygon overlay JOIN — both polygons
-    arrive as PER-ROW RING ARRAYS and BOTH fan-decompose off their
-    arrays at runtime (round-9 verdict ask #2; i62's clip side was a
-    python-decomposed fixed family — this is the form that accepts
-    arbitrary simple n-gons on both sides with NO plan-build-time
-    knowledge of either shape, signed fans needing no ear clipping —
-    i60's identity applied twice):
+def _i62b_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """i62b's join inputs: zones with their dart ring ``r0`` and its
+    shoelace area ``sa``, districts with their chevron ring ``d0`` and
+    area ``da``, and the bbox-overlap predicate — shared with the
+    test-side Catalyst twin.
 
-        area(Z ∩ D) = Σ_{i,j} s_i · t_j · area(T_i ∩ U_j)
+    Per-SIDE derivations run pre-join (round-11, guide §2.1): r0/sa
+    depend only on the zone (16.7 k rows at sf0.1), d0/da only on the
+    district (100 rows) — computing them per candidate PAIR (146 k
+    rows) paid the interpreted shoelace HOF ~9× more than needed.
+    Plan-construction memo (round-11, the session.memo discipline):
+    the projections reference FIXED attribute names only, so the
+    Column trees are reusable across calls; same expressions on the
+    same doubles -> identical analyzed plan."""
+    from glonassdatamining_spark.functions.geometry import st_area
 
-    Subject fan triangles (v1, v_i, v_{i+1}) carry their orientation
-    sign s_i (Sutherland–Hodgman doesn't care about subject
-    orientation — area is taken absolute); clip fan triangles carry
-    sign t_j AND are CCW-reordered per row (SH keeps the left side,
-    so the clip ring must wind CCW). Both fan indices EXPLODE
-    (n−2 × m−2 rows per candidate pair — 4 here for dart × chevron);
-    each row runs ONE 3-step clip chain with per-row endpoints bound
-    once as plain attributes (the let-binding discipline — the HOF
-    references each endpoint ~4×/step). Candidates from i59's bbox
-    grid-cell equi-join; sums ride DECIMAL(28,6); union by
-    inclusion-exclusion from the per-row shoelace areas (data-driven,
-    no closed forms). Both fixture families are REFLEX (darts ×
-    chevrons), so negative×negative fan terms are exercised on every
-    pair (counted in n_neg_terms). The oracle replays the identical
-    chain through generated MATERIALIZED CTEs; an independent
-    even-odd rasterization cross-check (incl. reflex-reflex pairs)
-    lives in tests/test_geometry.py.
-
-    ENGINES (round-9 verdict ask #2 — the sf1 constant profiled and
-    fixed): the phase profile at sf1 put 22.8 s of the 27 s total in
-    the interpreted-HOF clip chains (candidates and exploded rows
-    both scale exactly 10× — linear; the "superlinear-looking" ratio
-    was the per-row lambda constant surfacing once fixed overheads
-    amortized, NOT candidate blowup). The default 'arrow' engine runs
-    the FAN-CONTRACTION form: all 4 fan pairs of a candidate compute
-    row-wise in one vectorized numpy pass
-    (st_clip_tri_fans_area_arrow), so the explode, the optimizer
-    barrier (a Python node is opaque — no expression blowup to
-    guard), and the group-by shuffle all drop out; decimal addition
-    of the 4 per-term casts is exact and order-free, so values are
-    bit-identical to the exploded SUM (asserted vs 'hof' in
-    tests/test_geometry.py; measured sf0.1→sf1 8.9 s/3.1 s = 2.8×,
-    from 25.0 s/4.5 s = 5.5×). engine='hof' keeps the Catalyst chain
-    — the oracle's mirror and the certification twin — with the i59
-    blowup guard: ONE persisted barrier (keyed 'i62b') between the
-    explode and the clip chains.
-
-    Scale: i59's join shape (bounded broadcast district side, zones
-    never shuffle, linear candidate growth); per-pair cost
-    O((n−2)(m−2)·3·ring) vectorized arithmetic."""
-    from glonassdatamining_spark.functions.geometry import (
-        st_area,
-        st_area_or_zero,
-        st_clip_half_plane_cols,
-    )
-
-    if engine != "arrow":
-        _i59_release_barriers("i62b")  # rotate i62b's own generations
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 9 == 0)
     zones = o.select(
         F.col("o_orderkey").alias("zone_id"),
@@ -5880,27 +5707,6 @@ def i62b_concave_overlay_general(
     def pt(x, y):
         return F.struct(x.alias("x"), y.alias("y"))
 
-    # Candidate generation (round-11, guide §3.4): the district side is
-    # BOUNDED (≤100 rows, broadcast), so the bbox-overlap theta-join —
-    # the oracle's own `pairs` CTE — beats the i59 grid equi-join
-    # outright: exact bbox-candidate set (146 k pairs at sf0.1 vs 520 k
-    # grid-cell survivors at cell=32), no cell explode, and the
-    # dropDuplicates Exchange disappears (output identical either way:
-    # both engines and the oracle filter inter > 0, so any candidate
-    # superset of the intersecting pairs yields the same rows). The
-    # grid join remains the declared scale form for UNBOUNDED clip
-    # sides (i59); with a bounded broadcast side BNLJ is strictly less
-    # work per row than 4-cell explode + hash probe + dedup.
-    # Per-SIDE derivations run pre-join (round-11, guide §2.1): r0/sa
-    # depend only on the zone (16.7 k rows at sf0.1), d0/da only on the
-    # district (100 rows) — computing them per candidate PAIR (146 k
-    # rows) paid the interpreted shoelace HOF ~9× more than needed.
-    # Same expressions on the same doubles → bit-identical values.
-    # Plan-construction memo (round-11, the session.memo discipline): all
-    # projections below reference FIXED attribute names only, so the
-    # Column trees are reusable across calls; withColumn chains are
-    # fused into single select() stages (one analyzer pass each). Same
-    # expressions on the same doubles -> identical analyzed plan.
     zones = zones.select(
         "*",
         memo(
@@ -5925,203 +5731,145 @@ def i62b_concave_overlay_general(
             ).alias("d0"),
         ),
     ).select("*", memo("i62b_da", lambda: st_area(F.col("d0")).alias("da")))
-    bbox_pred = memo(
-        "i62_bbox",
-        lambda: (
-            (F.col("zx") - F.col("w") <= F.col("dx") + F.col("rd"))
-            & (F.col("dx") - F.col("rd") <= F.col("zx") + F.col("w"))
-            & (F.col("zy") - F.col("h") <= F.col("dy") + F.col("rd"))
-            & (F.col("dy") - F.col("rd") <= F.col("zy") + F.col("h"))
-        ),
+    return zones, districts, _zone_district_bbox()
+
+
+@register("i62b_concave_overlay_general", oracle=_i62b_oracle(), section="I62")
+def i62b_concave_overlay_general(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GENERAL concave×concave polygon overlay JOIN — both polygons
+    arrive as PER-ROW RING ARRAYS and BOTH fan-decompose off their
+    arrays at runtime (round-9 verdict ask #2; i62's clip side was a
+    python-decomposed fixed family — this is the form that accepts
+    arbitrary simple n-gons on both sides with NO plan-build-time
+    knowledge of either shape, signed fans needing no ear clipping —
+    i60's identity applied twice):
+
+        area(Z ∩ D) = Σ_{i,j} s_i · t_j · area(T_i ∩ U_j)
+
+    Subject fan triangles (v1, v_i, v_{i+1}) carry their orientation
+    sign s_i (Sutherland–Hodgman doesn't care about subject
+    orientation — area is taken absolute); clip fan triangles carry
+    sign t_j AND are CCW-reordered per row (SH keeps the left side,
+    so the clip ring must wind CCW). Sums ride DECIMAL(28,6); union by
+    inclusion-exclusion from the per-row shoelace areas (data-driven,
+    no closed forms). Both fixture families are REFLEX (darts ×
+    chevrons), so negative×negative fan terms are exercised on every
+    pair (counted in n_neg_terms). The oracle replays the chain
+    through generated MATERIALIZED CTEs, one exploded row per (i, j)
+    fan pair; an independent even-odd rasterization cross-check (incl.
+    reflex-reflex pairs) lives in tests/test_geometry.py.
+
+    Execution (round-9 verdict ask #2 — the sf1 constant profiled and
+    fixed: the phase profile at sf1 put 22.8 s of the 27 s total in
+    the interpreted-HOF clip chains of the exploded Catalyst form):
+    FAN CONTRACTION — all (n−2)(m−2) = 4 fan pairs of a candidate
+    compute row-wise in one vectorized numpy pass
+    (st_clip_tri_fans_area_arrow), so the fan explode (4× rows), the
+    optimizer barrier (a Python node is opaque — no expression blowup
+    to guard) and the group-by shuffle of the exploded frame all stay
+    out of the plan. The fold casts EACH (i, j) term to DECIMAL(28,6),
+    as the oracle's per-row SUM does; decimal addition of the 4 casts
+    is exact and order-free, so values are bit-identical to the
+    exploded SUM (the Catalyst twin ``_i62b_hof`` in
+    tests/test_geometry.py asserts it; measured sf0.1→sf1 8.9 s/3.1 s
+    = 2.8×, from 25.0 s/4.5 s = 5.5×).
+
+    Candidate generation (round-11, guide §3.4): the district side is
+    BOUNDED (≤100 rows, broadcast), so the bbox-overlap theta-join —
+    the oracle's own `pairs` CTE — beats the i59 grid equi-join
+    outright: exact bbox-candidate set (146 k pairs at sf0.1 vs 520 k
+    grid-cell survivors at cell=32), no cell explode, no dropDuplicates
+    Exchange (output identical either way: the kernel and the oracle
+    filter inter > 0). The grid join remains the declared scale form
+    for UNBOUNDED clip sides (i59).
+
+    Scale: i59's join shape (bounded broadcast district side, zones
+    never shuffle, linear candidate growth); per-pair cost
+    O((n−2)(m−2)·3·ring) vectorized arithmetic."""
+    from glonassdatamining_spark.functions.geometry import (
+        st_clip_tri_fans_area_arrow,
     )
-    if engine == "arrow":
-        # FAN CONTRACTION over the Arrow clip kernel (round-9 verdict
-        # ask #2): all (n−2)(m−2) = 4 fan pairs of a candidate are
-        # computed ROW-WISE in one kernel pass, so the fan explode
-        # (4× rows), the optimizer barrier (a Python node is opaque —
-        # the expression blowup cannot happen, and the DISK_ONLY
-        # persist goes with it), and the group-by SHUFFLE of the
-        # exploded frame all disappear from the plan. The aggregate
-        # collapses to row-local arithmetic because decimal addition
-        # of the 4 per-term casts is exact and order-free — the
-        # values are bit-identical to the exploded SUM (asserted vs
-        # the 'hof' engine in tests/test_geometry.py).
-        from glonassdatamining_spark.functions.geometry import (
-            st_clip_tri_fans_area_arrow,
-        )
 
-        # fan derivations per SIDE, pre-join (see cand comment): tri/s
-        # from the zone ring, CCW clip vertices/t from the district
-        # ring — the join output carries only flat kernel columns.
-        # Fused into single memoized select stages (fixed-name inputs).
-        def _zt_cols():
-            r = F.col("r0")
-            out = []
-            for i in (2, 3):
-                v1 = F.element_at(r, 1)
-                vi = F.element_at(r, F.lit(i))
-                vj = F.element_at(r, F.lit(i) + 1)
-                crs = (
-                    (vi.x - v1.x) * (vj.y - v1.y)
-                    - (vj.x - v1.x) * (vi.y - v1.y)
-                )
-                out.append(F.array(v1, vi, vj).alias(f"tri{i}"))
-                out.append(
-                    F.when(crs > 0, 1.0)
-                    .when(crs < 0, -1.0)
-                    .otherwise(0.0)
-                    .alias(f"s{i}")
-                )
-            return out
+    zones, districts, bbox_pred = _i62b_sides(spark, sf_dir)
 
-        def _dt_cu_cols():
-            d = F.col("d0")
-            out = []
-            for j in (2, 3):
-                d1 = F.element_at(d, 1)
-                dj = F.element_at(d, F.lit(j))
-                dk = F.element_at(d, F.lit(j) + 1)
-                crd = (
-                    (dj.x - d1.x) * (dk.y - d1.y)
-                    - (dk.x - d1.x) * (dj.y - d1.y)
-                )
-                out.append(
-                    F.when(crd >= 0, F.array(d1, dj, dk))
-                    .otherwise(F.array(d1, dk, dj))
-                    .alias(f"cu{j}")
-                )
-                out.append(
-                    F.when(crd > 0, 1.0)
-                    .when(crd < 0, -1.0)
-                    .otherwise(0.0)
-                    .alias(f"t{j}")
-                )
-            return out
-
-        def _dt_flat_cols():
-            out = []
-            for j in (2, 3):
-                cu = F.col(f"cu{j}")
-                for k in (1, 2, 3):
-                    uk = F.element_at(cu, k)
-                    out.append(uk.x.alias(f"u{j}{k}x"))
-                    out.append(uk.y.alias(f"u{j}{k}y"))
-            return out
-
-        zt = zones.select("*", *memo("i62b_zt", _zt_cols))
-        dt = (
-            districts.select("*", *memo("i62b_dt_cu", _dt_cu_cols))
-            .select("*", *memo("i62b_dt_flat", _dt_flat_cols))
-            .drop("cu2", "cu3")
-        )
-        t = zt.join(F.broadcast(dt), bbox_pred)
-        fan_cols = {
-            j: tuple(
-                f"u{j}{k}{ax}" for k in (1, 2, 3) for ax in ("x", "y")
+    # fan derivations per SIDE, pre-join: tri/s from the zone ring,
+    # CCW clip vertices/t from the district ring — the join output
+    # carries only flat kernel columns. Fused into single memoized
+    # select stages (fixed-name inputs).
+    def _dt_cu_cols():
+        d = F.col("d0")
+        out = []
+        for j in (2, 3):
+            d1 = F.element_at(d, 1)
+            dj = F.element_at(d, F.lit(j))
+            dk = F.element_at(d, F.lit(j) + 1)
+            crd = (dj.x - d1.x) * (dk.y - d1.y) - (dk.x - d1.x) * (dj.y - d1.y)
+            out.append(
+                F.when(crd >= 0, F.array(d1, dj, dk))
+                .otherwise(F.array(d1, dk, dj))
+                .alias(f"cu{j}")
             )
-            for j in (2, 3)
-        }
-        subjects = [
-            (f"tri{i}", [fan_cols[2], fan_cols[3]], [f"a{i}2", f"a{i}3"])
-            for i in (2, 3)
-        ]
-        # prune to exactly the kernel inputs + carried keys/measures:
-        # everything else (r0/d0 struct arrays, grid cells, raw corner
-        # params) would otherwise ride the Arrow boundary for nothing
-        t = t.select(
-            "zone_id", "district_id", "sa", "da",
-            "s2", "s3", "t2", "t3", "tri2", "tri3",
-            *fan_cols[2], *fan_cols[3],
-        )
-        t = st_clip_tri_fans_area_arrow(t, subjects)
+            out.append(
+                F.when(crd > 0, 1.0)
+                .when(crd < 0, -1.0)
+                .otherwise(0.0)
+                .alias(f"t{j}")
+            )
+        return out
 
-        def term(i, j):
-            return (
-                F.col(f"s{i}") * F.col(f"t{j}") * F.col(f"a{i}{j}")
-            ).cast("decimal(28,6)")
+    def _dt_flat_cols():
+        out = []
+        for j in (2, 3):
+            cu = F.col(f"cu{j}")
+            for k in (1, 2, 3):
+                uk = F.element_at(cu, k)
+                out.append(uk.x.alias(f"u{j}{k}x"))
+                out.append(uk.y.alias(f"u{j}{k}y"))
+        return out
 
-        def neg(i, j):
-            return ((F.col(f"s{i}") * F.col(f"t{j}")) < 0).cast("bigint")
-
-        inter = (
-            (term(2, 2) + term(2, 3) + term(3, 2) + term(3, 3))
-            .cast("double")
-        )
-        out = t.select(
-            "zone_id",
-            "district_id",
-            inter.alias("_inter"),
-            F.col("sa").alias("_sa"),
-            F.col("da").alias("_da"),
-            (neg(2, 2) + neg(2, 3) + neg(3, 2) + neg(3, 3)).alias(
-                "n_neg_terms"
-            ),
-        )
-        return out.filter(F.col("_inter") > 0.0).select(
-            "zone_id",
-            "district_id",
-            F.col("_inter").alias("inter_area"),
-            F.round(
-                (F.col("_sa") + F.col("_da")) - F.col("_inter"), 6
-            ).alias("union_area"),
-            "n_neg_terms",
-        )
-
-    cand = zones.join(F.broadcast(districts), bbox_pred)
-    e = cand.withColumn(
-        "i", F.explode(F.sequence(F.lit(2), F.size("r0") - 1))
-    ).withColumn("j", F.explode(F.sequence(F.lit(2), F.size("d0") - 1)))
-    r, d = F.col("r0"), F.col("d0")
-    v1, vi = F.element_at(r, 1), F.element_at(r, F.col("i"))
-    vj = F.element_at(r, F.col("i") + 1)
-    crs = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
-    d1, dj = F.element_at(d, 1), F.element_at(d, F.col("j"))
-    dk = F.element_at(d, F.col("j") + 1)
-    crd = (dj.x - d1.x) * (dk.y - d1.y) - (dk.x - d1.x) * (dj.y - d1.y)
-    t = e.select(
-        "zone_id", "district_id", "sa", "da",
-        F.array(v1, vi, vj).alias("tri"),
-        F.when(crs > 0, 1.0).when(crs < 0, -1.0).otherwise(0.0).alias("s"),
-        # clip triangle: CCW-reordered (SH needs interior-left), sign
-        # carried separately — the data-driven twin of _fan_tris_signed
-        F.when(crd >= 0, F.array(d1, dj, dk))
-        .otherwise(F.array(d1, dk, dj))
-        .alias("cu"),
-        F.when(crd > 0, 1.0).when(crd < 0, -1.0).otherwise(0.0).alias("t"),
+    zt = zones.select("*", *_subject_fan_cols(4))
+    dt = (
+        districts.select("*", *memo("i62b_dt_cu", _dt_cu_cols))
+        .select("*", *memo("i62b_dt_flat", _dt_flat_cols))
+        .drop("cu2", "cu3")
     )
-    u1, u2, u3 = (F.element_at(F.col("cu"), k) for k in (1, 2, 3))
+    t = zt.join(F.broadcast(dt), bbox_pred)
+    fan_cols = {
+        j: tuple(f"u{j}{k}{ax}" for k in (1, 2, 3) for ax in ("x", "y"))
+        for j in (2, 3)
+    }
+    subjects = [
+        (f"tri{i}", [fan_cols[2], fan_cols[3]], [f"a{i}2", f"a{i}3"])
+        for i in (2, 3)
+    ]
+    # prune to exactly the kernel inputs + carried keys/measures:
+    # everything else (r0/d0 struct arrays, raw corner params) would
+    # otherwise ride the Arrow boundary for nothing
     t = t.select(
-        "zone_id", "district_id", "sa", "da", "tri", "s", "t",
-        u1.x.alias("u1x"), u1.y.alias("u1y"),
-        u2.x.alias("u2x"), u2.y.alias("u2y"),
-        u3.x.alias("u3x"), u3.y.alias("u3y"),
+        "zone_id", "district_id", "sa", "da",
+        "s2", "s3", "t2", "t3", "tri2", "tri3",
+        *fan_cols[2], *fan_cols[3],
     )
-    # one barrier between join/dedup/explode and the clip chains (the
-    # i59 constraint-propagation blowup discipline, i62b's generation)
-    # — the hash-certified Catalyst reference twin
-    t = _i59_barrier(t, "i62b")
-    edges = [("u1x", "u1y", "u2x", "u2y"), ("u2x", "u2y", "u3x", "u3y"),
-             ("u3x", "u3y", "u1x", "u1y")]
-    cur = "tri"
-    for step, (ax, ay, bx, by) in enumerate(edges):
-        nxt = f"g{step + 1}"
-        t = t.withColumn(
-            nxt,
-            st_clip_half_plane_cols(
-                F.col(cur), F.col(ax), F.col(ay), F.col(bx), F.col(by)
-            ),
-        )
-        cur = nxt
-    contrib = F.col("s") * F.col("t") * st_area_or_zero(F.col(cur))
-    agg = t.groupBy("zone_id", "district_id").agg(
-        F.sum(contrib.cast("decimal(28,6)")).cast("double").alias("_inter"),
-        F.max("sa").alias("_sa"),
-        F.max("da").alias("_da"),
-        F.sum(((F.col("s") * F.col("t")) < 0).cast("bigint")).alias(
-            "n_neg_terms"
-        ),
+    t = st_clip_tri_fans_area_arrow(t, subjects)
+
+    def term(i, j):
+        return (
+            F.col(f"s{i}") * F.col(f"t{j}") * F.col(f"a{i}{j}")
+        ).cast("decimal(28,6)")
+
+    def neg(i, j):
+        return ((F.col(f"s{i}") * F.col(f"t{j}")) < 0).cast("bigint")
+
+    inter = (term(2, 2) + term(2, 3) + term(3, 2) + term(3, 3)).cast("double")
+    out = t.select(
+        "zone_id",
+        "district_id",
+        inter.alias("_inter"),
+        F.col("sa").alias("_sa"),
+        F.col("da").alias("_da"),
+        (neg(2, 2) + neg(2, 3) + neg(3, 2) + neg(3, 3)).alias("n_neg_terms"),
     )
-    return agg.filter(F.col("_inter") > 0.0).select(
+    return out.filter(F.col("_inter") > 0.0).select(
         "zone_id",
         "district_id",
         F.col("_inter").alias("inter_area"),
@@ -6381,11 +6129,10 @@ def i65_hausdorff_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL IEEE-754 double chain the JVM HOF form evaluates, so
     min/max selection (exact, no arithmetic) yields BIT-IDENTICAL
     Hausdorff values (k3's BLAS-twin discipline; equality asserted
-    element-exact in tests/test_geometry.py). The nested-HOF refine
-    (refine='hof') is kept as the in-plan reference twin and is what
-    the DuckDB oracle mirrors — measured ~0.25 ms/pair interpreted-
-    lambda pacing (12.65 s at sf0.1's ~80k pairs) vs the Arrow
-    kernel's vectorized batches.
+    element-exact against the nested-HOF twin in tests/test_geometry.py,
+    the form the DuckDB oracle mirrors — measured ~0.25 ms/pair
+    interpreted-lambda pacing, 12.65 s at sf0.1's ~80k pairs, vs the
+    Arrow kernel's vectorized batches).
 
     Scale: candidates come only from the co-visitation equi-join
     (never all-pairs); per-pair refine is O(|A|·|B|) vectorized
@@ -6468,26 +6215,20 @@ def _sym_explode(df: DataFrame, val_col: str) -> DataFrame:
     ).select("_e.obj_a", "_e.obj_b", val_col)
 
 
-def hausdorff_similarity(
+def _hausdorff_pairs(
     spark: SparkSession,
     sf_dir: str,
     cell_size: float,
     min_shared: int = _I65_MIN_SHARED,
-    refine: str = "arrow",
 ) -> DataFrame:
-    """The i65 kernel with a parameterized filter grid (i65b derives
-    ``cell_size`` from density — the i11b re-bin lever applied to the
-    filter-and-refine join). Cell ids pack as cx·2²⁰ + cy so sub-unit
-    cells cannot collide (i65's literal form uses ×100 to stay
-    byte-identical with its oracle; the two packings agree on which
-    objects CO-VISIT for any cell ≥ 2.0/50 — collisions need cx ≥
-    2²⁰).
-
-    ``refine`` picks the exact-metric engine: 'arrow' (default) runs
-    the numpy batch kernel through mapInPandas; 'hof' runs the nested
-    Catalyst higher-order-function form. Both evaluate the identical
-    IEEE-754 chain — dx·dx + dy·dy, sqrt, then pure min/max selection
-    — so their outputs are bit-identical (asserted in tests)."""
+    """The filter stage of hausdorff_similarity: candidate pairs
+    (oa, ob, pa, pb) whose objects co-visit >= ``min_shared`` cells of
+    the ``cell_size`` grid, with both point lists — the refine input
+    the test-side Catalyst twin reads too. Cell ids pack as
+    cx·2²⁰ + cy so sub-unit cells cannot collide (i65's literal form
+    uses ×100 to stay byte-identical with its oracle; the two packings
+    agree on which objects CO-VISIT for any cell ≥ 2.0/50 — collisions
+    need cx ≥ 2²⁰)."""
     f = fixes(spark, sf_dir).filter(F.col("obj_id") % 3 == 0)
     sub = f.select("obj_id", "x", "y")
     # localCheckpoint: tr feeds BOTH sides of the pair join — without
@@ -6517,21 +6258,29 @@ def hausdorff_similarity(
         )
     memb = sub.select("obj_id", cell.alias("cell"))
     shared = _covisit_shared_pairs(memb, min_shared)
-    pairs = (
-        shared.join(
-            tr.select(F.col("obj_id").alias("oa"), F.col("pts").alias("pa")),
-            "oa",
-        )
-        .join(
-            tr.select(F.col("obj_id").alias("ob"), F.col("pts").alias("pb")),
-            "ob",
-        )
+    return shared.join(
+        tr.select(F.col("obj_id").alias("oa"), F.col("pts").alias("pa")),
+        "oa",
+    ).join(
+        tr.select(F.col("obj_id").alias("ob"), F.col("pts").alias("pb")),
+        "ob",
     )
 
-    if refine == "arrow":
-        hd = _hausdorff_refine_arrow(pairs)
-    else:
-        hd = _hausdorff_refine_hof(pairs)
+
+def hausdorff_similarity(
+    spark: SparkSession,
+    sf_dir: str,
+    cell_size: float,
+    min_shared: int = _I65_MIN_SHARED,
+) -> DataFrame:
+    """The i65 kernel with a parameterized filter grid (i65b derives
+    ``cell_size`` from density — the i11b re-bin lever applied to the
+    filter-and-refine join): candidate pairs (_hausdorff_pairs) →
+    the numpy batch refine (_hausdorff_refine_arrow) → both directions
+    → top-_I65_K per object by (h, obj_b)."""
+    hd = _hausdorff_refine_arrow(
+        _hausdorff_pairs(spark, sf_dir, cell_size, min_shared)
+    )
     sym = _sym_explode(hd, "h")
     w = Window.partitionBy("obj_a").orderBy("h", "obj_b")
     return (
@@ -6541,49 +6290,19 @@ def hausdorff_similarity(
     )
 
 
-def _hausdorff_refine_hof(pairs: DataFrame) -> DataFrame:
-    """Nested-HOF refine: max over A of min over B of the Euclidean
-    distance, entirely inside Catalyst expressions. The in-plan
-    reference twin of the Arrow kernel (and what the DuckDB oracle
-    mirrors) — interpreted-lambda pacing makes it ~0.25 ms/pair, so
-    it is the small-candidate-count / certification engine."""
-
-    def hdist(pa, pb):
-        return F.array_max(
-            F.transform(
-                pa,
-                lambda p: F.array_min(
-                    F.transform(
-                        pb,
-                        lambda q: F.sqrt(
-                            (p.x - q.x) * (p.x - q.x)
-                            + (p.y - q.y) * (p.y - q.y)
-                        ),
-                    )
-                ),
-            )
-        )
-
-    return pairs.select(
-        "oa",
-        "ob",
-        F.greatest(
-            hdist(F.col("pa"), F.col("pb")), hdist(F.col("pb"), F.col("pa"))
-        ).alias("h"),
-    )
-
-
 def _hausdorff_refine_arrow(pairs: DataFrame) -> DataFrame:
     """Arrow batch refine: candidate pairs stream through mapInPandas
     as flat array<double> coordinate columns; each pair's full
     pairwise-distance matrix is one numpy broadcast — dx·dx + dy·dy
     then sqrt, the IDENTICAL elementary-op sequence (and therefore the
-    identical IEEE-754 doubles) the HOF form evaluates per element.
-    Directed Hausdorff h(A,B) = d.min(axis=1).max() and h(B,A) =
-    d.min(axis=0).max() come off the SAME matrix (the HOF form
-    computes the transpose pass separately — same values, arithmetic-
-    free selection, so still bit-identical); symmetric = max of the
-    two. Zero extra shuffle: the map runs on the pair join's output
+    identical IEEE-754 doubles) the nested-HOF Catalyst form and the
+    DuckDB oracle evaluate per element. Directed Hausdorff
+    h(A,B) = d.min(axis=1).max() and h(B,A) = d.min(axis=0).max() come
+    off the SAME matrix (the HOF form computes the transpose pass
+    separately — same values, arithmetic-free selection, so still
+    bit-identical; the HOF twin ``_hausdorff_refine_hof`` in
+    tests/test_geometry.py asserts it); symmetric = max of the two.
+    Zero extra shuffle: the map runs on the pair join's output
     partitions, one Python worker per core, Arrow columnar transfer
     both ways."""
     import numpy as np

@@ -8,12 +8,22 @@ filter pushdown replace any hand-rolled scan loop.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.sources import load
 from glonassdatamining_spark.stable import dsum, o_dsum, ts_ms, o_ts_ms
+
+# The one scratch root of the package: derived datasets, stream
+# sources and sinks, and persisted model artifacts all live under
+# ``.tmpdata`` at the top of the checkout (git-ignored).
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".tmpdata",
+)
 
 
 def _derived_base(sf_dir: str, name: str, *tables: str) -> str:
@@ -24,7 +34,6 @@ def _derived_base(sf_dir: str, name: str, *tables: str) -> str:
     copy. Stale siblings from older fixtures are removed."""
     import glob as _glob
     import hashlib
-    import os
     import shutil
 
     parts = []
@@ -37,8 +46,8 @@ def _derived_base(sf_dir: str, name: str, *tables: str) -> str:
             parts.append(f"{t}:missing")
     fp = hashlib.md5("|".join(parts).encode()).hexdigest()[:8]
     sf = os.path.basename(sf_dir.rstrip("/"))
-    base = f"/root/repo/.tmpdata/{name}_{sf}_{fp}"
-    for old in _glob.glob(f"/root/repo/.tmpdata/{name}_{sf}_*"):
+    base = f"{SCRATCH_ROOT}/{name}_{sf}_{fp}"
+    for old in _glob.glob(f"{SCRATCH_ROOT}/{name}_{sf}_*"):
         if old != base:
             shutil.rmtree(old, ignore_errors=True)
     return base

@@ -14,6 +14,7 @@ from pyspark.sql.functions import broadcast
 
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.sources import load
+from glonassdatamining_spark.sources.scans import SCRATCH_ROOT
 from glonassdatamining_spark.stable import EVENTS_CTE, dec, dsum, o_dsum
 
 
@@ -210,8 +211,8 @@ def l8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     sf = os.path.basename(sf_dir.rstrip("/"))
-    src = f"/root/repo/.tmpdata/l8_src_{sf}"
-    out = f"/root/repo/.tmpdata/l8_sink_{sf}"
+    src = f"{SCRATCH_ROOT}/l8_src_{sf}"
+    out = f"{SCRATCH_ROOT}/l8_sink_{sf}"
     ckpt = out + "_ckpt"
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from glonassdatamining_spark.operators.udf_ops import _M8_GAP_MS, _m8_fold
+from glonassdatamining_spark.sources.scans import SCRATCH_ROOT
 from glonassdatamining_spark.stable import dsum
 
 _EVENTS_STREAM_SCHEMA = (
@@ -35,7 +36,7 @@ def _sweep_staging(prefix: str) -> None:
     repeated sessions don't accumulate fixture copies."""
     import glob
 
-    for old in glob.glob(f"/root/repo/.tmpdata/{prefix}*"):
+    for old in glob.glob(f"{SCRATCH_ROOT}/{prefix}*"):
         shutil.rmtree(old, ignore_errors=True)
 
 
@@ -53,7 +54,7 @@ def _staged_events_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, 
     route l12 to its own single-file staging instead."""
     sf = os.path.basename(sf_dir.rstrip("/"))
     _sweep_staging(f"stream_src_{sf}_")
-    src = f"/root/repo/.tmpdata/stream_src_{sf}_{uuid.uuid4().hex[:8]}"
+    src = f"{SCRATCH_ROOT}/stream_src_{sf}_{uuid.uuid4().hex[:8]}"
     os.makedirs(src)
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     raw = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(src)
@@ -173,7 +174,7 @@ def l4_streaming(spark: SparkSession, sf_dir: str):
 
     sf = os.path.basename(sf_dir.rstrip("/"))
     _sweep_staging(f"l4_src_{sf}_")
-    src = f"/root/repo/.tmpdata/l4_src_{sf}_{uuid.uuid4().hex[:8]}"
+    src = f"{SCRATCH_ROOT}/l4_src_{sf}_{uuid.uuid4().hex[:8]}"
     os.makedirs(src)
     ev_static = load(spark, sf_dir, "events")
     split = ev_static.approxQuantile("event_id", [2.0 / 3.0], 0.0)[0]
@@ -275,7 +276,7 @@ def m8_streaming(
 
         sfname = os.path.basename(sf_dir.rstrip("/"))
         _sweep_staging(f"m8_src_{sfname}_")
-        src = f"/root/repo/.tmpdata/m8_src_{sfname}_{uuid.uuid4().hex[:8]}"
+        src = f"{SCRATCH_ROOT}/m8_src_{sfname}_{uuid.uuid4().hex[:8]}"
         os.makedirs(src)
         tbl = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
         n = tbl.num_rows
@@ -576,8 +577,8 @@ def l11_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     _sweep_staging(f"merge_src_{sf}_")
     _sweep_staging(f"merge_tgt_{sf}_")
     run = uuid.uuid4().hex[:8]
-    src = f"/root/repo/.tmpdata/merge_src_{sf}_{run}"
-    tgt = f"/root/repo/.tmpdata/merge_tgt_{sf}_{run}"
+    src = f"{SCRATCH_ROOT}/merge_src_{sf}_{run}"
+    tgt = f"{SCRATCH_ROOT}/merge_tgt_{sf}_{run}"
     from glonassdatamining_spark.sources import _scan
 
     ev = _scan(spark, sf_dir, "events")
@@ -685,7 +686,7 @@ def _staged_nudged_events_stream(
 
     sf = os.path.basename(sf_dir.rstrip("/"))
     _sweep_staging(f"{prefix}_src_{sf}_")
-    src = f"/root/repo/.tmpdata/{prefix}_src_{sf}_{uuid.uuid4().hex[:8]}"
+    src = f"{SCRATCH_ROOT}/{prefix}_src_{sf}_{uuid.uuid4().hex[:8]}"
     os.makedirs(src)
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     newest_id = raw.agg(F.max("event_id")).collect()[0][0]
@@ -838,7 +839,7 @@ def l16_streaming(spark: SparkSession, sf_dir: str) -> str:
     register_bus(spark)
     register_bus_sink(spark)
     _sweep_staging("l16_sink_")
-    root = f"/root/repo/.tmpdata/l16_sink_{uuid.uuid4().hex[:8]}"
+    root = f"{SCRATCH_ROOT}/l16_sink_{uuid.uuid4().hex[:8]}"
     q = (
         spark.readStream.format("gnssbus")
         .load()

@@ -1654,13 +1654,56 @@ def test_k56_matches_python_and_density(spark):
     assert 0.3 < avg < 0.5, avg  # expected 2/(w+1) = 0.4
 
 
+def _winnow_hof(docs, text_col="text"):
+    """The Catalyst twin of ``winnowing_fingerprints``: md5 k-gram
+    hashes and sliding-window minima as O(n·w) interpreted slices —
+    the form the DuckDB oracle mirrors literally. fps keep first
+    appearance order; the contract is the SET."""
+    from glonassdatamining_spark.operators.llm_ops import _K56_K, _K56_W
+
+    toks = F.split(F.col(text_col), " ")
+    d = docs.withColumn("_toks", toks)
+    n = F.size("_toks")
+    hs = F.when(
+        n >= _K56_K,
+        F.transform(
+            F.sequence(F.lit(1), n - (_K56_K - 1)),
+            lambda i: F.md5(
+                F.concat_ws(
+                    " ",
+                    F.element_at("_toks", i),
+                    F.element_at("_toks", i + 1),
+                    F.element_at("_toks", i + 2),
+                )
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    d = d.withColumn("_hs", hs).drop("_toks")
+    nk = F.size("_hs")
+    minima = F.transform(
+        F.sequence(F.lit(1), F.greatest(nk - (_K56_W - 1), F.lit(1))),
+        lambda i: F.array_min(F.slice("_hs", i, _K56_W)),
+    )
+    return (
+        d.withColumn("n_kgrams", nk.cast("bigint"))
+        .withColumn(
+            "fps",
+            F.when(nk >= 1, F.array_distinct(minima)).otherwise(
+                F.array().cast("array<string>")
+            ),
+        )
+        .drop("_hs")
+    )
+
+
 def test_k56_arrow_engine_bit_identical_to_hof(spark):
-    """i62b's engine-equality discipline for the k56 Arrow kernel
+    """i62b's twin-equality discipline for the k56 Arrow kernel
     (round-10 verdict ask #7): per doc, n_kgrams AND the fingerprint
-    SET must be bit-identical between the 'arrow' (hashlib +
-    monotonic deque, O(n)) and 'hof' (Catalyst slice minima, O(n·w))
-    engines on the fixture corpus plus short-doc edge cases (0, k-1,
-    k, w, w+1 tokens — the single-window convention boundary)."""
+    SET must be bit-identical between the Arrow kernel (hashlib +
+    monotonic deque, O(n)) and its Catalyst twin ``_winnow_hof``
+    (slice minima, O(n·w)) on the fixture corpus plus short-doc edge
+    cases (0, k-1, k, w, w+1 tokens — the single-window convention
+    boundary)."""
     from conftest import SF_DIR
     from glonassdatamining_spark.operators.llm_ops import (
         winnowing_fingerprints,
@@ -1681,11 +1724,11 @@ def test_k56_arrow_engine_bit_identical_to_hof(spark):
     docs = docs.unionByName(edge)
     a = {
         r.doc_id: (r.n_kgrams, sorted(r.fps))
-        for r in winnowing_fingerprints(docs, engine="arrow").collect()
+        for r in winnowing_fingerprints(docs).collect()
     }
     h = {
         r.doc_id: (r.n_kgrams, sorted(r.fps))
-        for r in winnowing_fingerprints(docs, engine="hof").collect()
+        for r in _winnow_hof(docs).collect()
     }
     assert a.keys() == h.keys() and a
     for kk in a:

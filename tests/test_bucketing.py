@@ -74,13 +74,14 @@ def test_compaction_reduces_file_count(spark):
 
     from glonassdatamining_spark.operators import filters  # noqa: F401 — registry
     from glonassdatamining_spark import registry
+    from glonassdatamining_spark.sources.scans import SCRATCH_ROOT
 
     registry.get("a10_compaction").builder(spark, SF_DIR).count()
     sf = SF_DIR.rstrip("/").split("/")[-1]
     # Cache dirs are fingerprint-keyed on the source fixture (see
     # sources.scans._derived_base) — glob across the fingerprint.
-    frag = glob.glob(f"/root/repo/.tmpdata/compact_{sf}_*/frag/*.parquet")
-    compacted = glob.glob(f"/root/repo/.tmpdata/compact_{sf}_*/compacted/*.parquet")
+    frag = glob.glob(f"{SCRATCH_ROOT}/compact_{sf}_*/frag/*.parquet")
+    compacted = glob.glob(f"{SCRATCH_ROOT}/compact_{sf}_*/compacted/*.parquet")
     assert len(frag) == 32
     assert 1 <= len(compacted) <= 4
 

@@ -726,8 +726,10 @@ def _i60_zone(spark, zone_id, pts):
     )
 
 
-def _i60_run(spark, cases):
-    """cases: list of (zone_id, ring). Returns {zone_id: Row}."""
+def _i60_run(spark, cases, nv):
+    """cases: list of (zone_id, ring), every ring ``nv`` vertices —
+    measured by i60's own fan-contraction kernel. Returns
+    {zone_id: Row}."""
     from functools import reduce
 
     from glonassdatamining_spark.operators.spatiotemporal import (
@@ -738,7 +740,7 @@ def _i60_run(spark, cases):
         lambda a, b: a.unionByName(b),
         [_i60_zone(spark, zid, pts) for zid, pts in cases],
     )
-    return {r.zone_id: r for r in concave_overlay_areas(z).collect()}
+    return {r.zone_id: r for r in concave_overlay_areas(z, nv=nv).collect()}
 
 
 def test_i60_reference_cases(spark):
@@ -753,7 +755,7 @@ def test_i60_reference_cases(spark):
             (cx + w, cy + h), (cx, cy), (cx - w, cy + h), (cx, cy - h),
         ]
 
-    got = _i60_run(spark, [
+    got = _i60_run(spark, nv=4, cases=[
         # 1: fully inside the bottom bar -> inter == dart area (6)
         (1, dart(30, 25, 3, 2)),
         # 2: fully outside (right of the bar) -> inter == 0
@@ -808,7 +810,7 @@ def test_i60_fan_identity_general_ngon(spark):
             if inside(comb, x, y) and inside(L, x, y):
                 n_in += 1
     raster = n_in * step * step
-    got = _i60_run(spark, [(1, comb)])[1]
+    got = _i60_run(spark, [(1, comb)], nv=6)[1]
     # comb is entirely within the bar here, so inter == subj exactly
     # (area = 30x8 bottom slab + 10x8 right tooth = 320)
     assert got.subj_area == pytest.approx(320.0, abs=1e-9)
@@ -822,7 +824,7 @@ def test_i60_cw_ring_orientation_guard(spark):
     dart summed to MINUS the intersection area)."""
     dart_ccw = [(63.0, 33.0), (60.0, 30.0), (57.0, 33.0), (60.0, 28.0)]
     dart_cw = list(reversed(dart_ccw))
-    got = _i60_run(spark, [(1, dart_ccw), (2, dart_cw)])
+    got = _i60_run(spark, [(1, dart_ccw), (2, dart_cw)], nv=4)
     a, b = got[1], got[2]
     assert a.inter_area > 0
     for f in ("subj_area", "inter_area", "union_area", "diff_area"):
@@ -1165,65 +1167,237 @@ def test_i65b_equals_i65_at_reference_density(spark):
     assert cell_big < cell_small
 
 
+def _concave_overlay_areas_hof(z, clip_tris, clip_area):
+    """The Catalyst twin of ``concave_overlay_areas`` over a guarded
+    (zone_id, r0, sa) frame: explode the fan index, one
+    st_convex_clip chain per clip triangle, then a per-zone SUM of the
+    DECIMAL(28,6) signed contributions — the oracle's own shape."""
+    e = z.select(
+        "zone_id",
+        "sa",
+        "r0",
+        F.explode(F.sequence(F.lit(2), F.size("r0") - 1)).alias("i"),
+    )
+    r = F.col("r0")
+    v1 = F.element_at(r, 1)
+    vi = F.element_at(r, F.col("i"))
+    vj = F.element_at(r, F.col("i") + 1)
+    cross = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
+    t = e.select(
+        "zone_id",
+        "sa",
+        F.array(v1, vi, vj).alias("tri"),
+        F.when(cross > 0, 1.0).when(cross < 0, -1.0).otherwise(0.0).alias("s"),
+    )
+    areas = None
+    for j, (tsign, clip_tri) in enumerate(clip_tris):
+        t = G.st_convex_clip(t, "tri", clip_tri, f"g{j}_c")
+        term = G.st_area_or_zero(F.col(f"g{j}_c"))
+        if tsign < 0:
+            term = -term
+        areas = term if areas is None else areas + term
+    contrib = F.col("s") * areas
+    agg = t.groupBy("zone_id").agg(
+        F.max("sa").alias("_sa"),
+        F.sum(contrib.cast("decimal(28,6)")).cast("double").alias("_inter"),
+        F.sum((F.col("s") < 0).cast("bigint")).alias("n_neg_tris"),
+    )
+    return agg.select(
+        "zone_id",
+        F.round("_sa", 6).alias("subj_area"),
+        F.col("_inter").alias("inter_area"),
+        F.round((F.col("_sa") + F.lit(clip_area)) - F.col("_inter"), 6).alias(
+            "union_area"
+        ),
+        F.round(F.col("_sa") - F.col("_inter"), 6).alias("diff_area"),
+        "n_neg_tris",
+    )
+
+
+def _i62_hof(spark, sf_dir):
+    """The Catalyst twin of i62: explode the subject fan, one 3-step
+    st_clip_half_plane_cols chain per chevron fan triangle behind one
+    persisted barrier (the i59 expression-blowup guard), then a
+    per-pair SUM of the DECIMAL(28,6) contributions."""
+    from glonassdatamining_spark.operators import spatiotemporal as st
+
+    st._i59_release_barriers("i62")  # rotate i62's OWN generations
+    zones, districts, bbox_pred = st._i62_sides(spark, sf_dir)
+    cand = zones.join(F.broadcast(districts), bbox_pred)
+    e = cand.withColumn("i", F.explode(F.array(F.lit(2), F.lit(3))))
+    r = F.col("r0")
+    v1 = F.element_at(r, 1)
+    vi = F.element_at(r, F.col("i"))
+    vj = F.element_at(r, F.col("i") + 1)
+    cross = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
+    t = e.select(
+        "zone_id", "district_id", "w", "h", "dx", "dy", "rd",
+        F.array(v1, vi, vj).alias("tri"),
+        F.when(cross > 0, 1.0).when(cross < 0, -1.0).otherwise(0.0).alias("s"),
+    )
+    # one barrier between the join/dedup/explode and the clip chains
+    # (the i59 constraint-propagation blowup discipline)
+    t = st._i59_barrier(t, "i62")
+    terms = []
+    for j, (tsign, fan) in enumerate(st._I62_CLIP_FANS):
+        cur = "tri"
+        for step in range(3):
+            (ox1, oy1), (ox2, oy2) = fan[step], fan[(step + 1) % 3]
+            nxt = f"g{j}_{step + 1}"
+            t = t.withColumn(
+                nxt,
+                G.st_clip_half_plane_cols(
+                    F.col(cur),
+                    F.col("dx") + F.col("rd") * F.lit(ox1),
+                    F.col("dy") + F.col("rd") * F.lit(oy1),
+                    F.col("dx") + F.col("rd") * F.lit(ox2),
+                    F.col("dy") + F.col("rd") * F.lit(oy2),
+                ),
+            )
+            cur = nxt
+        area = G.st_area_or_zero(F.col(cur))
+        terms.append(-area if tsign < 0 else area)
+    contrib = F.col("s") * (terms[0] + terms[1])
+    agg = t.groupBy("zone_id", "district_id").agg(
+        F.sum(contrib.cast("decimal(28,6)")).cast("double").alias("_inter"),
+        F.max(F.col("w") * F.col("h")).alias("_za"),
+        F.max(F.col("rd") * F.col("rd")).alias("_da"),
+    )
+    return agg.filter(F.col("_inter") > 0.0).select(
+        "zone_id",
+        "district_id",
+        F.col("_inter").alias("inter_area"),
+        F.round((F.col("_za") + F.col("_da")) - F.col("_inter"), 6).alias(
+            "union_area"
+        ),
+    )
+
+
+def _i62b_hof(spark, sf_dir):
+    """The Catalyst twin of i62b: explode BOTH fan indices, one 3-step
+    clip chain per (i, j) row with the CCW clip endpoints bound once as
+    plain attributes, behind one persisted barrier, then a per-pair SUM
+    of the DECIMAL(28,6) terms — the oracle's own shape."""
+    from glonassdatamining_spark.operators import spatiotemporal as st
+
+    st._i59_release_barriers("i62b")  # rotate i62b's own generations
+    zones, districts, bbox_pred = st._i62b_sides(spark, sf_dir)
+    cand = zones.join(F.broadcast(districts), bbox_pred)
+    e = cand.withColumn(
+        "i", F.explode(F.sequence(F.lit(2), F.size("r0") - 1))
+    ).withColumn("j", F.explode(F.sequence(F.lit(2), F.size("d0") - 1)))
+    r, d = F.col("r0"), F.col("d0")
+    v1, vi = F.element_at(r, 1), F.element_at(r, F.col("i"))
+    vj = F.element_at(r, F.col("i") + 1)
+    crs = (vi.x - v1.x) * (vj.y - v1.y) - (vj.x - v1.x) * (vi.y - v1.y)
+    d1, dj = F.element_at(d, 1), F.element_at(d, F.col("j"))
+    dk = F.element_at(d, F.col("j") + 1)
+    crd = (dj.x - d1.x) * (dk.y - d1.y) - (dk.x - d1.x) * (dj.y - d1.y)
+    t = e.select(
+        "zone_id", "district_id", "sa", "da",
+        F.array(v1, vi, vj).alias("tri"),
+        F.when(crs > 0, 1.0).when(crs < 0, -1.0).otherwise(0.0).alias("s"),
+        # clip triangle: CCW-reordered (SH needs interior-left), sign
+        # carried separately — the data-driven twin of _fan_tris_signed
+        F.when(crd >= 0, F.array(d1, dj, dk))
+        .otherwise(F.array(d1, dk, dj))
+        .alias("cu"),
+        F.when(crd > 0, 1.0).when(crd < 0, -1.0).otherwise(0.0).alias("t"),
+    )
+    u1, u2, u3 = (F.element_at(F.col("cu"), k) for k in (1, 2, 3))
+    t = t.select(
+        "zone_id", "district_id", "sa", "da", "tri", "s", "t",
+        u1.x.alias("u1x"), u1.y.alias("u1y"),
+        u2.x.alias("u2x"), u2.y.alias("u2y"),
+        u3.x.alias("u3x"), u3.y.alias("u3y"),
+    )
+    # one barrier between join/dedup/explode and the clip chains (the
+    # i59 constraint-propagation blowup discipline, i62b's generation)
+    t = st._i59_barrier(t, "i62b")
+    edges = [("u1x", "u1y", "u2x", "u2y"), ("u2x", "u2y", "u3x", "u3y"),
+             ("u3x", "u3y", "u1x", "u1y")]
+    cur = "tri"
+    for step, (ax, ay, bx, by) in enumerate(edges):
+        nxt = f"g{step + 1}"
+        t = t.withColumn(
+            nxt,
+            G.st_clip_half_plane_cols(
+                F.col(cur), F.col(ax), F.col(ay), F.col(bx), F.col(by)
+            ),
+        )
+        cur = nxt
+    contrib = F.col("s") * F.col("t") * G.st_area_or_zero(F.col(cur))
+    agg = t.groupBy("zone_id", "district_id").agg(
+        F.sum(contrib.cast("decimal(28,6)")).cast("double").alias("_inter"),
+        F.max("sa").alias("_sa"),
+        F.max("da").alias("_da"),
+        F.sum(((F.col("s") * F.col("t")) < 0).cast("bigint")).alias(
+            "n_neg_terms"
+        ),
+    )
+    return agg.filter(F.col("_inter") > 0.0).select(
+        "zone_id",
+        "district_id",
+        F.col("_inter").alias("inter_area"),
+        F.round((F.col("_sa") + F.col("_da")) - F.col("_inter"), 6).alias(
+            "union_area"
+        ),
+        "n_neg_terms",
+    )
+
+
 def test_i62_i62b_arrow_engine_bit_identical_to_hof(spark):
-    """The Arrow fan-contraction engine vs the Catalyst clip-chain
-    engine for BOTH concave overlay joins: identical row sets with
-    EXACT == on every double (inter/union areas, n_neg_terms) — the
-    clip kernel replays the Catalyst op order element-for-element and
-    the row-wise decimal term sum is exact and order-free, so any
-    difference means the kernels diverged."""
+    """The Arrow fan-contraction kernels vs their Catalyst clip-chain
+    twins (``_i62_hof``, ``_i62b_hof``) for BOTH concave overlay joins:
+    identical row sets with EXACT == on every double (inter/union
+    areas, n_neg_terms) — the clip kernel replays the Catalyst op
+    order element-for-element and the row-wise decimal term sum is
+    exact and order-free, so any difference means the kernels
+    diverged."""
     from glonassdatamining_spark.operators import spatiotemporal as st
     from tests.conftest import SF_DIR
 
     a = {
         (r.zone_id, r.district_id): (r.inter_area, r.union_area)
-        for r in st.i62_concave_overlay_join(
-            spark, SF_DIR, engine="arrow"
-        ).collect()
+        for r in st.i62_concave_overlay_join(spark, SF_DIR).collect()
     }
     h = {
         (r.zone_id, r.district_id): (r.inter_area, r.union_area)
-        for r in st.i62_concave_overlay_join(
-            spark, SF_DIR, engine="hof"
-        ).collect()
+        for r in _i62_hof(spark, SF_DIR).collect()
     }
     assert a and a == h
 
     ab = {
         (r.zone_id, r.district_id): (r.inter_area, r.union_area, r.n_neg_terms)
-        for r in st.i62b_concave_overlay_general(
-            spark, SF_DIR, engine="arrow"
-        ).collect()
+        for r in st.i62b_concave_overlay_general(spark, SF_DIR).collect()
     }
     hb = {
         (r.zone_id, r.district_id): (r.inter_area, r.union_area, r.n_neg_terms)
-        for r in st.i62b_concave_overlay_general(
-            spark, SF_DIR, engine="hof"
-        ).collect()
+        for r in _i62b_hof(spark, SF_DIR).collect()
     }
     assert ab and ab == hb
 
 
 def test_i60_arrow_engine_bit_identical_to_hof(spark):
-    """The i60 arrow fan-contraction (round-11) vs the Catalyst
-    explode + HOF clip-chain + groupBy reference: identical row sets
-    with EXACT == on every column — the Arrow kernel replays the
-    Catalyst op order element-for-element, the per-clip-tri double
-    fold keeps the hof chain's left-to-right order, and the row-wise
-    decimal term sum is exact, so any difference means divergence."""
+    """The i60 arrow fan-contraction (round-11) vs its Catalyst twin
+    ``_concave_overlay_areas_hof`` (explode + HOF clip-chain +
+    groupBy) on i60's own guarded input: identical row sets with EXACT
+    == on every column — the Arrow kernel replays the Catalyst op
+    order element-for-element, the per-clip-tri double fold keeps the
+    hof chain's left-to-right order, and the row-wise decimal term sum
+    is exact, so any difference means divergence."""
     from glonassdatamining_spark.operators import spatiotemporal as st
     from tests.conftest import SF_DIR
 
     a = {
         r.zone_id: tuple(r)
-        for r in st.i60_concave_overlay_booleans(
-            spark, SF_DIR, engine="arrow"
-        ).collect()
+        for r in st.i60_concave_overlay_booleans(spark, SF_DIR).collect()
     }
+    z = st._ccw_with_area(st._i60_zones(spark, SF_DIR))
     h = {
         r.zone_id: tuple(r)
-        for r in st.i60_concave_overlay_booleans(
-            spark, SF_DIR, engine="hof"
+        for r in _concave_overlay_areas_hof(
+            z, st._I60_L_TRIS, st._I60_L_AREA
         ).collect()
     }
     assert a and a == h
@@ -1282,28 +1456,73 @@ def test_covisit_shared_pairs_drops_null_cells(spark):
     assert got == {(1, 2)}
 
 
+def _hausdorff_refine_hof(pairs):
+    """Nested-HOF refine: max over A of min over B of the Euclidean
+    distance, entirely inside Catalyst expressions. The reference twin
+    of the Arrow kernel (and what the DuckDB oracle mirrors) —
+    interpreted-lambda pacing makes it ~0.25 ms/pair."""
+
+    def hdist(pa, pb):
+        return F.array_max(
+            F.transform(
+                pa,
+                lambda p: F.array_min(
+                    F.transform(
+                        pb,
+                        lambda q: F.sqrt(
+                            (p.x - q.x) * (p.x - q.x)
+                            + (p.y - q.y) * (p.y - q.y)
+                        ),
+                    )
+                ),
+            )
+        )
+
+    return pairs.select(
+        "oa",
+        "ob",
+        F.greatest(
+            hdist(F.col("pa"), F.col("pb")), hdist(F.col("pb"), F.col("pa"))
+        ).alias("h"),
+    )
+
+
+def _hausdorff_similarity_hof(spark, sf_dir, cell_size):
+    """``hausdorff_similarity`` with the nested-HOF refine in place of
+    the Arrow kernel: same candidate pairs, same top-k tail."""
+    from pyspark.sql import Window
+
+    from glonassdatamining_spark.operators import spatiotemporal as st
+
+    hd = _hausdorff_refine_hof(st._hausdorff_pairs(spark, sf_dir, cell_size))
+    w = Window.partitionBy("obj_a").orderBy("h", "obj_b")
+    return (
+        st._sym_explode(hd, "h")
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= st._I65_K)
+        .select("obj_a", "obj_b", F.round("h", 4).alias("hausdorff"))
+    )
+
+
 def test_i65_arrow_refine_bit_identical_to_hof(spark):
-    """The Arrow numpy batch refine vs the nested-HOF Catalyst refine:
-    BIT-IDENTICAL doubles, not approx — both evaluate the same
-    IEEE-754 elementary-op sequence (dx·dx + dy·dy, sqrt, then pure
-    min/max selection), so any difference would mean the kernels have
-    diverged (k3's BLAS-twin discipline). Compared on the RAW h
-    values upstream of the final ROUND so the certification covers
-    the full doubles, not the 4-decimal projection."""
+    """The Arrow numpy batch refine vs the nested-HOF Catalyst refine
+    (``_hausdorff_refine_hof``): BIT-IDENTICAL doubles, not approx —
+    both evaluate the same IEEE-754 elementary-op sequence (dx·dx +
+    dy·dy, sqrt, then pure min/max selection), so any difference would
+    mean the kernels have diverged (k3's BLAS-twin discipline).
+    Compared on the RAW h values upstream of the final ROUND so the
+    certification covers the full doubles, not the 4-decimal
+    projection."""
     from glonassdatamining_spark.operators import spatiotemporal as st
     from tests.conftest import SF_DIR
 
     arrow = {
         (r.obj_a, r.obj_b): r.hausdorff
-        for r in st.hausdorff_similarity(
-            spark, SF_DIR, cell_size=2.0, refine="arrow"
-        ).collect()
+        for r in st.hausdorff_similarity(spark, SF_DIR, cell_size=2.0).collect()
     }
     hof = {
         (r.obj_a, r.obj_b): r.hausdorff
-        for r in st.hausdorff_similarity(
-            spark, SF_DIR, cell_size=2.0, refine="hof"
-        ).collect()
+        for r in _hausdorff_similarity_hof(spark, SF_DIR, 2.0).collect()
     }
     assert arrow and arrow == hof  # exact ==, no approx
 
@@ -1327,7 +1546,7 @@ def test_i65_arrow_refine_bit_identical_to_hof(spark):
         (r.oa, r.ob): r.h for r in st._hausdorff_refine_arrow(pairs).collect()
     }
     raw_hof = {
-        (r.oa, r.ob): r.h for r in st._hausdorff_refine_hof(pairs).collect()
+        (r.oa, r.ob): r.h for r in _hausdorff_refine_hof(pairs).collect()
     }
     assert raw_arrow and raw_arrow == raw_hof  # full-precision doubles
 

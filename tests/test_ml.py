@@ -565,7 +565,9 @@ def test_k14c_pq_recall_compression_and_determinism(spark):
     import glob
     import os
 
-    roots = glob.glob("/root/repo/.tmpdata/pq_sf0.001_*/codes")
+    from glonassdatamining_spark.sources.scans import SCRATCH_ROOT
+
+    roots = glob.glob(f"{SCRATCH_ROOT}/pq_sf0.001_*/codes")
     assert roots, "codes ManifestTable missing"
     from glonassdatamining_spark.lakehouse import ManifestTable
 

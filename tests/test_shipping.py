@@ -1,10 +1,14 @@
-"""The package's shipping rule and memo lifetime.
+"""The package's shipping rule, memo lifetime and one-path rules.
 
 Python kernels travel to workers by value (the package registers
 itself with cloudpickle in ``__init__``), so no module may patch
 ``sys.path`` for workers or wrap kernels in ``_make_*`` factories to
 force by-value pickling. Driver-side handles go through the one
 ``session.memo`` and live exactly as long as their application.
+Each operator has one code path: no function takes an ``engine`` or
+``refine`` switch (reference twins live in the tests that compare
+against them), and scratch files live under the one
+``sources.scans.SCRATCH_ROOT``.
 """
 
 from __future__ import annotations
@@ -115,6 +119,31 @@ def _lru_caches(tree: ast.AST) -> list[int]:
     ]
 
 
+def _engine_switches(tree: ast.AST) -> list[tuple[int, str]]:
+    """Functions that take a parameter named ``engine`` or ``refine``:
+    an alternative code path selected at call time."""
+    found = []
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            a = fn.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if arg.arg in ("engine", "refine"):
+                    found.append((fn.lineno, arg.arg))
+    return found
+
+
+def _scratch_literals(tree: ast.AST) -> list[int]:
+    """Lines with a string literal naming the ``.tmpdata`` scratch
+    directory (f-string parts included)."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and ".tmpdata" in node.value
+    ]
+
+
 def test_guard_detects_each_violation():
     bad = ast.parse(
         "import sys as _s\n"
@@ -140,18 +169,26 @@ def test_guard_detects_each_violation():
         "@functools.lru_cache(maxsize=2)\n"
         "def g():\n"
         "    return 1\n"
+        "def h(df, engine='arrow'):\n"
+        "    return f'/srv/.tmpdata/{df}'\n"
+        "def k(df, *, refine='hof'):\n"
+        "    return df\n"
     )
     assert _sys_path_mutations(bad) == [4, 5, 6]
     assert sorted(_closure_factories(bad)) == [
         (7, "_make_k"), (11, "_make_l"), (13, "_d47_make_k")
     ]
     assert _lru_caches(bad) == [21]
+    assert _engine_switches(bad) == [(24, "engine"), (26, "refine")]
+    assert _scratch_literals(bad) == [25]
 
 
 def test_package_has_one_shipping_rule_and_one_memo():
     """Walks the AST of every module of the package: no ``sys.path``
     mutation, no ``*_make_*``/``make_*`` factory returning a closure
-    kernel, no ``functools`` cache beside ``session.memo``."""
+    kernel, no ``functools`` cache beside ``session.memo``, no
+    ``engine``/``refine`` parameter, and the ``.tmpdata`` literal in
+    ``sources/scans.py`` only."""
     mods = sorted(PKG.rglob("*.py"))
     assert len(mods) > 20
     problems = []
@@ -164,6 +201,15 @@ def test_package_has_one_shipping_rule_and_one_memo():
             for ln, name in _closure_factories(tree)
         ]
         problems += [f"{rel}:{ln}: functools cache" for ln in _lru_caches(tree)]
+        problems += [
+            f"{rel}:{ln}: {name} parameter switches engines"
+            for ln, name in _engine_switches(tree)
+        ]
+        if rel != pathlib.Path("glonassdatamining_spark/sources/scans.py"):
+            problems += [
+                f"{rel}:{ln}: scratch path outside SCRATCH_ROOT"
+                for ln in _scratch_literals(tree)
+            ]
     assert problems == []
 
 
