@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from glonassdatamining_spark import registry
 from glonassdatamining_spark.session import get_spark
+from glonassdatamining_spark.sources import drop_derived
 
 # Headline set: the flagship + the heaviest representative per
 # section, favoring the SCALE paths (bucketed/LSH forms) over the
@@ -166,8 +167,8 @@ def main() -> None:
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiled = codegen.METRIC_COMPILATION_TIME().getCount
     c0 = compiled()
-    # Warm-up pass (untimed): JIT, IO, and the bench-mode projection
-    # caches (fixes()/padded/prepared frames) all materialize here.
+    # Warm-up pass (untimed): JIT, IO, and the bench-mode derived
+    # frames (sources.derived) all materialize here.
     for name in headline:
         materialize(queries[name](spark, sf_dir))
     compiles_warmup = compiled() - c0
@@ -198,14 +199,15 @@ def main() -> None:
     timings = {name: round(best[name], 3) for name in headline}
 
     # Cold-rep pass (round-6 verdict ask #6): for the queries whose
-    # bench-mode derived caches exclude real cold work from the warm
+    # bench-mode derived frames exclude real cold work from the warm
     # number (the BASELINE.md cache-inventory table), record ONE rep
-    # with those caches cleared — base tables stay hot (the documented
-    # bench substrate for every query), so "cold" here means exactly
-    # the inventory's "what the timed rep pays cold" column: fixture
-    # projection + derived shuffle for i6/i12, encode + plan
-    # re-analysis for the WKB tier, plan re-analysis for k8. Runs
-    # AFTER all warm sampling so clearing can't perturb the mins.
+    # after sources.drop_derived() — base tables and split copies stay
+    # hot (the documented bench substrate for every query), so "cold"
+    # here means exactly the inventory's "what the timed rep pays
+    # cold" column: fixture projection + derived shuffle for i6/i12,
+    # encode + plan re-analysis for the WKB tier, plan re-analysis for
+    # k8. Runs AFTER all warm sampling so dropping can't perturb the
+    # mins.
     COLD_QUERIES = [
         "i6_dbscan",
         "i12_hotspot_zscore",
@@ -213,27 +215,11 @@ def main() -> None:
         "k8_langid_heuristic",
     ]
 
-    def clear_derived_caches():
-        from glonassdatamining_spark.operators import spatiotemporal as st
-
-        for cache in (
-            st._FIXES_CACHE,
-            st._PADDED_CACHE,
-            st._WKB_FRAME_CACHE,
-        ):
-            for v in list(cache.values()):
-                if hasattr(v, "unpersist"):
-                    try:
-                        v.unpersist()
-                    except Exception:
-                        pass
-            cache.clear()
-
     cold: dict[str, float] = {}
     for name in COLD_QUERIES:
         if name not in headline:
             continue
-        clear_derived_caches()
+        drop_derived()
         t0 = time.perf_counter()
         materialize(queries[name](spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 3)

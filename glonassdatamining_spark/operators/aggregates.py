@@ -15,8 +15,6 @@ returns HUGEINT, which pandas can't hold losslessly).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2425,6 +2423,8 @@ def d46_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D47_SALT = 64  # merge-tree fan-in bound: level-1 merges run per
 # (group, partition_id % SALT) so one task sees ~n_partials/64
 # digests; level-2 sees exactly 64. Raise with cluster size.
+_D47_TREE_MIN_PARTS = _D47_SALT  # level 1 runs only above this many
+# input partitions; read at call time, so a test can lower it
 _D47_C = 100  # compression parameter. SIZE HONESTY: this weight-cap
 # merging variant bounds the digest at O(C·log(n/C)) centroids (the
 # tails hold ~C/4 singletons per side and the body ~C/4·2ln(n/C) —
@@ -2673,12 +2673,8 @@ def d47_tdigest_quantile_rollup(
     # merge association order — a t-digest is approximate by contract
     # (rows-only query; the <= 0.02 rank-error assertion holds on
     # every tier for either tree shape, and both paths stay
-    # deterministic for a fixed layout). Env-tunable like the other
-    # scale knobs.
-    lvl1_min_parts = int(
-        os.environ.get("SPARK_GRAFT_D47_TREE_MIN_PARTS", str(_D47_SALT))
-    )
-    if li.rdd.getNumPartitions() > lvl1_min_parts:
+    # deterministic for a fixed layout).
+    if li.rdd.getNumPartitions() > _D47_TREE_MIN_PARTS:
         lvl1 = (
             partials.withColumn(
                 "_salt", F.spark_partition_id() % F.lit(_D47_SALT)

@@ -26,7 +26,7 @@ from glonassdatamining_spark.functions.codecs import (
     encode_y4m,
 )
 from glonassdatamining_spark.registry import register
-from glonassdatamining_spark.sources import load
+from glonassdatamining_spark.sources import derived, load
 from glonassdatamining_spark.sources.scans import SCRATCH_ROOT
 from glonassdatamining_spark.stable import dsum, o_dsum
 
@@ -383,11 +383,9 @@ def k8_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, token argmax (map-side-combinable), doc votes, doc argmax
     — all partial-agg shapes; profile stays an explicit broadcast.
 
-    Bench mode reuses the ANALYZED plan object across repetitions
-    (_bench_frame, i12's prepared-statement discipline): this plan's
-    two explodes + three aggregates cost ~0.3 s of driver re-analysis
-    per call; execution still happens per action."""
-    from glonassdatamining_spark.operators.spatiotemporal import _bench_frame
+    The analyzed plan is a derived frame (``sources.derived``): its two
+    explodes + three aggregates cost ~0.3 s of driver re-analysis per
+    call; execution still happens per action."""
 
     def build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -414,7 +412,7 @@ def k8_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("lang") == F.col("predicted")).cast("int").alias("correct"),
         )
 
-    return _bench_frame(spark, (sf_dir, "k8_langid"), build)
+    return derived(("k8_langid", sf_dir), build)
 
 
 # --------------------------------------------------------------------------

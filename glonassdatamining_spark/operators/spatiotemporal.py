@@ -30,7 +30,7 @@ from glonassdatamining_spark.functions.codecs import (
 )
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.session import memo
-from glonassdatamining_spark.sources import load
+from glonassdatamining_spark.sources import derived, hot_tables, load
 from glonassdatamining_spark.stable import EVENTS_CTE, davg, dsum, o_dsum
 
 FIXES_CTE = (
@@ -42,22 +42,15 @@ FIXES_CTE = (
 )
 
 
-_FIXES_CACHE: dict = {}
-_PADDED_CACHE: dict = {}
-
-
 def fixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Correctness runs: the pruned parquet scan of the fixture.
-    # Bench runs (SPARK_GRAFT_CACHE_TABLES=1): THIS narrow projection
-    # persisted once, spread over all cores — the fixture file is
-    # single-row-group, so a cold scan pins every i-query's whole
-    # first codegen stage (decode, x/y arithmetic, explode, partial
-    # agg) to ONE core. A/B on a warmed JVM: cached projection 0.83 s
-    # vs 1.10 s multi-file split scan vs 0.92 s wide-events cache on
-    # i12 — the ~4 MB 5-column cache wins because it skips decode
-    # without paying full-row cache re-reads.
-    import os
-
+    # Hot-table mode: THIS narrow projection persisted once, spread
+    # over all cores — the fixture file is single-row-group, so a cold
+    # scan pins every i-query's whole first codegen stage (decode, x/y
+    # arithmetic, explode, partial agg) to ONE core. A/B on a warmed
+    # JVM: cached projection 0.83 s vs 1.10 s multi-file split scan vs
+    # 0.92 s wide-events cache on i12 — the ~4 MB 5-column cache wins
+    # because it skips decode without paying full-row cache re-reads.
     from glonassdatamining_spark.sources import _scan
 
     def build() -> DataFrame:
@@ -70,20 +63,12 @@ def fixes(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("event_id") * 104729 % 100000).cast("double") / 1000.0).alias("y"),
         )
 
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES"):
-        # Key on (applicationId, sf_dir): a persisted DataFrame is
-        # bound to the session that created it — if the session is
-        # stopped and recreated in-process, a stale sf_dir-only key
-        # would hand every i-query a frame from the dead session.
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if key not in _FIXES_CACHE:
-            _FIXES_CACHE[key] = (
-                build()
-                .repartition(spark.sparkContext.defaultParallelism)
-                .persist()
-            )
-        return _FIXES_CACHE[key]
-    return build()
+    if not hot_tables():
+        return build()
+    return derived(
+        ("fixes", sf_dir),
+        lambda: build().repartition(spark.sparkContext.defaultParallelism).persist(),
+    )
 
 
 def _dist(x1, y1, x2, y2):
@@ -294,24 +279,21 @@ def dbscan(
     rows-only check: cluster ids aren't ANSI-SQL-expressible (the
     brute-force equivalence test lives in tests/test_ml.py).
 
-    Bench mode (SPARK_GRAFT_CACHE_TABLES): the grid + ε-halo
-    projection is persisted once per session — i12's cached-projection
-    pattern — so repeat runs start at the Arrow clustering kernel
-    instead of repaying scan + explode + shuffle.
+    Hot-table mode keeps the grid + ε-halo projection persisted and
+    the grouped-map local plan built (``sources.derived``), so repeat
+    runs start at the Arrow clustering kernel.
     """
-    import os
-
     from glonassdatamining_spark.api import dbscan as dbscan_kernel
     from glonassdatamining_spark.api import dbscan_local_plan, dbscan_padded
 
     f = fixes(spark, sf_dir).select("event_id", "x", "y")
     padded = None
     local_plan = None
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES"):
-        key = (spark.sparkContext.applicationId, sf_dir, eps, cell)
-        if key not in _PADDED_CACHE:
+    if hot_tables():
+
+        def build_padded() -> DataFrame:
             par = spark.sparkContext.defaultParallelism
-            _PADDED_CACHE[key] = (
+            return (
                 dbscan_padded(f, "event_id", "x", "y", eps, cell)
                 # Pre-bucket exactly like the kernel would: the cached
                 # HashPartitioning(_bkt) is reused as-is, no re-shuffle.
@@ -319,16 +301,15 @@ def dbscan(
                 .repartition(par, "_bkt")
                 .persist()
             )
-        padded = _PADDED_CACHE[key]
-        # Prepared-statement reuse of the grouped-map PLAN (not its
-        # results — dbscan checkpoints it fresh per call, re-running
-        # the kernel): building it costs ~0.4 s of driver cloudpickle
-        # + analysis per call otherwise. _bench_frame-keyed like every
-        # other bench-mode cache.
-        pkey = (key, min_pts, "local_plan")
-        if pkey not in _PADDED_CACHE:
-            _PADDED_CACHE[pkey] = dbscan_local_plan(padded, eps, min_pts)
-        local_plan = _PADDED_CACHE[pkey]
+
+        padded = derived(("dbscan_padded", sf_dir, eps, cell), build_padded)
+        # The grouped-map PLAN, not its results: dbscan checkpoints it
+        # fresh per call, re-running the kernel; building it costs
+        # ~0.4 s of driver cloudpickle + analysis per call otherwise.
+        local_plan = derived(
+            ("dbscan_local_plan", sf_dir, eps, cell, min_pts),
+            lambda: dbscan_local_plan(padded, eps, min_pts),
+        )
     return dbscan_kernel(
         f, "event_id", "x", "y", eps, min_pts, cell,
         padded=padded, local_plan=local_plan,
@@ -653,16 +634,13 @@ def i12_hotspot_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders of magnitude smaller than the fixes input, so everything
     after the first aggregation is effectively free.
 
-    Bench mode (SPARK_GRAFT_CACHE_TABLES): the cell-count aggregate is
-    persisted once per session — i6's cached-projection discipline
-    (its padded-grid cache skips scan + halo + shuffle the same way;
-    the sf0.1↔sf1 scaling curve measured this stage as the ONLY
-    row-count-bound one here, 0.97× post-aggregation). Repeat bench
-    runs then measure the operator's own work: neighbor explode,
-    target-cell groupBy, moments broadcast, z expression. Correctness
-    runs never set the flag.
+    Hot-table mode keeps the cell-count aggregate persisted and the
+    analyzed plan built (``sources.derived``): the sf0.1↔sf1 scaling
+    curve measured the aggregate as the ONLY row-count-bound stage
+    here, and analyzing the plan costs ~0.5 s of driver time per call.
+    Repeat runs still execute neighbor explode, target-cell groupBy,
+    moments broadcast and z expression.
     """
-    import os
 
     def build() -> DataFrame:
         f = fixes(spark, sf_dir)
@@ -685,21 +663,13 @@ def i12_hotspot_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=False)
             )
 
-        if os.environ.get("SPARK_GRAFT_CACHE_TABLES"):
-            key = (spark.sparkContext.applicationId, sf_dir, "i12_cells")
-            if key not in _PADDED_CACHE:
-                _PADDED_CACHE[key] = build_cells().persist()
-            cells = _PADDED_CACHE[key]
+        if hot_tables():
+            cells = derived(("i12_cells", sf_dir), lambda: build_cells().persist())
         else:
             cells = build_cells()
         return _i12_from_cells(cells)
 
-    # Prepared-plan reuse in bench mode (_bench_frame): measured, the
-    # per-call driver cost of ANALYZING this plan (~0.5 s) dwarfs its
-    # executed work once cells are hot — every bench repetition still
-    # EXECUTES explode → groupBy → join → moments over the cached
-    # cell counts.
-    return _bench_frame(spark, (sf_dir, "i12_hotspot"), build)
+    return derived(("i12_hotspot", sf_dir), build)
 
 
 def _i12_from_cells(cells: DataFrame) -> DataFrame:
@@ -2353,41 +2323,15 @@ def _hole_rings_plan(wkb_df: DataFrame) -> DataFrame:
     return wkb_df.select("obj_id", st_polygon_from_wkb("wkb").alias("rings"))
 
 
-_WKB_FRAME_CACHE: dict = {}
-
-
-def _bench_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Bench-mode (SPARK_GRAFT_CACHE_TABLES) prepared-frame cache:
-    returns the SAME analyzed DataFrame object per (applicationId,
-    key), so repeat bench runs skip re-building/re-ANALYZING the
-    frame (for the WKB tier, the ~thousand-node pure-Catalyst parser
-    tree costs ~1.5 s of driver analysis per fresh build). What each
-    cache may contain is a contract the callers keep (and
-    BASELINE.md's bench-mode paragraph documents): a fixture
-    PROJECTION (i12's cells, the staged WKB bytes — synthetic-input
-    prep) or an un-executed PLAN — never the result of the operator
-    work being timed. WKB callers re-checkpoint the cached parse plan
-    per call (round-6 fix), so every bench repetition EXECUTES parse
-    + measure; only encode + analysis are reused."""
-    import os
-
-    if not os.environ.get("SPARK_GRAFT_CACHE_TABLES"):
-        return build()
-    full_key = (spark.sparkContext.applicationId,) + key
-    if full_key not in _WKB_FRAME_CACHE:
-        _WKB_FRAME_CACHE[full_key] = build()
-    return _WKB_FRAME_CACHE[full_key]
-
-
 def _hole_rings_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(obj_id, rings) for i34: the encode (bytes) + parse PLAN
-    ride the bench cache; the parse itself EXECUTES on every call via
-    a fresh non-eager localCheckpoint — the dbscan_local_plan
-    prepared-statement discipline, applied here after round 5's
-    verdict flagged the old parsed-rings cache as timing only the
-    shoelace."""
-    plan = _bench_frame(
-        spark,
+    """(obj_id, rings) for i34: the encode (bytes) + parse PLAN are a
+    derived frame (``sources.derived``; the ~thousand-node Catalyst
+    parser tree costs ~1.5 s of driver analysis per fresh build); the
+    parse itself EXECUTES on every call via a fresh non-eager
+    localCheckpoint — the dbscan_local_plan prepared-statement
+    discipline, applied here after round 5's verdict flagged the old
+    parsed-rings cache as timing only the shoelace."""
+    plan = derived(
         ("hole_rings_plan", sf_dir),
         lambda: _hole_rings_plan(_hole_wkb_bytes(_hole_geo(spark, sf_dir))),
     )
@@ -2446,8 +2390,7 @@ def i33_wkb_polygon_hole_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction, functions/geometry.py — that i34 declares via
     ``_hole_rings_frame``). Scale: one groupBy (the bbox agg);
     encode/measure are narrow per-row work."""
-    wkb = _bench_frame(
-        spark,
+    wkb = derived(
         ("hole_wkb_bytes", sf_dir),
         lambda: _hole_wkb_bytes(_hole_geo(spark, sf_dir)),
     )
@@ -2624,9 +2567,7 @@ def i36_wkb_multipolygon_area(spark: SparkSession, sf_dir: str) -> DataFrame:
             "obj_id", st_multipolygon_from_wkb("wkb").alias("polys")
         )
 
-    parsed = _bench_frame(spark, ("mpoly_plan", sf_dir), build).localCheckpoint(
-        eager=False
-    )
+    parsed = derived(("mpoly_plan", sf_dir), build).localCheckpoint(eager=False)
     return parsed.select(
         "obj_id",
         F.size("polys").alias("n_polys"),
@@ -4573,17 +4514,12 @@ def _i59_oracle() -> str:
     )
 
 
-# Per-OPERATOR barrier generations (round-9 ADVICE fix: i59 and i62
-# previously rotated ONE shared global list, so interleaved
-# i59/i62 builds aged each other's generations — a third party
-# holding a 2-builds-old handle from the OTHER operator silently
-# lost its cache and re-triggered the expression blowup the barrier
-# guards against). Each operator key now owns an independent
-# generation list; the keep-2 contract is per operator.
-_BARRIER_GENS: dict[str, list] = {}
+# i59's barrier generations, oldest first (keep-2 FIFO, see
+# _i59_barrier).
+_BARRIER_GENS: list[list] = [[]]
 
 
-def _i59_barrier(df: DataFrame, op: str = "i59") -> DataFrame:
+def _i59_barrier(df: DataFrame) -> DataFrame:
     """Spill-safe optimizer barrier (round-7 verdict ask #7). persist
     DISK_ONLY instead of ``localCheckpoint``: cache substitution
     (``QueryExecution.withCachedData``) swaps the persisted subtree for
@@ -4599,30 +4535,26 @@ def _i59_barrier(df: DataFrame, op: str = "i59") -> DataFrame:
     the caller still holds — bench warm-up loops and two-scale tests
     do exactly this — and its next action would re-optimize the
     UN-barriered plan, i.e. the 6^5 blowup the barrier exists to
-    stop). Contract: handles from ≥ 2 builds ago OF THE SAME operator
-    must be considered expired (generations are keyed per ``op`` —
-    another operator's builds never age this operator's handles);
-    repeated builds still cannot accumulate more than two generations
-    of disk-backed cache per operator."""
+    stop). Contract: handles from ≥ 2 builds ago must be considered
+    expired; repeated builds cannot accumulate more than two
+    generations of disk-backed cache."""
     from pyspark import StorageLevel
 
     out = df.persist(StorageLevel.DISK_ONLY)
-    _BARRIER_GENS.setdefault(op, [[]])[-1].append(out)
+    _BARRIER_GENS[-1].append(out)
     return out
 
 
-def _i59_release_barriers(op: str = "i59") -> None:
-    """Start a new barrier generation for ``op``; unpersist this
-    operator's generations older than the previous one (keep-2 FIFO
-    per operator, see _i59_barrier)."""
-    gens = _BARRIER_GENS.setdefault(op, [[]])
-    while len(gens) > 1:
-        for old in gens.pop(0):
+def _i59_release_barriers() -> None:
+    """Start a new barrier generation; unpersist the generations older
+    than the previous one (keep-2 FIFO, see _i59_barrier)."""
+    while len(_BARRIER_GENS) > 1:
+        for old in _BARRIER_GENS.pop(0):
             try:
                 old.unpersist(blocking=False)
             except Exception:
                 pass
-    gens.append([])
+    _BARRIER_GENS.append([])
 
 
 @register("i59_polygon_overlay_join", oracle=_i59_oracle(), section="I59")

@@ -125,11 +125,26 @@ _memo_sc: SparkContext | None = None
 _memo: dict = {}
 
 
+def _live_memo() -> dict:
+    """The memo's entries for the active ``SparkContext``: the first
+    call under a different context drops every entry held for the
+    old one."""
+    global _memo_sc
+    sc = SparkContext._active_spark_context
+    if sc is not _memo_sc:
+        _memo.clear()
+        _memo_sc = sc
+    return _memo
+
+
 def memo(key, build):
     """The package's one memo for driver-side handles bound to a
     running application: Column plan fragments, pandas UDF objects,
-    persisted hot tables. Returns ``build()``'s value for ``key``,
-    building it on the first call.
+    persisted hot tables and split-copy paths (``sources``), and the
+    bench-mode derived frames that ``sources.derived`` keeps under the
+    ``("derived", …)`` key tag. BASELINE.md's cache-inventory table is
+    the contract for what each derived entry may hold. Returns
+    ``build()``'s value for ``key``, building it on the first call.
 
     Lifetime rule: entries live exactly as long as their application.
     The memo is keyed on the active ``SparkContext``; the first call
@@ -138,11 +153,18 @@ def memo(key, build):
     no handle outlives the context it was built against. A hit
     compares the Python context object only and costs no py4j call.
     Plan construction only: never cache a query's result here."""
-    global _memo_sc
-    sc = SparkContext._active_spark_context
-    if sc is not _memo_sc:
-        _memo.clear()
-        _memo_sc = sc
-    if key not in _memo:
-        _memo[key] = build()
-    return _memo[key]
+    entries = _live_memo()
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
+def memo_drop(tag) -> None:
+    """Drop every memo entry whose key is a tuple starting with
+    ``tag``, unpersisting the persisted frames among them, so the next
+    ``memo`` call for such a key builds afresh."""
+    entries = _live_memo()
+    for key in [k for k in entries if k[:1] == (tag,)]:
+        value = entries.pop(key)
+        if hasattr(value, "unpersist"):
+            value.unpersist()

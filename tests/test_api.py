@@ -1395,19 +1395,20 @@ def test_d47_salted_tree_path_rank_error(spark, monkeypatch):
     """Round-11 depth-adaptive merge tree: at fixture scales the input
     has <= _D47_SALT scan partitions so the level-1 salted merge is
     skipped (it cannot reduce any fan-in there). Force the TREE path
-    via its env knob and assert (a) the identical tier/key set and
+    by lowering its partition threshold and assert (a) the identical tier/key set and
     n_rows, and (b) the same <= 0.02 rank-error bound on every tier —
     the salted level-1 stage must stay a correctness no-op whenever
     the guard engages it."""
     import bisect
 
     from conftest import SF_DIR
+    from glonassdatamining_spark.operators import aggregates
     from glonassdatamining_spark.operators.aggregates import (
         d47_tdigest_quantile_rollup,
     )
     from glonassdatamining_spark.sources import load
 
-    monkeypatch.setenv("SPARK_GRAFT_D47_TREE_MIN_PARTS", "0")
+    monkeypatch.setattr(aggregates, "_D47_TREE_MIN_PARTS", 0)
     li = (
         load(spark, SF_DIR, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_extendedprice")

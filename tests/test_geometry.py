@@ -1221,7 +1221,7 @@ def _i62_hof(spark, sf_dir):
     per-pair SUM of the DECIMAL(28,6) contributions."""
     from glonassdatamining_spark.operators import spatiotemporal as st
 
-    st._i59_release_barriers("i62")  # rotate i62's OWN generations
+    st._i59_release_barriers()
     zones, districts, bbox_pred = st._i62_sides(spark, sf_dir)
     cand = zones.join(F.broadcast(districts), bbox_pred)
     e = cand.withColumn("i", F.explode(F.array(F.lit(2), F.lit(3))))
@@ -1237,7 +1237,7 @@ def _i62_hof(spark, sf_dir):
     )
     # one barrier between the join/dedup/explode and the clip chains
     # (the i59 constraint-propagation blowup discipline)
-    t = st._i59_barrier(t, "i62")
+    t = st._i59_barrier(t)
     terms = []
     for j, (tsign, fan) in enumerate(st._I62_CLIP_FANS):
         cur = "tri"
@@ -1280,7 +1280,7 @@ def _i62b_hof(spark, sf_dir):
     of the DECIMAL(28,6) terms — the oracle's own shape."""
     from glonassdatamining_spark.operators import spatiotemporal as st
 
-    st._i59_release_barriers("i62b")  # rotate i62b's own generations
+    st._i59_release_barriers()
     zones, districts, bbox_pred = st._i62b_sides(spark, sf_dir)
     cand = zones.join(F.broadcast(districts), bbox_pred)
     e = cand.withColumn(
@@ -1312,8 +1312,8 @@ def _i62b_hof(spark, sf_dir):
         u3.x.alias("u3x"), u3.y.alias("u3y"),
     )
     # one barrier between join/dedup/explode and the clip chains (the
-    # i59 constraint-propagation blowup discipline, i62b's generation)
-    t = st._i59_barrier(t, "i62b")
+    # i59 constraint-propagation blowup discipline)
+    t = st._i59_barrier(t)
     edges = [("u1x", "u1y", "u2x", "u2y"), ("u2x", "u2y", "u3x", "u3y"),
              ("u3x", "u3y", "u1x", "u1y")]
     cur = "tri"

@@ -191,32 +191,24 @@ def test_i59_barrier_bounds_plan_size(spark):
     st._i59_release_barriers()
 
 
-def test_barrier_generations_keyed_per_operator(spark):
-    """Round-9 ADVICE fix: interleaved i59/i62 builds must NOT age
-    each other's barrier generations — a caller holding a 1-build-old
-    i59 handle keeps its cache no matter how many i62 builds happen
-    in between (previously one shared global list expired it)."""
+def test_barrier_generations_keep_two(spark):
+    """Barrier generations are a keep-2 FIFO: a handle one build old
+    keeps its DISK_ONLY cache through one rotation (bench warm-up
+    loops and two-scale tests hold such handles) and expires after
+    two, so repeated builds never hold more than two generations."""
     from pyspark import StorageLevel
 
     from glonassdatamining_spark.operators import spatiotemporal as st
 
-    st._i59_release_barriers("i59")
-    st._i59_release_barriers("i62")
-    df = spark.range(3)
-    held = st._i59_barrier(df, "i59")
+    st._i59_release_barriers()
+    held = st._i59_barrier(spark.range(3))
     held.count()  # materialize the DISK_ONLY cache
     assert held.storageLevel == StorageLevel.DISK_ONLY
-    # three i62 rotations — would have expired the i59 handle under
-    # the shared-list scheme (keep-2 FIFO)
-    for _ in range(3):
-        st._i59_release_barriers("i62")
-        st._i59_barrier(spark.range(2), "i62").count()
+    st._i59_release_barriers()
+    st._i59_barrier(spark.range(2)).count()
     assert held.storageLevel == StorageLevel.DISK_ONLY, (
-        "i62 builds expired an i59 barrier handle"
+        "one rotation expired a handle one build old"
     )
-    # but two more i59 generations DO expire it (the per-op contract)
-    st._i59_release_barriers("i59")
-    st._i59_release_barriers("i59")
+    st._i59_release_barriers()
     assert held.storageLevel != StorageLevel.DISK_ONLY
-    st._i59_release_barriers("i59")
-    st._i59_release_barriers("i62")
+    st._i59_release_barriers()

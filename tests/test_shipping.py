@@ -3,8 +3,10 @@
 Python kernels travel to workers by value (the package registers
 itself with cloudpickle in ``__init__``), so no module may patch
 ``sys.path`` for workers or wrap kernels in ``_make_*`` factories to
-force by-value pickling. Driver-side handles go through the one
-``session.memo`` and live exactly as long as their application.
+force by-value pickling. Driver-side handles, the bench-mode derived
+frames included, go through the one ``session.memo`` and live exactly
+as long as their application: no module keeps its own cache dict, and
+only ``session.py`` and ``sources`` read the environment.
 Each operator has one code path: no function takes an ``engine`` or
 ``refine`` switch (reference twins live in the tests that compare
 against them), and scratch files live under the one
@@ -144,6 +146,54 @@ def _scratch_literals(tree: ast.AST) -> list[int]:
     ]
 
 
+def _env_reads(tree: ast.AST) -> list[int]:
+    """Lines that read the environment: ``os.environ``/``os.getenv``,
+    or either name imported from ``os``."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if (isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv")
+            and isinstance(node.value, ast.Name) and node.value.id == "os")
+        or (isinstance(node, ast.ImportFrom) and node.module == "os"
+            and any(a.name in ("environ", "getenv") for a in node.names))
+    ]
+
+
+def _module_dicts(tree: ast.AST) -> list[tuple[int, str]]:
+    """Module-level names bound to an empty dict (``{}`` or
+    ``dict()``): a hand-rolled cache beside ``session.memo``."""
+    found = []
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        v = node.value
+        empty = (isinstance(v, ast.Dict) and not v.keys) or (
+            isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
+            and v.func.id == "dict" and not v.args and not v.keywords
+        )
+        if empty:
+            found += [(node.lineno, t.id) for t in targets if isinstance(t, ast.Name)]
+    return found
+
+
+# Module dicts that are not caches of frames or handles: the query
+# registry, the memo itself, and k55's learned model, which k55
+# overwrites on every call (the memo never overwrites an entry).
+_ALLOWED_DICTS = {
+    (pathlib.Path("glonassdatamining_spark/registry.py"), "_REGISTRY"),
+    (pathlib.Path("glonassdatamining_spark/session.py"), "_memo"),
+    (pathlib.Path("glonassdatamining_spark/operators/llm_ops.py"), "_K55_CACHE"),
+}
+_ENV_READERS = {
+    pathlib.Path("glonassdatamining_spark/session.py"),
+    pathlib.Path("glonassdatamining_spark/sources/__init__.py"),
+}
+
+
 def test_guard_detects_each_violation():
     bad = ast.parse(
         "import sys as _s\n"
@@ -173,6 +223,9 @@ def test_guard_detects_each_violation():
         "    return f'/srv/.tmpdata/{df}'\n"
         "def k(df, *, refine='hof'):\n"
         "    return df\n"
+        "_CACHE: dict = {}\n"
+        "def e():\n"
+        "    return os.getenv('X')\n"
     )
     assert _sys_path_mutations(bad) == [4, 5, 6]
     assert sorted(_closure_factories(bad)) == [
@@ -181,14 +234,18 @@ def test_guard_detects_each_violation():
     assert _lru_caches(bad) == [21]
     assert _engine_switches(bad) == [(24, "engine"), (26, "refine")]
     assert _scratch_literals(bad) == [25]
+    assert _module_dicts(bad) == [(28, "_CACHE")]
+    assert _env_reads(bad) == [30]
 
 
 def test_package_has_one_shipping_rule_and_one_memo():
     """Walks the AST of every module of the package: no ``sys.path``
     mutation, no ``*_make_*``/``make_*`` factory returning a closure
     kernel, no ``functools`` cache beside ``session.memo``, no
-    ``engine``/``refine`` parameter, and the ``.tmpdata`` literal in
-    ``sources/scans.py`` only."""
+    ``engine``/``refine`` parameter, the ``.tmpdata`` literal in
+    ``sources/scans.py`` only, environment reads in ``session.py`` and
+    ``sources/__init__.py`` only, and no module-level cache dict
+    outside ``_ALLOWED_DICTS``."""
     mods = sorted(PKG.rglob("*.py"))
     assert len(mods) > 20
     problems = []
@@ -210,6 +267,13 @@ def test_package_has_one_shipping_rule_and_one_memo():
                 f"{rel}:{ln}: scratch path outside SCRATCH_ROOT"
                 for ln in _scratch_literals(tree)
             ]
+        if rel not in _ENV_READERS:
+            problems += [f"{rel}:{ln}: environment read" for ln in _env_reads(tree)]
+        problems += [
+            f"{rel}:{ln}: module dict {name} beside session.memo"
+            for ln, name in _module_dicts(tree)
+            if (rel, name) not in _ALLOWED_DICTS
+        ]
     assert problems == []
 
 
@@ -255,9 +319,10 @@ print("ok", len(NAMES))
 # One query per former shipping discipline, plus the memo's users:
 # i31/i67 (pandas_udf singletons), i33/k13/k37/k40 (in-closure
 # sys.path shims), m8 (applyInPandas shim), d47 (pickling factory),
-# i30/i57 (memoized Columns), q1 (hot-table cache). Every query that
-# reads lineitem after the restart fails where the hot-table cache
-# outlives its session.
+# i30/i57 (memoized Columns), q1 (hot-table cache), i6/i12/i33
+# (derived frames: padded grid, local plan, cell counts, WKB bytes).
+# Every query that reads lineitem after the restart fails where the
+# hot-table cache outlives its session.
 _RESTART_QUERIES = (
     "i31_path_self_intersections",
     "i67_spherical_geofence",
@@ -270,6 +335,8 @@ _RESTART_QUERIES = (
     "i30_polygon_intersect_pairs",
     "i57_zone_overlay_area",
     "q1_pricing_summary",
+    "i6_dbscan",
+    "i12_hotspot_zscore",
 )
 
 
