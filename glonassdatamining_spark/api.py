@@ -324,6 +324,58 @@ def haversine_km(lat1, lon1, lat2, lon2) -> Column:
     return F.asin(F.sqrt(a)) * (2.0 * 6371.0088)
 
 
+def _latlon_cells(
+    points: DataFrame,
+    id_col: str,
+    lat: str,
+    lon: str,
+    eps_km: float,
+    max_abs_lat: float,
+) -> tuple[DataFrame, int]:
+    """Home cell of every point with |lat| ≤ ``max_abs_lat`` on a
+    lat/lon grid sized so that any two points within ``eps_km``
+    (great-circle) sit in the same or adjacent cells on both axes.
+    Returns ((_id, _lat, _lon, _cx, _cy), n_lon_cells).
+
+    Cell height is eps/100 degrees (true scale ≥ 110.57 km/° lat).
+    Cell width starts at ≤ eps/40 degrees (≥ 55.66 km/° lon inside
+    ±60°), which alone proves coverage only up to eps ≈ 4500 km at
+    60°: beyond that the great circle bows poleward. So the longitude
+    cell count is also capped at 360 // Δλ, where Δλ = 2·asin(sin(eps
+    / 2R) / cos(max_abs_lat)) is the exact longitude spread of two
+    points eps apart on the ``max_abs_lat`` parallel (the
+    spread-maximizing pair); dlon ≥ Δλ then holds exactly.
+
+    Longitude cells divide 360° exactly and neighbours are taken mod
+    n_lon_cells, so pairs straddling ±180° stay adjacent. The count
+    never drops below 3: the offsets (cx−1, cx, cx+1) mod n are
+    distinct only for n ≥ 3 (at n ∈ {1, 2} two offsets alias and a
+    neighbour would be probed twice), and at n = 3 the ±1 ring spans
+    the whole circle, so any Δλ is covered."""
+    import math
+
+    dlat_deg = eps_km / 100.0
+    n_lon_cells = max(4, math.ceil(360.0 / (eps_km / 40.0)))
+    _sin_arg = math.sin(min(eps_km, math.pi * 6371.0088) / (2.0 * 6371.0088))
+    _s = _sin_arg / math.cos(math.radians(max_abs_lat))
+    if _s < 1.0:
+        _dlon_needed = math.degrees(2.0 * math.asin(_s))
+        n_lon_cells = min(n_lon_cells, max(3, int(360.0 // _dlon_needed)))
+    else:
+        n_lon_cells = 3  # ball spans all longitudes at this latitude
+    dlon_deg = 360.0 / n_lon_cells
+    p = points.filter(F.abs(F.col(lat)) <= max_abs_lat).select(
+        F.col(id_col).alias("_id"),
+        F.col(lat).alias("_lat"),
+        F.col(lon).alias("_lon"),
+    )
+    home = p.withColumn(
+        "_cx",
+        F.floor((F.col("_lon") + 180.0) / dlon_deg).cast("int") % n_lon_cells,
+    ).withColumn("_cy", F.floor(F.col("_lat") / dlat_deg))
+    return home, n_lon_cells
+
+
 def haversine_distance_join(
     points: DataFrame,
     id_col: str,
@@ -338,35 +390,19 @@ def haversine_distance_join(
     excluded (near-polar longitude cells degenerate; partition polar
     caps separately if you need them).
 
-    Same grid-bucket shape as ``grid_distance_join`` but with
-    latitude-aware cell sizing: cell height = eps/100 km-per-deg-lat
-    and cell width ≤ eps/40 km-per-deg-lon — both deliberately
-    conservative bounds (true values ≥ 110.57 km/° lat, ≥ 55.66 km/°
-    lon inside ±60°), so the 3×3 neighborhood provably over-covers the
-    ε-ball and the equi-join loses no pairs. Longitude cells are
-    modular (width chosen to divide 360° exactly, neighbors taken mod
-    n_cells) so antimeridian-straddling pairs — which haversine
-    correctly sees as near — are not lost at the ±180° seam.
-    Candidates stay O(local density · n); the exact haversine residual
-    prunes the rest.
+    Same grid-bucket shape as ``grid_distance_join`` on the
+    latitude-aware, antimeridian-safe cells of ``_latlon_cells``: its
+    eps/100 cell height and its longitude cell count (eps/40 width,
+    capped by the exact Δλ spread at ``max_abs_lat``) put every
+    in-range pair in the same or adjacent cells, so the 3×3
+    neighborhood provably over-covers the ε-ball and the equi-join
+    loses no pairs, at any ``eps_km``. Candidates stay O(local density
+    · n); the exact haversine residual prunes the rest.
     """
-    import math
-
-    dlat_deg = eps_km / 100.0
-    n_lon_cells = max(4, math.ceil(360.0 / (eps_km / 40.0)))
-    dlon_deg = 360.0 / n_lon_cells
-    p = points.filter(F.abs(F.col(lat)) <= max_abs_lat).select(
-        F.col(id_col).alias("_id"),
-        F.col(lat).alias("_lat"),
-        F.col(lon).alias("_lon"),
-    )
-    home = p.withColumn(
-        "_cx",
-        F.floor((F.col("_lon") + 180.0) / dlon_deg).cast("int") % n_lon_cells,
-    ).withColumn("_cy", F.floor(F.col("_lat") / dlat_deg))
+    home, n_lon_cells = _latlon_cells(points, id_col, lat, lon, eps_km, max_abs_lat)
     # Half-neighborhood probe (see grid_distance_join): own cell + 4
     # forward neighbors. Forward stays antisymmetric under modular
-    # longitude because n_lon_cells ≥ 4: for a same-row adjacent pair
+    # longitude because n_lon_cells ≥ 3: for a same-row adjacent pair
     # exactly one cell's (+1 mod n) lands on the other, and cross-row
     # pairs are found from the lower _cy.
     fwd = F.array(
@@ -427,14 +463,11 @@ def haversine_knn_join(
     degenerate; partition polar caps separately).
 
     Grid kernel = ``haversine_distance_join``'s latitude-adaptive,
-    antimeridian-safe cells, but with the FULL 3×3 neighborhood
-    probe: kNN is directional (a's neighbors ≠ b's), so unlike the
-    ε-pair join the half-neighborhood trick cannot apply. Cell height
-    eps/100 km-per-°lat and width ≤ eps/40 km-per-°lon conservatively
-    over-cover the ``max_km`` ball (true scales ≥ 110.57 / ≥ 55.66
-    inside ±60°), longitude cells are modular (divide 360° exactly,
-    neighbors mod n), so candidates straddling ±180° survive and the
-    equi-join provably loses no in-range neighbor. One row_number
+    antimeridian-safe cells (``_latlon_cells``), but with the FULL 3×3
+    neighborhood probe: kNN is directional (a's neighbors ≠ b's), so
+    unlike the ε-pair join the half-neighborhood trick cannot apply.
+    The cells put every pair within ``max_km`` in adjacent cells, so
+    the equi-join provably loses no in-range neighbor. One row_number
     window per a_id (orderBy dist, b_id — deterministic ties) takes
     the top k.
 
@@ -444,44 +477,7 @@ def haversine_knn_join(
     is WGS84 lat/lon degrees; distances are mean-earth-radius great
     circles (no projection step — see README's Sedona seam for full
     CRS transforms)."""
-    import math
-
-    dlat_deg = max_km / 100.0
-    n_lon_cells = max(4, math.ceil(360.0 / (max_km / 40.0)))
-    # 3×3-ring coverage demands cell width ≥ the TRUE max longitude
-    # spread between in-range points, which at |lat| ≤ max_abs_lat is
-    # Δλ = 2·asin(sin(max_km / 2R) / cos(max_abs_lat)) (exact
-    # haversine inversion for two points on the max_abs_lat parallel
-    # — the spread-maximizing configuration). The eps/40 width only
-    # proves this for max_km ≲ 4500 at 60°; beyond that, cap
-    # n_lon_cells so dlon ≥ Δλ exactly. Round-8 ADVICE fix — removes
-    # the silent neighbor drop at max_km ≈ 5000.
-    #
-    # FLOOR OF 3 (round-8 review fix): the modular probe offsets
-    # (cx−1, cx, cx+1) mod n are pairwise-distinct only for n ≥ 3 —
-    # at n ∈ {1, 2} two offsets alias to the SAME cell, every
-    # opposite-cell neighbor joins twice, and row_number hands ranks
-    # 1..k to duplicate b_ids (duplicate neighbors returned, true
-    # k-th neighbors pushed out). n = 3 keeps the offsets distinct
-    # AND makes coverage trivial: the ±1 ring spans the whole circle,
-    # so any Δλ is covered regardless of cell width.
-    _sin_arg = math.sin(min(max_km, math.pi * 6371.0088) / (2.0 * 6371.0088))
-    _s = _sin_arg / math.cos(math.radians(max_abs_lat))
-    if _s < 1.0:
-        _dlon_needed = math.degrees(2.0 * math.asin(_s))
-        n_lon_cells = min(n_lon_cells, max(3, int(360.0 // _dlon_needed)))
-    else:
-        n_lon_cells = 3  # ball spans all longitudes at this latitude
-    dlon_deg = 360.0 / n_lon_cells
-    p = points.filter(F.abs(F.col(lat)) <= max_abs_lat).select(
-        F.col(id_col).alias("_id"),
-        F.col(lat).alias("_lat"),
-        F.col(lon).alias("_lon"),
-    )
-    home = p.withColumn(
-        "_cx",
-        F.floor((F.col("_lon") + 180.0) / dlon_deg).cast("int") % n_lon_cells,
-    ).withColumn("_cy", F.floor(F.col("_lat") / dlat_deg))
+    home, n_lon_cells = _latlon_cells(points, id_col, lat, lon, max_km, max_abs_lat)
     ring = F.array(
         *[
             F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -1254,6 +1250,60 @@ def connected_components(
     )
 
 
+def _undirected_edges(edges_df: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every edge, deduplicated and checkpointed:
+    (_src, _dst). Eager: runs Spark jobs when called."""
+    return (
+        edges_df.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
+        .union(edges_df.select(F.col(dst).alias("_src"), F.col(src).alias("_dst")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _bfs_levels(
+    sym: DataFrame,
+    seed: DataFrame,
+    visited: DataFrame,
+    expand,
+    max_iter: int,
+    n_parts: int | None,
+) -> tuple[list[DataFrame], DataFrame]:
+    """Level-synchronous frontier BFS over the undirected edges ``sym``
+    (``_undirected_edges``). ``seed`` is level 0 and ``visited`` the
+    nodes reached so far, both checkpointed with a ``node`` column
+    (often the same frame). Round d joins the last level to ``sym`` and
+    hands the joined rows to ``expand(joined, d)``, which returns the
+    next level's rows keyed by ``node`` (one per node); nodes already
+    visited are anti-joined away. Stops at the first empty level or
+    after ``max_iter`` rounds. Returns (levels, visited): level d holds
+    the nodes first reached in round d, and visited has ``visited``'s
+    columns for every level.
+
+    Each round runs three Spark actions: the level checkpoint, its
+    emptiness probe and the visited checkpoint, so lineage stays O(1)
+    (reliable checkpoint on a cluster; bucket edges by src and every
+    round is co-located). With ``n_parts`` both are coalesced to that
+    many partitions before their checkpoints."""
+    levels = [seed]
+    for d in range(1, max_iter + 1):
+        frontier = levels[-1]
+        nxt = expand(frontier.join(sym, frontier.node == sym._src), d).join(
+            visited.select("node"), "node", "left_anti"
+        )
+        if n_parts:
+            nxt = nxt.coalesce(n_parts)
+        nxt = nxt.localCheckpoint()
+        if nxt.isEmpty():
+            break
+        levels.append(nxt)
+        visited = visited.unionByName(nxt.select(*visited.columns))
+        if n_parts:
+            visited = visited.coalesce(n_parts)
+        visited = visited.localCheckpoint()
+    return levels, visited
+
+
 def kcore(
     edges_df: DataFrame,
     src: str,
@@ -1274,12 +1324,7 @@ def kcore(
     (typically ≪; ``max_iter`` guards with a warning like
     ``connected_components``). Eager: runs Spark jobs when called.
     """
-    sym = (
-        edges_df.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-        .union(edges_df.select(F.col(dst).alias("_src"), F.col(src).alias("_dst")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected_edges(edges_df, src, dst)
     converged = False
     n_edges = sym.count()
     for _ in range(max_iter):
@@ -1347,12 +1392,7 @@ def bfs_hops(
     import pandas as pd
 
     spark = edges_df.sparkSession
-    sym = (
-        edges_df.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-        .union(edges_df.select(F.col(dst).alias("_src"), F.col(src).alias("_dst")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected_edges(edges_df, src, dst)
     # per-round frames sized to the graph, not the core count (§2.2)
     n_parts = adaptive_partitions(sym)
     sym = sym.coalesce(n_parts)
@@ -1362,27 +1402,24 @@ def bfs_hops(
     if source_node is None:
         node_type = edges_df.schema[src].dataType.simpleString()
         return spark.createDataFrame([], f"node {node_type}, hops bigint")
-    seed = spark.createDataFrame(
-        pd.DataFrame({"node": [source_node], "hops": [0]})
-    ).select(
-        F.col("node").cast(sym.schema["_src"].dataType), F.col("hops").cast("bigint")
-    )
-    visited = seed.localCheckpoint()
-    frontier = visited
-    for d in range(1, max_iter + 1):
-        nxt = (
-            frontier.join(sym, frontier.node == sym._src)
-            .select(F.col("_dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(d).cast("bigint"))
-            .coalesce(n_parts)
-            .localCheckpoint()
+    seed = (
+        spark.createDataFrame(pd.DataFrame({"node": [source_node], "hops": [0]}))
+        .select(
+            F.col("node").cast(sym.schema["_src"].dataType),
+            F.col("hops").cast("bigint"),
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).coalesce(n_parts).localCheckpoint()
-        frontier = nxt
+        .localCheckpoint()
+    )
+    _, visited = _bfs_levels(
+        sym,
+        seed,
+        seed,
+        lambda j, d: j.select(F.col("_dst").alias("node"))
+        .distinct()
+        .withColumn("hops", F.lit(d).cast("bigint")),
+        max_iter,
+        n_parts,
+    )
     return visited
 
 
@@ -2978,14 +3015,7 @@ def betweenness_sampled(
     rank scale, and the hand-graph test pins k = n exactness.
     Eager: runs Spark jobs when called."""
     spark = edges_df.sparkSession
-    sym = (
-        edges_df.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-        .union(
-            edges_df.select(F.col(dst).alias("_src"), F.col(src).alias("_dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected_edges(edges_df, src, dst)
     node_type = sym.schema["_src"].dataType
     pivots, n_nodes = _md5_graph_pivots(sym, k_sources)
     if not pivots or not n_nodes:
@@ -2998,26 +3028,23 @@ def betweenness_sampled(
     ledger: dict = {}
     for s_node in pivots:
         # ---- forward: levels of (node, sigma) ----
-        seed = spark.createDataFrame([(s_node, 1)], ["node", "sigma"]).select(
-            F.col("node").cast(node_type), F.col("sigma").cast("bigint")
+        seed = (
+            spark.createDataFrame([(s_node, 1)], ["node", "sigma"])
+            .select(F.col("node").cast(node_type), F.col("sigma").cast("bigint"))
+            .localCheckpoint()
         )
-        levels = [seed.localCheckpoint()]
-        visited = levels[0].select("node").localCheckpoint()
-        fwd_rounds = 0
-        for _d in range(1, max_iter + 1):
-            frontier = levels[-1]
-            nxt = (
-                frontier.join(sym, frontier.node == sym._src)
-                .groupBy(F.col("_dst").alias("node"))
-                .agg(F.sum("sigma").cast("bigint").alias("sigma"))
-                .join(visited, "node", "left_anti")
-                .localCheckpoint()
-            )
-            if nxt.isEmpty():
-                break
-            fwd_rounds += 1
-            levels.append(nxt)
-            visited = visited.unionByName(nxt.select("node")).localCheckpoint()
+        levels, _ = _bfs_levels(
+            sym,
+            seed,
+            seed.select("node").localCheckpoint(),
+            # σ(w) = Σ σ(v) over the frontier nodes v adjacent to w
+            lambda j, _d: j.groupBy(F.col("_dst").alias("node")).agg(
+                F.sum("sigma").cast("bigint").alias("sigma")
+            ),
+            max_iter,
+            None,
+        )
+        fwd_rounds = len(levels) - 1
         # ---- backward: dependency accumulation ----
         bwd_rounds = 0
         delta = None  # delta frame for level d+1: (node, sigma, delta)
@@ -3108,14 +3135,7 @@ def harmonic_closeness_sampled(
     sources are independent. Returns (node, harmonic_est) rounded to
     6 dp for reached nodes. Eager: runs Spark jobs when called."""
     spark = edges_df.sparkSession
-    sym = (
-        edges_df.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-        .union(
-            edges_df.select(F.col(dst).alias("_src"), F.col(src).alias("_dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected_edges(edges_df, src, dst)
     node_type = sym.schema["_src"].dataType
     pivots, n_nodes = _md5_graph_pivots(sym, k_sources)
     if not pivots or not n_nodes:
@@ -3125,26 +3145,23 @@ def harmonic_closeness_sampled(
     scale = float(n_nodes) / float(len(pivots))
     contribs = []
     for s_node in pivots:
-        seed = spark.createDataFrame([(s_node,)], ["node"]).select(
-            F.col("node").cast(node_type)
+        seed = (
+            spark.createDataFrame([(s_node,)], ["node"])
+            .select(F.col("node").cast(node_type))
+            .localCheckpoint()
         )
-        visited = seed.localCheckpoint()
-        frontier = visited
-        for d in range(1, max_iter + 1):
-            nxt = (
-                frontier.join(sym, frontier.node == sym._src)
-                .select(F.col("_dst").alias("node"))
-                .distinct()
-                .join(visited, "node", "left_anti")
-                .localCheckpoint()
-            )
-            if nxt.isEmpty():
-                break
-            contribs.append(
-                nxt.select("node", (F.lit(1.0) / F.lit(float(d))).alias("c"))
-            )
-            visited = visited.unionByName(nxt).localCheckpoint()
-            frontier = nxt
+        levels, _ = _bfs_levels(
+            sym,
+            seed,
+            seed,
+            lambda j, _d: j.select(F.col("_dst").alias("node")).distinct(),
+            max_iter,
+            None,
+        )
+        contribs += [
+            lvl.select("node", (F.lit(1.0) / F.lit(float(d))).alias("c"))
+            for d, lvl in enumerate(levels[1:], 1)
+        ]
     if not contribs:
         return spark.createDataFrame(
             [], f"node {node_type.simpleString()}, harmonic_est double"

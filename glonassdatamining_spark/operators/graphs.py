@@ -24,7 +24,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from glonassdatamining_spark.api import adaptive_partitions
+from glonassdatamining_spark.api import (
+    adaptive_partitions,
+    betweenness_sampled,
+    bfs_hops,
+    connected_components,
+    harmonic_closeness_sampled,
+    kcore,
+    minimum_spanning_forest,
+    pagerank,
+    weighted_sssp,
+)
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.sources import load
 
@@ -126,8 +136,6 @@ def n1_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the identical fixpoint as a recursive-CTE transitive
     closure — closure is O(Σ|component|²) rows, fine for the sparse
     sf0.01 graph, while the Spark side stays O(V+E) per round."""
-    from glonassdatamining_spark.api import connected_components
-
     edges = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR_CC)
     return connected_components(edges, "src", "dst")
 
@@ -139,8 +147,6 @@ def n2_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-precision fixpoints are not ANSI-SQL-expressible; the
     algebra is unit-tested against a hand-computed graph in
     tests/test_graphs.py. Rank rounded to 9dp for display stability."""
-    from glonassdatamining_spark.api import pagerank
-
     e = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR)
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     pr = pagerank(sym, "src", "dst", n_iter=10, damping=0.85)
@@ -196,8 +202,6 @@ def n4_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     with MIN(d) per node: the identical fixpoint, so the frontier
     anti-join provably loses no reachable node and never shortcuts a
     distance."""
-    from glonassdatamining_spark.api import bfs_hops
-
     edges = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR)
     return bfs_hops(edges, "src", "dst")
 
@@ -244,8 +248,6 @@ def n5_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only (the fixpoint isn't ANSI-SQL-expressible) — the python
     peeling equivalence tests (kernel AND the k derivation) live in
     tests/test_graphs.py."""
-    from glonassdatamining_spark.api import kcore
-
     edges = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR)
     k = _kcore_auto_k(edges)
     return kcore(edges, "src", "dst", k).withColumn("k", F.lit(k))
@@ -677,8 +679,6 @@ def n11_component_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     component by definition) + a component-keyed count; output is
     one row per component. The oracle reruns the identical fixpoint
     as N1's recursive-CTE closure, then the same two rollups."""
-    from glonassdatamining_spark.api import connected_components
-
     edges = _edges_ckpt(spark, sf_dir, _MIN_COOCCUR_CC)
     comp = connected_components(edges, "src", "dst")
     v = comp.groupBy("component").agg(
@@ -880,8 +880,6 @@ def n14_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: CC's hybrid driver-gate/star-contraction path, then two
     map-side-combinable folds whose outputs are component- and
     size-cardinality-bounded."""
-    from glonassdatamining_spark.api import connected_components
-
     edges = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR_CC)
     comp = connected_components(edges, "src", "dst")
     sizes = comp.groupBy("component").agg(
@@ -1413,8 +1411,6 @@ def n19_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     improvement anti-join; positive integer weights bound rounds by
     the max finite distance. Bucket edges by src on a cluster so every
     relax round is co-located (the module doctrine)."""
-    from glonassdatamining_spark.api import weighted_sssp
-
     edges = _n19_weighted_edges(spark, sf_dir)
     return weighted_sssp(edges, "src", "dst", "w", max_dist=_N19_CAP)
 
@@ -1431,8 +1427,6 @@ def n20_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted algebra is pinned by a python power-iteration replay on
     a hand graph AND on the sf0.001 fixture graph in
     tests/test_graphs.py. Rank rounded to 9dp for display stability."""
-    from glonassdatamining_spark.api import pagerank
-
     e = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR, weighted=True)
     sym = e.union(
         e.select(
@@ -1465,8 +1459,6 @@ def n21_min_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins — bucket edges by src on a cluster. Output: the forest
     edges + per-edge cost (Σw = the minimum connection cost of every
     component)."""
-    from glonassdatamining_spark.api import minimum_spanning_forest
-
     edges = _n19_weighted_edges(spark, sf_dir)
     msf = minimum_spanning_forest(edges, "src", "dst", "w")
     return msf.select("src", "dst", F.col("w").cast("bigint").alias("w"))
@@ -1489,8 +1481,6 @@ def n22_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Brandes replay on the fixture from the SAME pivots plus a
     path-graph hand test where k = n makes the estimator exact
     (tests/test_graphs.py)."""
-    from glonassdatamining_spark.api import betweenness_sampled
-
     edges = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR)
     return betweenness_sampled(edges, "src", "dst", k_sources=4)
 
@@ -1510,7 +1500,5 @@ def n23_harmonic_closeness_sampled(
     DECIMAL(38,18) sums. rows-only (frontier-BFS fixpoint);
     correctness rides a python replay from the same pivots plus a
     k = n exact hand graph (tests/test_graphs.py)."""
-    from glonassdatamining_spark.api import harmonic_closeness_sampled
-
     edges = _copurchase_edges(spark, sf_dir, _MIN_COOCCUR)
     return harmonic_closeness_sampled(edges, "src", "dst", k_sources=4)

@@ -19,6 +19,8 @@ is STARK's grid partitioner expressed as shuffle-compatible equi-joins.
 
 from __future__ import annotations
 
+from itertools import product
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -623,14 +625,11 @@ def i12_hotspot_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     global cell-count distribution. High gi_z = statistically dense
     region (the classic hotspot detector over GNSS fix densities).
 
-    Shape: cell counts (one shuffle) → each cell EXPLODES its count
-    into its 9 neighbor positions → groupBy target cell (second
-    shuffle, equi key) → inner join back to observed cells + broadcast
-    of the 1-row global moments. The neighbor theta-join (|Δcx|<=1 AND
-    |Δcy|<=1) is thus an exploded equi-join — candidates O(9·cells),
-    never O(cells²) — and every count stays integer-exact until the
-    final double expression, which both engines evaluate in the same
-    order (round 4 gives ulp margin). At 100 TB the cells table is
+    Shape: cell counts (one shuffle) → ``_gi_star_z`` on the planar
+    grid: each cell explodes its count into its 9 neighbor positions,
+    one groupBy on the target cell (second shuffle, equi key) keeps
+    the targets flagged occupied, and the 1-row global moments
+    broadcast into the z expression. At 100 TB the cells table is
     orders of magnitude smaller than the fixes input, so everything
     after the first aggregation is effectively free.
 
@@ -652,14 +651,14 @@ def i12_hotspot_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.floor(F.col("y") / _GI_CELL).cast("bigint").alias("cy"),
                 )
                 .agg(F.count(F.lit(1)).alias("n"))
-                # Three consumers (neighbor explode, occupied-cell
-                # join-back, global moments): materialize the tiny
-                # cell table once instead of betting on exchange reuse
-                # across the AQE re-plans — the 100k→400 aggregation
-                # is the only non-trivial stage here. eager=False: the
-                # checkpoint materializes inside the first consuming
-                # action instead of paying its own Spark job's
-                # scheduling round-trip — i6's discipline.
+                # Two consumers (neighbor explode, global moments):
+                # materialize the tiny cell table once instead of
+                # betting on exchange reuse across the AQE re-plans —
+                # the 100k→400 aggregation is the only non-trivial
+                # stage here. eager=False: the checkpoint materializes
+                # inside the first consuming action instead of paying
+                # its own Spark job's scheduling round-trip — i6's
+                # discipline.
                 .localCheckpoint(eager=False)
             )
 
@@ -667,34 +666,56 @@ def i12_hotspot_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             cells = derived(("i12_cells", sf_dir), lambda: build_cells().persist())
         else:
             cells = build_cells()
-        return _i12_from_cells(cells)
+        return _gi_star_z(cells, [("cx", "cell_x", None), ("cy", "cell_y", None)])
 
     return derived(("i12_hotspot", sf_dir), build)
 
 
-def _i12_from_cells(cells: DataFrame) -> DataFrame:
+def _gi_star_z(
+    cells: DataFrame, keys: list[tuple[str, str, int | None]]
+) -> DataFrame:
+    """Getis-Ord Gi* z-score of every occupied cell in ``cells`` (one
+    row per cell: its key columns plus its count ``n``). ``keys`` lists
+    ``(key column, output name, ring)`` per axis; the neighbour offsets
+    −1/0/+1 are planar when ``ring`` is None and taken mod ``ring``
+    otherwise (wrapping longitude or a time-of-day ring).
+
+    Each cell explodes its count into its 3^len(keys) neighbour
+    positions with a ``self`` flag on the zero offset, so the
+    neighbour theta-join (|Δ| ≤ 1 on every axis) becomes one equi-key
+    groupBy — candidates O(3^k · cells), never O(cells²). A target is
+    occupied iff it received its own (zero-offset) contribution: the
+    ``_occ`` flag in the same groupBy stands in for a join back to the
+    cell table. The 1-row global moments broadcast; every count stays
+    integer-exact until the final double expression, evaluated in the
+    oracle's op order and rounded to 4 places (ulp margin)."""
+    names = [k for k, _, _ in keys]
+
+    def shift(k: str, ring: int | None, d: int) -> Column:
+        c = F.col(k) + d
+        return c if ring is None else (c + ring) % ring
+
     contrib = cells.select(
         F.explode(
             F.array(*[
                 F.struct(
-                    (F.col("cx") + dx).alias("cx"),
-                    (F.col("cy") + dy).alias("cy"),
-                    F.lit(dx == 0 and dy == 0).alias("self"),
+                    *[
+                        shift(k, ring, d).alias(k)
+                        for (k, _, ring), d in zip(keys, off)
+                    ],
+                    F.lit(not any(off)).alias("self"),
                 )
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
+                for off in product((-1, 0, 1), repeat=len(keys))
             ])
         ).alias("t"),
         "n",
     ).select(
-        F.col("t.cx").alias("cx"), F.col("t.cy").alias("cy"),
-        F.col("t.self").alias("self"), "n",
+        *[F.col(f"t.{k}").alias(k) for k in names],
+        F.col("t.self").alias("self"),
+        "n",
     )
-    # "occupied" = received a (0,0)-offset contribution — replaces the
-    # join-back against the cell table with a flag in the same groupBy
-    # (one fewer join stage; identical result set).
     neigh = (
-        contrib.groupBy("cx", "cy")
+        contrib.groupBy(*names)
         .agg(
             F.sum("n").alias("wsum"),
             F.count(F.lit(1)).alias("w"),
@@ -714,8 +735,7 @@ def _i12_from_cells(cells: DataFrame) -> DataFrame:
         / (F.col("n_cells") - 1)
     )
     return neigh.crossJoin(F.broadcast(glob)).select(
-        F.col("cx").alias("cell_x"),
-        F.col("cy").alias("cell_y"),
+        *[F.col(k).alias(out) for k, out, _ in keys],
         F.round((F.col("wsum").cast("double") - mean * F.col("w")) / (s * denom_w), 4).alias("gi_z"),
     )
 
@@ -3049,6 +3069,31 @@ def i43_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 _I44_MIN_TRANS = 2
 
 
+def _i44_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each fix on the 10-unit I44 grid: (obj_id, ts, event_id, cx, cy)."""
+    return fixes(spark, sf_dir).select(
+        "obj_id", "ts", "event_id",
+        F.floor(F.col("x") / 10.0).cast("int").alias("cx"),
+        F.floor(F.col("y") / 10.0).cast("int").alias("cy"),
+    )
+
+
+def _i44_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The I44 movement chain: one (cx, cy, nx, ny) row per pair of
+    consecutive fixes of one object that changes cell. Consecutive
+    rides the (ts, event_id) total order, so the chain is
+    deterministic; one window shuffle on obj_id."""
+    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
+    return _i44_cells(spark, sf_dir).select(
+        "cx", "cy",
+        F.lead("cx").over(w).alias("nx"),
+        F.lead("cy").over(w).alias("ny"),
+    ).filter(
+        F.col("nx").isNotNull()
+        & ((F.col("nx") != F.col("cx")) | (F.col("ny") != F.col("cy")))
+    )
+
+
 @register(
     "i44_mobility_markov",
     oracle=(
@@ -3081,30 +3126,14 @@ def i44_mobility_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains), turning I10's OD endpoints into a full transition model.
     Self-transitions (same cell) are collapsed out so the chain
     captures MOVEMENT, and rare transitions below a support floor are
-    pruned to keep the model denoised and the output bounded.
-    Deterministic: consecutive pairs ride a (ts, event_id) total
-    order, counts are exact, and the single probability division is
-    rounded. Scale shape: ONE window shuffle on obj_id (shared order
-    for lead), one (from,to) groupBy, then a from-cell totals join —
+    pruned to keep the model denoised and the output bounded. The
+    moves come from ``_i44_moves``; counts are exact and the single
+    probability division is rounded. Scale shape: the chain's window
+    shuffle, one (from,to) groupBy, then a from-cell totals join —
     cell-pair cardinality is bounded by the grid (≤ cells²), so the
     totals side broadcasts at any corpus scale."""
-    f = fixes(spark, sf_dir)
-    cells = f.select(
-        "obj_id", "ts", "event_id",
-        F.floor(F.col("x") / 10.0).cast("int").alias("cx"),
-        F.floor(F.col("y") / 10.0).cast("int").alias("cy"),
-    )
-    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
-    hops = cells.select(
-        "cx", "cy",
-        F.lead("cx").over(w).alias("nx"),
-        F.lead("cy").over(w).alias("ny"),
-    )
     trans = (
-        hops.filter(
-            F.col("nx").isNotNull()
-            & ((F.col("nx") != F.col("cx")) | (F.col("ny") != F.col("cy")))
-        )
+        _i44_moves(spark, sf_dir)
         .groupBy(
             F.col("cx").alias("from_cx"), F.col("cy").alias("from_cy"),
             F.col("nx").alias("to_cx"), F.col("ny").alias("to_cy"),
@@ -3176,25 +3205,10 @@ def i45_od_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically — no join: each directed count lands in the fwd
     or rev column of its canonical pair and ONE groupBy merges them);
     counts exact, one rounded division, thin pairs pruned by the I44
-    support floor. Scale shape: I44's window + groupBy, then one
-    more bounded (≤ cells²) groupBy."""
-    f = fixes(spark, sf_dir)
-    cells = f.select(
-        "obj_id", "ts", "event_id",
-        F.floor(F.col("x") / 10.0).cast("int").alias("cx"),
-        F.floor(F.col("y") / 10.0).cast("int").alias("cy"),
-    )
-    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
-    hops = cells.select(
-        "cx", "cy",
-        F.lead("cx").over(w).alias("nx"),
-        F.lead("cy").over(w).alias("ny"),
-    )
+    support floor. Scale shape: ``_i44_moves`` + I44's groupBy, then
+    one more bounded (≤ cells²) groupBy."""
     trans = (
-        hops.filter(
-            F.col("nx").isNotNull()
-            & ((F.col("nx") != F.col("cx")) | (F.col("ny") != F.col("cy")))
-        )
+        _i44_moves(spark, sf_dir)
         .groupBy(
             F.col("cx").alias("fx"), F.col("cy").alias("fy"),
             F.col("nx").alias("tx"), F.col("ny").alias("ty"),
@@ -3265,28 +3279,10 @@ def i46_cell_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     and I45's pair asymmetry, completing the OD tier's
     matrix/pair/node triptych. INTEGER-exact counts, no floating
     arithmetic at all; thin cells pruned by the I44 support floor.
-    Scale shape: one window shuffle (shared with I44's plan), two
-    cell-keyed counts off the same movement frame, one FULL OUTER
-    equi-join on the bounded (≤ grid-size) cell key."""
-    f = fixes(spark, sf_dir)
-    cells = f.select(
-        "obj_id", "ts", "event_id",
-        F.floor(F.col("x") / 10.0).cast("int").alias("cx"),
-        F.floor(F.col("y") / 10.0).cast("int").alias("cy"),
-    )
-    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
-    mv = (
-        cells.select(
-            "cx", "cy",
-            F.lead("cx").over(w).alias("nx"),
-            F.lead("cy").over(w).alias("ny"),
-        )
-        .filter(
-            F.col("nx").isNotNull()
-            & ((F.col("nx") != F.col("cx")) | (F.col("ny") != F.col("cy")))
-        )
-        .localCheckpoint()
-    )
+    Scale shape: ``_i44_moves`` checkpointed once, two cell-keyed
+    counts off it, one FULL OUTER equi-join on the bounded (≤
+    grid-size) cell key."""
+    mv = _i44_moves(spark, sf_dir).localCheckpoint()
     dep = mv.groupBy(F.col("cx"), F.col("cy")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_out")
     )
@@ -3344,14 +3340,8 @@ def i47_revisit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fix is always a stop so the denominator is ≥ 1. Scale shape:
     ONE obj window (shared with I44's plan) + one per-object
     count/count-distinct aggregate."""
-    f = fixes(spark, sf_dir)
-    cells = f.select(
-        "obj_id", "ts", "event_id",
-        F.floor(F.col("x") / 10.0).cast("int").alias("cx"),
-        F.floor(F.col("y") / 10.0).cast("int").alias("cy"),
-    )
     w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
-    seq = cells.select(
+    seq = _i44_cells(spark, sf_dir).select(
         "obj_id", "cx", "cy",
         F.lag("cx").over(w).alias("px"),
         F.lag("cy").over(w).alias("py"),
@@ -4025,15 +4015,10 @@ def i55_geodesic_hotspot_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     with geodesic cell topology): 5° lat/lon cells where the
     3×3 neighbor ring wraps modularly at ±180° — a hotspot straddling
     the antimeridian is ONE neighborhood here, where the planar grid
-    silently splits it in two. Same integer-exactness discipline as
-    i12: every count (cell n, neighborhood wsum/w, global moments)
-    stays integral through both shuffles; the z expression is the
-    single double chain, identical op order both engines, rounded
-    once at 4 dp.
+    silently splits it in two.
 
-    Shape: cell counts (one shuffle) → 9-way modular neighbor explode
-    → target-cell groupBy (equi key — never a theta join) → 1-row
-    global-moments broadcast. At 100 TB the 72×36 cell table is
+    Shape: cell counts (one shuffle) → ``_gi_star_z`` with longitude
+    offsets taken mod 72. At 100 TB the 72×36 cell table is
     constant-size: everything after the first aggregation is free."""
     g = geo(spark, sf_dir)
     cells = (
@@ -4047,63 +4032,9 @@ def i55_geodesic_hotspot_z(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("lat") / 5.0).cast("bigint").alias("cy"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # 3 consumers (explode/occ/moments)
+        .localCheckpoint(eager=False)  # 2 consumers (explode/moments)
     )
-    contrib = cells.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (
-                            (F.col("cx") + dx + _I55_NLON) % _I55_NLON
-                        ).alias("cx"),
-                        (F.col("cy") + dy).alias("cy"),
-                        F.lit(dx == 0 and dy == 0).alias("self"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ]
-            )
-        ).alias("t"),
-        "n",
-    ).select(
-        F.col("t.cx").alias("cx"),
-        F.col("t.cy").alias("cy"),
-        F.col("t.self").alias("self"),
-        "n",
-    )
-    neigh = (
-        contrib.groupBy("cx", "cy")
-        .agg(
-            F.sum("n").alias("wsum"),
-            F.count(F.lit(1)).alias("w"),
-            F.max("self").alias("_occ"),
-        )
-        .filter(F.col("_occ"))
-    )
-    glob = cells.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.sum("n").alias("tot"),
-        F.sum(F.col("n") * F.col("n")).alias("tot2"),
-    )
-    mean = F.col("tot").cast("double") / F.col("n_cells")
-    s = F.sqrt(F.col("tot2").cast("double") / F.col("n_cells") - mean * mean)
-    denom_w = F.sqrt(
-        (
-            F.col("n_cells").cast("double") * F.col("w")
-            - F.col("w").cast("double") * F.col("w")
-        )
-        / (F.col("n_cells") - 1)
-    )
-    return neigh.crossJoin(F.broadcast(glob)).select(
-        F.col("cx").alias("cell_x"),
-        F.col("cy").alias("cell_y"),
-        F.round(
-            (F.col("wsum").cast("double") - mean * F.col("w"))
-            / (s * denom_w),
-            4,
-        ).alias("gi_z"),
-    )
+    return _gi_star_z(cells, [("cx", "cell_x", _I55_NLON), ("cy", "cell_y", None)])
 
 
 # ---------------------------------------------------------------------------
@@ -4145,14 +4076,13 @@ def i56_spacetime_hotspot(spark: SparkSession, sf_dir: str) -> DataFrame:
     at midnight ((tb±1) mod 6 — 22:00-02:00 is one neighborhood, the
     boundary a naive hour-bucketed cube splits). A rush-hour cluster
     shows up here while dissolving in I55's all-day aggregate.
-    Integer-exactness discipline throughout (I12's): counts integral
-    through both shuffles, ONE end-rounded double z chain; hour(ts)
-    agrees cross-engine on the UTC fixture (no dayofweek-origin trap).
+    hour(ts) agrees cross-engine on the UTC fixture (no
+    dayofweek-origin trap).
 
-    Shape: cube counts (one shuffle) → 27-way modular neighbor
-    explode → equi-key groupBy → 1-row moments broadcast. The cube
-    table is ≤ 36·18·6 cells regardless of input scale — everything
-    after the first aggregation is constant-cost at 100 TB."""
+    Shape: cube counts (one shuffle) → ``_gi_star_z`` over three axes,
+    longitude mod 36 and time bin mod 6. The cube table is ≤ 36·18·6
+    cells regardless of input scale — everything after the first
+    aggregation is constant-cost at 100 TB."""
     g = geo(spark, sf_dir)
     cells = (
         g.groupBy(
@@ -4164,66 +4094,11 @@ def i56_spacetime_hotspot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.hour("ts") / 4.0).cast("bigint").alias("tb"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # 3 consumers
+        .localCheckpoint(eager=False)  # 2 consumers (explode/moments)
     )
-    contrib = cells.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        ((F.col("cx") + dx + _I56_NLON) % _I56_NLON).alias(
-                            "cx"
-                        ),
-                        (F.col("cy") + dy).alias("cy"),
-                        ((F.col("tb") + dt + _I56_NT) % _I56_NT).alias("tb"),
-                        F.lit(dx == 0 and dy == 0 and dt == 0).alias("self"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                    for dt in (-1, 0, 1)
-                ]
-            )
-        ).alias("t"),
-        "n",
-    ).select(
-        F.col("t.cx").alias("cx"),
-        F.col("t.cy").alias("cy"),
-        F.col("t.tb").alias("tb"),
-        F.col("t.self").alias("self"),
-        "n",
-    )
-    neigh = (
-        contrib.groupBy("cx", "cy", "tb")
-        .agg(
-            F.sum("n").alias("wsum"),
-            F.count(F.lit(1)).alias("w"),
-            F.max("self").alias("_occ"),
-        )
-        .filter(F.col("_occ"))
-    )
-    glob = cells.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.sum("n").alias("tot"),
-        F.sum(F.col("n") * F.col("n")).alias("tot2"),
-    )
-    mean = F.col("tot").cast("double") / F.col("n_cells")
-    s = F.sqrt(F.col("tot2").cast("double") / F.col("n_cells") - mean * mean)
-    denom_w = F.sqrt(
-        (
-            F.col("n_cells").cast("double") * F.col("w")
-            - F.col("w").cast("double") * F.col("w")
-        )
-        / (F.col("n_cells") - 1)
-    )
-    return neigh.crossJoin(F.broadcast(glob)).select(
-        F.col("cx").alias("cell_x"),
-        F.col("cy").alias("cell_y"),
-        F.col("tb").alias("tbin"),
-        F.round(
-            (F.col("wsum").cast("double") - mean * F.col("w"))
-            / (s * denom_w),
-            4,
-        ).alias("gi_z"),
+    return _gi_star_z(
+        cells,
+        [("cx", "cell_x", _I56_NLON), ("cy", "cell_y", None), ("tb", "tbin", _I56_NT)],
     )
 
 

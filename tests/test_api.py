@@ -491,6 +491,22 @@ def test_haversine_join_antimeridian(spark):
     assert abs(pairs[(1, 2)] - 22.24) < 0.1
 
 
+def test_haversine_join_large_eps_caps_lon_cells(spark):
+    """At eps_km = 5000 the eps/40 rule alone gives 4 longitude cells
+    of 90°, which puts (60, -0.1) and (60, 90.0) two cells apart
+    although they are 4608.7 km apart: neither half-ring probe reaches
+    the other. The Δλ cap (3 cells of 120° here) keeps them adjacent,
+    so the pair comes back exactly once."""
+    import glonassdatamining_spark.api as api
+
+    df = spark.createDataFrame(
+        [(1, 60.0, -0.1), (2, 60.0, 90.0)], "pid LONG, lat DOUBLE, lon DOUBLE"
+    )
+    rows = api.haversine_distance_join(df, "pid", "lat", "lon", 5000.0).collect()
+    assert [(r.a_id, r.b_id) for r in rows] == [(1, 2)]
+    assert abs(rows[0].dist_km - 4608.7) < 0.1
+
+
 def test_haversine_knn_join_antimeridian_and_ranks(spark):
     """The kNN grid must find neighbors across the ±180° seam (modular
     longitude cells) and rank by true great-circle distance with

@@ -116,6 +116,21 @@ def test_bfs_hops_hand_graph(spark):
     assert got == {1: 0, 2: 1, 3: 2, 5: 2, 4: 3}
 
 
+def test_bfs_hops_max_iter_truncates(spark):
+    """max_iter bounds the number of expansion rounds: on the same hand
+    graph, two rounds reach depth 2 and node 4 (depth 3) stays out.
+    n4's oracle mirrors this cut with ``WHERE r.d < 20``."""
+    from glonassdatamining_spark.api import bfs_hops
+
+    e = [(1, 2), (2, 3), (3, 4), (2, 5), (8, 9)]
+    edges = spark.createDataFrame(e, "src bigint, dst bigint")
+    got = {
+        r.node: r.hops
+        for r in bfs_hops(edges, "src", "dst", max_iter=2).collect()
+    }
+    assert got == {1: 0, 2: 1, 3: 2, 5: 2}
+
+
 def test_bfs_hops_empty(spark):
     from glonassdatamining_spark.api import bfs_hops
 
