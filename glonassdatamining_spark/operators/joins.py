@@ -349,10 +349,11 @@ _EPS = 1.0
 def c11_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ε-distance self-join (STARK withinDistance join, numeric proxy
     dims), via the public grid-bucket kernel ``api.grid_distance_join``:
-    each point joins only its 3×3 neighbor cells, then the exact
-    distance residual — candidate pairs are O(local density), never
-    O(n²). The oracle is the brute-force cross join, proving
-    equivalence."""
+    each point probes only its own cell and its 4 forward neighbour
+    cells (the half ring of ``api._cell_probe``, which finds every
+    unordered pair once), then the exact distance residual —
+    candidate pairs are O(local density), never O(n²). The oracle is
+    the brute-force cross join, proving equivalence."""
     from glonassdatamining_spark.api import grid_distance_join
 
     s = load(spark, sf_dir, "supplier").select(

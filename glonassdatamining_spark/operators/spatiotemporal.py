@@ -30,6 +30,7 @@ from glonassdatamining_spark.functions.codecs import (
     pack_wkb_polygon,
     wkb_polygon_even_odd_area,
 )
+from glonassdatamining_spark.api import _FULL_RING, _cell_probe, _ring_cells
 from glonassdatamining_spark.registry import register
 from glonassdatamining_spark.session import memo
 from glonassdatamining_spark.sources import derived, hot_tables, load
@@ -356,6 +357,23 @@ def i7_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRIP_JUMP = 5.0
 
 
+def _trips(f: DataFrame) -> DataFrame:
+    """Fixes with ``trip_id`` per object: a spatial jump > _TRIP_JUMP
+    between consecutive fixes starts a new trip (i8, i10)."""
+    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
+    hops = f.select(
+        "obj_id", "ts", "event_id", "x", "y",
+        F.lag("x").over(w).alias("px"), F.lag("y").over(w).alias("py"),
+    )
+    jump = _dist(F.col("x"), F.col("y"), F.col("px"), F.col("py"))
+    return hops.withColumn(
+        "new_trip", F.when(F.col("px").isNull() | (jump > _TRIP_JUMP), 1).otherwise(0)
+    ).withColumn(
+        "trip_id",
+        F.sum("new_trip").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    )
+
+
 @register(
     "i8_trip_segmentation",
     oracle=(
@@ -379,21 +397,7 @@ def i8_trip_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stop/trip segmentation: a spatial jump > τ between consecutive
     fixes starts a new trip (E8's sessionization pattern on distance
     instead of time — the STARK stop-detection shape)."""
-    f = fixes(spark, sf_dir)
-    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
-    hops = f.select(
-        "obj_id", "ts", "event_id", "x", "y",
-        F.lag("x").over(w).alias("px"), F.lag("y").over(w).alias("py"),
-    )
-    jump = _dist(F.col("x"), F.col("y"), F.col("px"), F.col("py"))
-    flagged = hops.withColumn(
-        "new_trip", F.when(F.col("px").isNull() | (jump > _TRIP_JUMP), 1).otherwise(0)
-    )
-    trips = flagged.withColumn(
-        "trip_id",
-        F.sum("new_trip").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    return trips.groupBy("obj_id", "trip_id").agg(
+    return _trips(fixes(spark, sf_dir)).groupBy("obj_id", "trip_id").agg(
         F.count(F.lit(1)).alias("n_fixes"),
         F.min("ts").alias("trip_start"),
         F.max("ts").alias("trip_end"),
@@ -467,20 +471,7 @@ def i10_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 20-unit cells, counted per (O, D) pair. Endpoints are keyed by
     min/max of the unique event_id — deterministic on both engines
     (and temporally faithful when ids follow arrival order)."""
-    f = fixes(spark, sf_dir)
-    w = Window.partitionBy("obj_id").orderBy("ts", "event_id")
-    hops = f.select(
-        "obj_id", "ts", "event_id", "x", "y",
-        F.lag("x").over(w).alias("px"), F.lag("y").over(w).alias("py"),
-    )
-    jump = _dist(F.col("x"), F.col("y"), F.col("px"), F.col("py"))
-    trips = hops.withColumn(
-        "new_trip", F.when(F.col("px").isNull() | (jump > _TRIP_JUMP), 1).otherwise(0)
-    ).withColumn(
-        "trip_id",
-        F.sum("new_trip").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    od = trips.groupBy("obj_id", "trip_id").agg(
+    od = _trips(fixes(spark, sf_dir)).groupBy("obj_id", "trip_id").agg(
         F.floor(F.expr("min_by(x, event_id)") / 20.0).cast("int").alias("o_cell_x"),
         F.floor(F.expr("min_by(y, event_id)") / 20.0).cast("int").alias("o_cell_y"),
         F.floor(F.expr("max_by(x, event_id)") / 20.0).cast("int").alias("d_cell_x"),
@@ -950,29 +941,13 @@ def i17_comovement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_cy", F.floor(F.col("by1") / cell))
         .localCheckpoint()
     )
-    # HALF-neighborhood probe (plane-sweep trick): instead of all 9
-    # neighbor cells, each point probes only its own cell plus the 4
-    # lexicographically-FORWARD neighbors — an unordered cross-cell
-    # pair is then discovered exactly once (from the smaller home
-    # cell), same-cell pairs dedup on oa < ob, and the join evaluates
-    # ~45% fewer candidates than the full 3×3. No distinct needed:
-    # cross-cell matches are unique by construction; ids canonicalize
-    # with least/greatest afterwards.
-    fwd = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in [(0, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]
-        ]
-    )
-    probe = (
-        home.withColumn("_o", F.explode(fwd))
-        .select(
-            F.col("obj_id").alias("oa"), "bkt",
-            F.col("bx").alias("ax"), F.col("by1").alias("ay"),
-            (F.col("_cx") + F.col("_o.dx")).alias("_cx"),
-            (F.col("_cy") + F.col("_o.dy")).alias("_cy"),
-            ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("_self"),
-        )
+    # Half-ring probe (``api._cell_probe``): each unordered pair is
+    # found once, so no distinct is needed; ids canonicalize with
+    # least/greatest afterwards.
+    probe = _cell_probe(home, "_cx", "_cy", half=True).select(
+        F.col("obj_id").alias("oa"), "bkt",
+        F.col("bx").alias("ax"), F.col("by1").alias("ay"),
+        "_cx", "_cy", "_self",
     )
     build = home.select(
         F.col("obj_id").alias("ob"), "bkt",
@@ -1917,8 +1892,8 @@ def i30_polygon_intersect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     to amortize the extra ArrowEvalPython barrier).
 
     Scale shape: centers bucket into cells > max diameter; the
-    half-neighborhood probe (own + 4 forward cells) surfaces each
-    unordered candidate pair exactly once; the O(V·W) exact predicate
+    half-ring probe (``api._cell_probe``) surfaces each unordered
+    candidate pair exactly once; the O(V·W) exact predicate
     runs only on candidates. Same plan at 10⁹ polygons."""
     from glonassdatamining_spark.functions.geometry import st_intersects_polygon
 
@@ -1943,18 +1918,9 @@ def i30_polygon_intersect_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("cx") / _DIAMOND_CELL).cast("bigint").alias("gx"),
         F.floor(F.col("cy") / _DIAMOND_CELL).cast("bigint").alias("gy"),
     ).localCheckpoint()
-    fwd = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in [(0, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]
-        ]
-    )
-    probe = geoms.withColumn("_o", F.explode(fwd)).select(
-        F.col("obj_id").alias("_a"),
-        F.col("ring").alias("_ring_a"),
-        (F.col("gx") + F.col("_o.dx")).alias("gx"),
-        (F.col("gy") + F.col("_o.dy")).alias("gy"),
-        ((F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)).alias("_self"),
+    probe = _cell_probe(geoms, "gx", "gy", half=True).select(
+        F.col("obj_id").alias("_a"), F.col("ring").alias("_ring_a"),
+        "gx", "gy", "_self",
     )
     build = geoms.select(
         F.col("obj_id").alias("_b"), F.col("ring").alias("_ring_b"), "gx", "gy"
@@ -3411,18 +3377,8 @@ def i48_bounded_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     eps = _I48_EPS
     probe = f.select(
         F.col("event_id").alias("a_id"), F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    (F.floor(F.col("x") / eps) + dx).alias("cx"),
-                    (F.floor(F.col("y") / eps) + dy).alias("cy"),
-                )
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ])
-        ).alias("c"),
-    ).select("a_id", "ax", "ay", F.col("c.cx").alias("cx"), F.col("c.cy").alias("cy"))
+        F.col("y").alias("ay"), _ring_cells(F.col("x"), F.col("y"), eps),
+    ).select("a_id", "ax", "ay", "c.cx", "c.cy")
     build = f.select(
         F.col("event_id").alias("b_id"), F.col("x").alias("bx"),
         F.col("y").alias("by"),
@@ -4334,6 +4290,19 @@ _I59_PENT = [
 _I59_CELL = 32.0
 
 
+def _bbox_cells(
+    df: DataFrame, minx: Column, maxx: Column, miny: Column, maxy: Column, cell: float
+) -> DataFrame:
+    """``df`` exploded to one row per grid cell (cellx, celly) of side
+    ``cell`` that the row's bbox [minx, maxx] × [miny, maxy] touches —
+    the cover side of a bbox-to-cell equi-join (i59, i64, i66)."""
+    return df.withColumn(
+        "cellx", F.explode(F.sequence(F.floor(minx / cell), F.floor(maxx / cell)))
+    ).withColumn(
+        "celly", F.explode(F.sequence(F.floor(miny / cell), F.floor(maxy / cell)))
+    )
+
+
 def _i59_oracle() -> str:
     # Every CTE is MATERIALIZED: DuckDB 1.0 inlines plain CTEs, and
     # each clip step references its input ring ~8 times — inlining
@@ -4490,32 +4459,17 @@ def i59_polygon_overlay_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s_suppkey") % 5 + 8).cast("double").alias("rd"),
     )
 
-    def with_cells(df, minx, maxx, miny, maxy):
-        return df.withColumn(
-            "cellx",
-            F.explode(
-                F.sequence(
-                    F.floor(minx / _I59_CELL), F.floor(maxx / _I59_CELL)
-                )
-            ),
-        ).withColumn(
-            "celly",
-            F.explode(
-                F.sequence(
-                    F.floor(miny / _I59_CELL), F.floor(maxy / _I59_CELL)
-                )
-            ),
-        )
-
-    zc = with_cells(
+    zc = _bbox_cells(
         zones,
         F.col("zx") - F.col("w"), F.col("zx") + F.col("w"),
         F.col("zy") - F.col("h"), F.col("zy") + F.col("h"),
+        _I59_CELL,
     )
-    dc = with_cells(
+    dc = _bbox_cells(
         districts,
         F.col("dx") - F.col("rd"), F.col("dx") + F.col("rd"),
         F.col("dy") - F.col("rd"), F.col("dy") + F.col("rd"),
+        _I59_CELL,
     )
     cand = (
         zc.join(F.broadcast(dc), ["cellx", "celly"])
@@ -5760,22 +5714,11 @@ def _i64_scored(
         (y1 + ((F.col("s_suppkey") * 3 % 11) - 5)).alias("y2"),
     )
     d = F.lit(_I64_MAX_DIST)
-    segc = segs.withColumn(
-        "cellx",
-        F.explode(
-            F.sequence(
-                F.floor((F.least("x1", "x2") - d) / _I64_CELL),
-                F.floor((F.greatest("x1", "x2") + d) / _I64_CELL),
-            )
-        ),
-    ).withColumn(
-        "celly",
-        F.explode(
-            F.sequence(
-                F.floor((F.least("y1", "y2") - d) / _I64_CELL),
-                F.floor((F.greatest("y1", "y2") + d) / _I64_CELL),
-            )
-        ),
+    segc = _bbox_cells(
+        segs,
+        F.least("x1", "x2") - d, F.greatest("x1", "x2") + d,
+        F.least("y1", "y2") - d, F.greatest("y1", "y2") + d,
+        _I64_CELL,
     )
     fix_cols = ["obj_id", "event_id"] + (["ts"] if with_ts else [])
     fc = f.select(
@@ -7104,25 +7047,24 @@ def _i48b_impl(
         # attribute names (x, y) only, so the Column tree is memoized
         # per cell_mult (round-11, the session.memo discipline)
         copies = []
-        for dcx in (-1, 0, 1):
-            for dcy in (-1, 0, 1):
-                cx = F.floor(F.col("x") / H) + dcx
-                cy = F.floor(F.col("y") / H) + dcy
-                # distance from the point to cell (cx,cy)'s rectangle
-                ddx = F.greatest(
-                    cx * H - F.col("x"), F.col("x") - (cx + 1) * H, F.lit(0.0)
+        for dcx, dcy in _FULL_RING:
+            cx = F.floor(F.col("x") / H) + dcx
+            cy = F.floor(F.col("y") / H) + dcy
+            # distance from the point to cell (cx,cy)'s rectangle
+            ddx = F.greatest(
+                cx * H - F.col("x"), F.col("x") - (cx + 1) * H, F.lit(0.0)
+            )
+            ddy = F.greatest(
+                cy * H - F.col("y"), F.col("y") - (cy + 1) * H, F.lit(0.0)
+            )
+            copies.append(
+                F.struct(
+                    cx.cast("bigint").alias("cx"),
+                    cy.cast("bigint").alias("cy"),
+                    (ddx * ddx + ddy * ddy <= eps * eps).alias("keep"),
+                    F.lit(dcx == 0 and dcy == 0).alias("is_home"),
                 )
-                ddy = F.greatest(
-                    cy * H - F.col("y"), F.col("y") - (cy + 1) * H, F.lit(0.0)
-                )
-                copies.append(
-                    F.struct(
-                        cx.cast("bigint").alias("cx"),
-                        cy.cast("bigint").alias("cy"),
-                        (ddx * ddx + ddy * ddy <= eps * eps).alias("keep"),
-                        F.lit(dcx == 0 and dcy == 0).alias("is_home"),
-                    )
-                )
+            )
         return F.explode(F.array(*copies)).alias("c")
 
     parts = (
@@ -7513,21 +7455,8 @@ def unbounded_knn(f: DataFrame, k: int, eps: float) -> DataFrame:
         if frontier.isEmpty():
             break
         probe = frontier.select(
-            "a_id", "ax", "ay",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        (F.floor(F.col("ax") / cell) + dx).alias("cx"),
-                        (F.floor(F.col("ay") / cell) + dy).alias("cy"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ])
-            ).alias("c"),
-        ).select(
-            "a_id", "ax", "ay",
-            F.col("c.cx").alias("cx"), F.col("c.cy").alias("cy"),
-        )
+            "a_id", "ax", "ay", _ring_cells(F.col("ax"), F.col("ay"), cell)
+        ).select("a_id", "ax", "ay", "c.cx", "c.cy")
         build = build_all.select(
             "b_id", "bx", "by",
             F.floor(F.col("bx") / cell).alias("cx"),

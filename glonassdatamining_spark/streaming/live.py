@@ -272,6 +272,8 @@ def m8_streaming(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     if split_files > 1:
+        import time
+
         import pyarrow.parquet as pq
 
         sfname = os.path.basename(sf_dir.rstrip("/"))
@@ -281,11 +283,14 @@ def m8_streaming(
         tbl = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
         n = tbl.num_rows
         bounds = [round(i * n / split_files) for i in range(split_files + 1)]
+        # FileStreamSource takes files oldest first by millisecond
+        # mtime, and slices written within one millisecond would come
+        # in directory order: stamp them so they arrive in ts order.
+        now = time.time()
         for i in range(split_files):
-            pq.write_table(
-                tbl.slice(bounds[i], bounds[i + 1] - bounds[i]),
-                f"{src}/{i:03d}.parquet",
-            )
+            path = f"{src}/{i:03d}.parquet"
+            pq.write_table(tbl.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
+            os.utime(path, (now - 100 + i, now - 100 + i))
         raw = (
             spark.readStream.schema(_EVENTS_STREAM_SCHEMA)
             .option("maxFilesPerTrigger", 1)

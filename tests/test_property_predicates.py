@@ -511,18 +511,82 @@ def test_grid_distance_join_matches_brute_force(spark, seed):
                 (pid, cx + rng.uniform(-eps, eps), cy + rng.uniform(-eps, eps))
             ); pid += 1
     df = spark.createDataFrame(pts, "pid bigint, x double, y double")
-    got = {
+    # multisets (sorted lists), so a pair found twice fails
+    got = sorted(
         (r.a_id, r.b_id)
         for r in grid_distance_join(df, "pid", "x", "y", eps).collect()
-    }
-    want = {
+    )
+    want = sorted(
         (a[0], b[0])
         for a, b in itertools.combinations(pts, 2)
         if math.dist(a[1:], b[1:]) <= eps
-    }
-    assert got == want, (
-        f"seed {seed} eps {eps}: missing {want - got}, extra {got - want}"
     )
+    assert got == want, _multiset_diff(f"seed {seed} eps {eps}", got, want)
+
+
+def _multiset_diff(tag: str, got: list, want: list) -> str:
+    from collections import Counter
+
+    g, w = Counter(got), Counter(want)
+    return f"{tag}: missing {w - g}, extra {g - w}"
+
+
+@pytest.mark.parametrize("eps_km", [5000.0, 50.0])
+@pytest.mark.parametrize("seed", range(2))
+def test_haversine_distance_join_matches_brute_force(spark, seed, eps_km):
+    """Property: the half-ring probe under MODULAR longitude cells finds
+    exactly the brute-force great-circle ε-pairs, each once, on random
+    points that straddle the ±180° seam — at an eps that leaves only 3
+    longitude cells (the smallest count where the forward offsets stay
+    antisymmetric) and at one that gives hundreds of cells."""
+    import itertools
+    import math
+    import random
+
+    from glonassdatamining_spark.api import _latlon_cells, haversine_distance_join
+
+    rng = random.Random(4242 + seed)
+    wide = eps_km > 1000.0
+    spread = 8.0 if wide else 3.0
+
+    def seam_lon():
+        lon = 180.0 + rng.uniform(-spread, spread)
+        return lon - 360.0 if lon >= 180.0 else lon
+
+    pts = []
+    for pid in range(140):
+        if wide and pid % 2:
+            lat, lon = rng.uniform(-65.0, 65.0), rng.uniform(-180.0, 180.0)
+        elif pid % 5 == 0:
+            # tight blobs ON the seam
+            lat = rng.choice([-1.0, 1.0]) + rng.uniform(-0.2, 0.2)
+            lon = seam_lon() if wide else rng.choice([179.8, -179.8]) + rng.uniform(-0.2, 0.2)
+        else:
+            lat = rng.uniform(-65.0, 65.0) if wide else rng.uniform(-spread, spread)
+            lon = seam_lon()
+        pts.append((pid, lat, lon))
+    df = spark.createDataFrame(pts, "pid bigint, lat double, lon double")
+    n_lon_cells = _latlon_cells(df, "pid", "lat", "lon", eps_km, 60.0)[1]
+    assert n_lon_cells == 3 if wide else n_lon_cells > 100
+
+    def hav(a, b):
+        # api.haversine_km's op sequence
+        half_rad, rad = math.pi / 360.0, math.pi / 180.0
+        sdlat = math.sin((b[1] - a[1]) * half_rad)
+        sdlon = math.sin((b[2] - a[2]) * half_rad)
+        h = sdlat * sdlat + math.cos(a[1] * rad) * math.cos(b[1] * rad) * sdlon * sdlon
+        return math.asin(math.sqrt(h)) * (2.0 * 6371.0088)
+
+    kept = [p for p in pts if abs(p[1]) <= 60.0]
+    want = sorted(
+        (a[0], b[0]) for a, b in itertools.combinations(kept, 2) if hav(a, b) <= eps_km
+    )
+    got = sorted(
+        (r.a_id, r.b_id)
+        for r in haversine_distance_join(df, "pid", "lat", "lon", eps_km).collect()
+    )
+    assert len(want) > 20
+    assert got == want, _multiset_diff(f"seed {seed} eps {eps_km}", got, want)
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])

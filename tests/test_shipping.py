@@ -9,8 +9,9 @@ as long as their application: no module keeps its own cache dict, and
 only ``session.py`` and ``sources`` read the environment.
 Each operator has one code path: no function takes an ``engine`` or
 ``refine`` switch (reference twins live in the tests that compare
-against them), and scratch files live under the one
-``sources.scans.SCRATCH_ROOT``.
+against them), scratch files live under the one
+``sources.scans.SCRATCH_ROOT``, and grid neighbour offsets are
+written once, as the two ring constants of ``api._cell_probe``.
 """
 
 from __future__ import annotations
@@ -180,6 +181,61 @@ def _module_dicts(tree: ast.AST) -> list[tuple[int, str]]:
     return found
 
 
+def _literal(node: ast.AST):
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return None
+
+
+def _unit_axis(node: ast.AST) -> bool:
+    """The offset axis ``(-1, 0, 1)`` (tuple or list) or ``range(-1, 2)``."""
+    if isinstance(node, (ast.Tuple, ast.List)):
+        return _literal(node) in ((-1, 0, 1), [-1, 0, 1])
+    return (
+        isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+        and node.func.id == "range"
+        and [_literal(a) for a in node.args] == [-1, 2]
+    )
+
+
+def _offset_lists(tree: ast.AST) -> list[tuple[int, str | None]]:
+    """Literal grid neighbour-offset lists: a list or tuple of three or
+    more (dx, dy) pairs with entries in {-1, 0, 1}, or a comprehension
+    or loop nest over the axis ``(-1, 0, 1)`` (one finding per nest).
+    Each finding carries the module-level name it is assigned to, or
+    None."""
+    owner = {}
+    for stmt in tree.body:
+        if isinstance(stmt, ast.Assign) and len(stmt.targets) == 1 and isinstance(
+            stmt.targets[0], ast.Name
+        ):
+            owner.update((id(n), stmt.targets[0].id) for n in ast.walk(stmt.value))
+    found = []
+
+    def visit(node: ast.AST, in_nest: bool) -> None:
+        axis_loop = isinstance(node, ast.For) and _unit_axis(node.iter)
+        if isinstance(node, (ast.Tuple, ast.List)) and len(node.elts) >= 3:
+            v = _literal(node)
+            hit = v is not None and all(
+                isinstance(p, tuple) and len(p) == 2
+                and all(type(c) is int and -1 <= c <= 1 for c in p)
+                for p in v
+            )
+        elif isinstance(node, (ast.ListComp, ast.SetComp, ast.GeneratorExp, ast.DictComp)):
+            axis_loop = any(_unit_axis(g.iter) for g in node.generators)
+            hit = axis_loop and not in_nest
+        else:
+            hit = axis_loop and not in_nest
+        if hit:
+            found.append((node.lineno, owner.get(id(node))))
+        for kid in ast.iter_child_nodes(node):
+            visit(kid, in_nest or axis_loop)
+
+    visit(tree, False)
+    return found
+
+
 # Module dicts that are not caches of frames or handles: the query
 # registry, the memo itself, and k55's learned model, which k55
 # overwrites on every call (the memo never overwrites an entry).
@@ -187,6 +243,11 @@ _ALLOWED_DICTS = {
     (pathlib.Path("glonassdatamining_spark/registry.py"), "_REGISTRY"),
     (pathlib.Path("glonassdatamining_spark/session.py"), "_memo"),
     (pathlib.Path("glonassdatamining_spark/operators/llm_ops.py"), "_K55_CACHE"),
+}
+# The one definition of each grid offset set (``api._cell_probe``).
+_RING_CONSTANTS = {
+    (pathlib.Path("glonassdatamining_spark/api.py"), "_HALF_RING"),
+    (pathlib.Path("glonassdatamining_spark/api.py"), "_FULL_RING"),
 }
 _ENV_READERS = {
     pathlib.Path("glonassdatamining_spark/session.py"),
@@ -226,6 +287,13 @@ def test_guard_detects_each_violation():
         "_CACHE: dict = {}\n"
         "def e():\n"
         "    return os.getenv('X')\n"
+        "_RING = [(0, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]\n"
+        "def o():\n"
+        "    a = [(dx, dy) for dx in (-1, 0, 1) for dy in range(-1, 2)]\n"
+        "    for dx in [-1, 0, 1]:\n"
+        "        for dy in (-1, 0, 1):\n"
+        "            a.append((dx, dy))\n"
+        "    return a, [(0, 0), (1, 1)], product((-1, 0, 1), repeat=2)\n"
     )
     assert _sys_path_mutations(bad) == [4, 5, 6]
     assert sorted(_closure_factories(bad)) == [
@@ -236,6 +304,7 @@ def test_guard_detects_each_violation():
     assert _scratch_literals(bad) == [25]
     assert _module_dicts(bad) == [(28, "_CACHE")]
     assert _env_reads(bad) == [30]
+    assert _offset_lists(bad) == [(31, "_RING"), (33, None), (34, None)]
 
 
 def test_package_has_one_shipping_rule_and_one_memo():
@@ -244,8 +313,9 @@ def test_package_has_one_shipping_rule_and_one_memo():
     kernel, no ``functools`` cache beside ``session.memo``, no
     ``engine``/``refine`` parameter, the ``.tmpdata`` literal in
     ``sources/scans.py`` only, environment reads in ``session.py`` and
-    ``sources/__init__.py`` only, and no module-level cache dict
-    outside ``_ALLOWED_DICTS``."""
+    ``sources/__init__.py`` only, no module-level cache dict outside
+    ``_ALLOWED_DICTS``, and no literal neighbour-offset list outside
+    ``_RING_CONSTANTS``."""
     mods = sorted(PKG.rglob("*.py"))
     assert len(mods) > 20
     problems = []
@@ -273,6 +343,11 @@ def test_package_has_one_shipping_rule_and_one_memo():
             f"{rel}:{ln}: module dict {name} beside session.memo"
             for ln, name in _module_dicts(tree)
             if (rel, name) not in _ALLOWED_DICTS
+        ]
+        problems += [
+            f"{rel}:{ln}: literal neighbour-offset list beside api._cell_probe"
+            for ln, name in _offset_lists(tree)
+            if (rel, name) not in _RING_CONSTANTS
         ]
     assert problems == []
 

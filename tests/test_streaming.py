@@ -480,16 +480,29 @@ def test_m8_stream_equals_batch_up_to_watermark(spark):
     assert len(got) == len(keyset(got))
 
 
-def test_m8_state_crosses_microbatch_boundaries(spark):
+def test_m8_state_crosses_microbatch_boundaries(spark, monkeypatch):
     """Three time-ordered micro-batches (maxFilesPerTrigger=1): open
     sessions at each file boundary must be stitched by the state
     carried in the store — n, bounds, AND the decimal-string total
     must come out bit-identical to the single-shot batch fold. Also
     exercises the between-batch timeout path (sessions whose user has
     no rows in a later batch flush when the advancing watermark
-    passes their end)."""
+    passes their end). The staged slices are written with one shared
+    mtime, as fast writes often get, so the batch order must not rest
+    on when they were written."""
+    import os
+
+    import pyarrow.parquet as pq
+
     from glonassdatamining_spark.sources import load
 
+    write_table = pq.write_table
+
+    def write_same_mtime(table, path, *args, **kwargs):
+        write_table(table, path, *args, **kwargs)
+        os.utime(path, (1.7e9, 1.7e9))
+
+    monkeypatch.setattr(pq, "write_table", write_same_mtime)
     got = live.m8_streaming(spark, SF_DIR, split_files=3).toPandas()
     twin = _twin(spark, "m8_stateful_sessions")
     wm = load(spark, SF_DIR, "events").agg({"ts": "max"}).collect()[0][0]
